@@ -1,6 +1,6 @@
 PY ?= python
 
-.PHONY: test oracle bench scaling plans dist golden fixtures clean gates
+.PHONY: test oracle mirror mirror-graph bench scaling plans dist golden fixtures clean gates
 
 # the three composed release gates (privacy, ontology QA, publish) at sf0.01
 gates:
@@ -21,6 +21,12 @@ mirror:
 	PYTHONPATH=. $(PY) tools/oracle_check.py --sf-dir /root/testdata/sf0.01 --chunk 1/3
 	PYTHONPATH=. $(PY) tools/oracle_check.py --sf-dir /root/testdata/sf0.01 --chunk 2/3
 	PYTHONPATH=. $(PY) tools/oracle_check.py --sf-dir /root/testdata/sf0.01 --chunk 3/3
+
+# DuckDB mirror of the registry entries whose INDEX.md row names
+# operators/graphalgo.py (the graph-loop operators), read from INDEX.md
+mirror-graph:
+	PYTHONPATH=. $(PY) tools/oracle_check.py --only $$(awk -F'|' \
+	  '$$5 ~ /operators\/graphalgo\.py/ {gsub(/ /, "", $$3); print $$3}' INDEX.md)
 
 bench:
 	$(PY) bench.py

@@ -15,11 +15,11 @@ converges in O(log² n) rounds on any graph. Each half-round is one shuffle
 driver-side graph state, edge-list memory bounded by the input size
 throughout (large-star never grows the edge multiset beyond 2|E|).
 
-Lineage is truncated every round with ``localCheckpoint`` (a real cluster
-job would use ``checkpoint`` to HDFS — same call shape); without it the
-iterated plan re-executes from the scan each round and the DAG depth grows
-unboundedly. Convergence is detected by an order-insensitive edge-set
-signature (count + sum of xxhash64), one tiny aggregate per round.
+The rounds run through ``fixpoint.iterate``, which materializes the edge
+set every round; without that the iterated plan re-executes from the scan
+each round and the DAG depth grows unboundedly. Convergence is detected by
+an order-insensitive edge-set signature (count + sum of xxhash64), one
+tiny aggregate per round.
 """
 
 from __future__ import annotations
@@ -27,11 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bran_spark.operators.fixpoint import iterate, materialize
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every neighbor larger than u to min(Γ(u) ∪ {u}).
 
-    No dedup here (r06): the output is a bounded multiset (≤ one row per
+    No dedup here: the output is a bounded multiset (≤ one row per
     symmetric-edge row, so ≤ 2|E|), the following small-star's window
     min is multiset-insensitive, and small-star's closing DISTINCT
     restores the set — dropping the intermediate distinct removes one
@@ -80,35 +82,31 @@ def connected_components(
     order-insensitive signature of the small-star output; fixed point of
     small-star = a forest of depth-1 stars rooted at component minima.
     """
-    edges = (
+    edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     if not edges.head(1):
         return edges.select(
             F.col("u").alias("node"), F.col("v").alias("component")
         )
 
-    def _sig(e: DataFrame) -> tuple:
+    sigs = [None]  # edge-set signature after each round
+
+    def stable(e: DataFrame) -> bool:
         row = e.agg(
             F.count("*").alias("n"),
             # decimal(38,0) sum: long-sum of 64-bit hashes overflows ANSI mode
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
         ).head()
-        return (row["n"], row["h"])
+        sigs.append((row["n"], row["h"]))
+        return sigs[-1] == sigs[-2]
 
-    prev = None
-    converged = False
-    for _ in range(max_rounds):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        cur = _sig(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
+    edges = iterate(
+        edges, lambda e, _r: _small_star(_large_star(e)), max_rounds, until=stable
+    )
+    if len(sigs) < 2 or sigs[-1] != sigs[-2]:
         # interpreting a non-converged edge set as a star forest assigns
         # wrong component ids — fail loudly instead (O(log^2 n) rounds is
         # the bound; 25 covers any realistic n, so this firing means the

@@ -14,9 +14,7 @@ classic shuffle hazards):
   oracle twin hash-exact (float PageRank would drift with reduction order).
   Production would flip ``scale`` to floats for speed; the plan shape is the
   same. Each iteration is ONE shuffle (groupBy dst); degrees ride along in
-  the rank table so no per-iteration dimension join appears. Lineage is
-  truncated per-iteration with ``localCheckpoint`` (``checkpoint`` to HDFS
-  on a real cluster), exactly like operators/components.py.
+  the rank table so no per-iteration dimension join appears.
 
 - **Triangle counting** uses the degree-ordered orientation (each edge
   directed from its lower-(degree, id) endpoint), which bounds the wedge
@@ -32,12 +30,22 @@ classic shuffle hazards):
 - **BFS** expands only the *frontier* discovered last round (not the whole
   visited set), one shuffle per hop, bounded hops — distances are small
   ints, exactly reproducible.
+
+Every iterative operator runs its rounds through ``fixpoint.iterate`` and
+every materialization goes through ``fixpoint.materialize`` (see that
+module): fixed-round loops compose lazily until their plan passes a size
+bound, loops with a convergence test materialize each round. Inputs that
+a loop re-reads every round are materialized once on entry.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from bran_spark.operators.fixpoint import iterate, materialize
 
 PR_SCALE = 10**12      # fixed-point rank unit (1.0 == 10^12)
 PR_DAMP_NUM = 85       # damping factor 0.85 as a ratio — integer math only
@@ -54,9 +62,60 @@ def symmetric_edges(pairs: DataFrame, src: str = "subj", dst: str = "obj") -> Da
     )
 
 
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _converge(state, step, rounds: int, until, what: str):
+    """``iterate`` for a loop whose result is only valid at its fixed
+    point: raises instead of returning a partial result when ``until``
+    never held within ``rounds``."""
+    held = [False]
+
+    def test(s) -> bool:
+        held[0] = until(s)
+        return held[0]
+
+    state = iterate(state, step, rounds, until=test)
+    if not held[0]:
+        raise RuntimeError(
+            f"{what} did not converge in {rounds} rounds; raise the round limit"
+        )
+    return state
+
+
+def _search(first: DataFrame, expand, rounds: int) -> DataFrame:
+    """Level-synchronous search: round r runs ``expand(frontier, seen, r)``
+    — the rows first reached at round r, given last round's frontier and
+    everything seen so far — and the search stops early once a round
+    reaches nothing. Returns every row reached, ``first`` included.
+
+    ``seen`` is a plain union of the materialized frontiers: materializing
+    the union every round would copy all earlier rows again."""
+    found: list[DataFrame] = []
+
+    def step(frontier: DataFrame, r: int) -> DataFrame:
+        found.append(frontier)
+        return expand(frontier, _union_all(found), r)
+
+    last = iterate(first, step, rounds, until=DataFrame.isEmpty)
+    return _union_all(found + [last])
+
+
+def _row_count_unchanged():
+    """``until`` test for shrinking loops: true once a round leaves the
+    row count unchanged (rows only ever leave, so the set is stable)."""
+    counts = [None]
+
+    def test(df: DataFrame) -> bool:
+        counts.append(df.count())
+        return counts[-1] == counts[-2]
+
+    return test
+
+
 def pagerank_fixed_point(
-    sym: DataFrame, iters: int = 5, scale: int = PR_SCALE,
-    truncate_every: int = 0,
+    sym: DataFrame, iters: int = 5, scale: int = PR_SCALE
 ) -> DataFrame:
     """(entity, rank_fp) after ``iters`` synchronous PageRank iterations on
     the symmetric edge list, in exact integer arithmetic.
@@ -71,73 +130,28 @@ def pagerank_fixed_point(
     # materialize the edge list ONCE — it is re-joined every iteration, and
     # without this the whole upstream DAG (scan → mentions → pairs) would
     # re-execute per round
-    sym = sym.localCheckpoint(eager=True)
+    sym = materialize(sym)
     deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
-    # ranks carry deg so each iteration is edge-join + one groupBy shuffle.
-    # r06 (guide §1.2): the loop composes LAZILY by default — one action
-    # executes all rounds, each repeated exchange subtree (sym, deg)
-    # materializes once via AQE shuffle-stage reuse, and the 2·iters
-    # per-round driver jobs + block-manager materializations of the old
-    # per-round localCheckpoint are gone (measured 4× at sf0.1: 2.2 s →
-    # 0.55 s warm for iters=5). The rank chain grows the plan LINEARLY,
-    # so lazy is safe at any realistic iters; ``truncate_every=k``
-    # restores per-k-round lineage truncation for deep fixpoints.
-    ranks = deg.withColumn("rank", F.lit(scale).cast("long"))
-    for i in range(iters):
+
+    # ranks carry deg so each iteration is edge-join + one groupBy shuffle;
+    # the rank chain reads the last round once, so it composes lazily and
+    # one action runs every round (AQE reuses the repeated sym/deg stages)
+    def step(ranks: DataFrame, _r: int) -> DataFrame:
         contrib = sym.join(ranks, "u").select(
             F.col("v").alias("u"), F.expr("rank DIV deg").alias("c")
         )
         sums = contrib.groupBy("u").agg(F.sum("c").alias("s"))
-        ranks = (
-            deg.join(sums, "u", "left")
-            .select(
-                "u",
-                "deg",
-                (
-                    F.lit(base)
-                    + F.expr(f"({PR_DAMP_NUM} * coalesce(s, 0L)) DIV {PR_DAMP_DEN}")
-                ).cast("long").alias("rank"),
-            )
+        return deg.join(sums, "u", "left").select(
+            "u",
+            "deg",
+            (
+                F.lit(base)
+                + F.expr(f"({PR_DAMP_NUM} * coalesce(s, 0L)) DIV {PR_DAMP_DEN}")
+            ).cast("long").alias("rank"),
         )
-        if truncate_every and (i + 1) % truncate_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = iterate(deg.withColumn("rank", F.lit(scale).cast("long")), step, iters)
     return ranks.select(F.col("u").alias("entity"), F.col("rank").alias("rank_fp"))
-
-
-def pagerank_float(
-    sym: DataFrame, iters: int = 5, truncate_every: int = 0
-) -> DataFrame:
-    """(entity, rank) — the PRODUCTION PageRank path: identical plan shape
-    to ``pagerank_fixed_point`` (one edge-join + one groupBy shuffle per
-    iteration, degrees riding with ranks, per-iteration lineage truncation)
-    but double arithmetic, so it has no node-count bound (the integer twin
-    overflows past ~10^5 nodes at scale=10^12 — documented there) and skips
-    the fixed-point scaling ops. Float summation is reduction-order
-    dependent, so results are reproducible only to ~1e-12 relative — which
-    is why the ORACLE twin stays integer (bit-exact cross-engine) and this
-    path is tolerance-tested against it (tests/test_graphalgo.py)."""
-    damp = PR_DAMP_NUM / PR_DAMP_DEN
-    base = 1.0 - damp
-    sym = sym.localCheckpoint(eager=True)
-    deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
-    # lazy loop, same shape note as pagerank_fixed_point (r06)
-    ranks = deg.withColumn("rank", F.lit(1.0))
-    for i in range(iters):
-        contrib = sym.join(ranks, "u").select(
-            F.col("v").alias("u"), (F.col("rank") / F.col("deg")).alias("c")
-        )
-        sums = contrib.groupBy("u").agg(F.sum("c").alias("s"))
-        ranks = (
-            deg.join(sums, "u", "left")
-            .select(
-                "u",
-                "deg",
-                (F.lit(base) + F.lit(damp) * F.coalesce("s", F.lit(0.0))).alias("rank"),
-            )
-        )
-        if truncate_every and (i + 1) % truncate_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(F.col("u").alias("entity"), "rank")
 
 
 def project_bipartite(
@@ -150,12 +164,10 @@ def project_bipartite(
     some ``dst`` node links both. Pivot nodes with degree > max_pivot_deg are
     dropped FIRST (broadcast anti-join of the tiny hot set) — each pivot of
     degree d yields C(d,2) edges, so the cut is the quadratic-blowup bound."""
-    # materialized once (r06): consumed by the hot-pivot pass and both
-    # self-join sides — lazily the distinct re-ran per reference
-    e = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # materialized once: consumed by the hot-pivot pass and both self-join
+    # sides — lazily the distinct re-ran per reference
+    e = materialize(
+        pairs.select(F.col(src).alias("s"), F.col(dst).alias("p")).distinct()
     )
     hot = (
         e.groupBy("p")
@@ -218,11 +230,10 @@ def triangle_counts(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame
     the orientation math is identical either way."""
     # edges feed the degree pass AND the two key-attach joins — a lazy
     # caller plan (e.g. q57's bipartite projection) would re-execute per
-    # reference (r06)
-    edges = edges.localCheckpoint(eager=True)
-    oriented = oriented_edges(edges, broadcast_keys).localCheckpoint(
-        eager=True
-    )  # consumed by three branches below
+    # reference
+    edges = materialize(edges)
+    # consumed by three branches below
+    oriented = materialize(oriented_edges(edges, broadcast_keys))
     w1 = oriented.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), F.col("kdst").alias("kb")
     )
@@ -250,30 +261,26 @@ def bfs_distances(sym: DataFrame, seeds: DataFrame, max_hops: int = 4) -> DataFr
     only the nodes discovered last round against the edges (not the whole
     visited set), then a min-dedup against visited. Unreached nodes are
     absent from the output."""
-    sym = sym.localCheckpoint(eager=True)  # re-joined every hop
-    visited = seeds.select(
-        F.col(seeds.columns[0]).alias("u"), F.lit(0).cast("int").alias("dist")
-    ).distinct().localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
+    sym = materialize(sym)  # re-joined every hop
+
+    def hop(frontier: DataFrame, visited: DataFrame, r: int) -> DataFrame:
+        return (
             sym.join(frontier.select("u"), "u")
-            .select(F.col("v").alias("u"), F.lit(hop).cast("int").alias("dist"))
+            .select(F.col("v").alias("u"), F.lit(r).cast("int").alias("dist"))
             .distinct()
             .join(visited.select("u"), "u", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if not nxt.head(1):
-            break
-        # plain union of checkpointed frontiers — see ancestor_closure
-        visited = visited.union(nxt)
-        frontier = nxt
+
+    seeds0 = materialize(
+        seeds.select(
+            F.col(seeds.columns[0]).alias("u"), F.lit(0).cast("int").alias("dist")
+        ).distinct()
+    )
+    visited = _search(seeds0, hop, max_hops)
     return visited.select(F.col("u").alias("entity"), "dist")
 
 
-def label_propagation(
-    sym: DataFrame, iters: int = 3, truncate_every: int = 0
-) -> DataFrame:
+def label_propagation(sym: DataFrame, iters: int = 3) -> DataFrame:
     """(entity, label) after ``iters`` SYNCHRONOUS label-propagation rounds:
     every node simultaneously adopts its neighbors' plurality label, ties
     broken by minimum label — fully deterministic (async LPA, the textbook
@@ -281,26 +288,25 @@ def label_propagation(
     with a total tie-break is the distributed-systems formulation).
     Initial label = own id. Per round: one edge-join shuffle + one count
     aggregate + an argmax window over the aggregated (node, label) table;
-    lineage truncated per round."""
-    sym = sym.localCheckpoint(eager=True)  # re-joined every round
-    labels = (
+    rounds compose lazily (a linear chain, see pagerank_fixed_point)."""
+    sym = materialize(sym)  # re-joined every round
+    labels = materialize(
         sym.select("u").distinct().withColumn("label", F.col("u"))
-        .localCheckpoint(eager=True)
     )
-    # lazy linear chain (r06) — see pagerank_fixed_point
     w = Window.partitionBy("u").orderBy(F.desc("c"), F.asc("label"))
-    for i in range(iters):
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         nbr = sym.join(
             labels.select(F.col("u").alias("v"), "label"), "v"
         ).select("u", "label")
         counts = nbr.groupBy("u", "label").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        return (
             counts.withColumn("rk", F.row_number().over(w))
             .where(F.col("rk") == 1)
             .select("u", "label")
         )
-        if truncate_every and (i + 1) % truncate_every == 0:
-            labels = labels.localCheckpoint(eager=True)
+
+    labels = iterate(labels, step, iters)
     return labels.select(F.col("u").alias("entity"), "label")
 
 
@@ -360,33 +366,29 @@ def ancestor_closure(
     so a pair reachable along many paths is expanded exactly once at its
     shortest depth — path-count explosion on diamond-heavy DAGs never
     happens. Terminates early when a round finds nothing new."""
-    e = (
+    e = materialize(
         edges.select(F.col(child).alias("child"), F.col(parent).alias("ancestor"))
         .where(F.col("child") != F.col("ancestor"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    closure = e.withColumn("depth", F.lit(1).cast("int"))
-    frontier = closure
-    for d in range(2, max_depth + 1):
-        nxt = (
+
+    def deeper(frontier: DataFrame, closure: DataFrame, r: int) -> DataFrame:
+        return (
             frontier.select("child", F.col("ancestor").alias("mid"))
             .join(e.select(F.col("child").alias("mid"), "ancestor"), "mid")
             .select("child", "ancestor")
             .distinct()
-            .join(closure.select("child", "ancestor"), ["child", "ancestor"], "left_anti")
-            .withColumn("depth", F.lit(d).cast("int"))
-            .localCheckpoint(eager=True)
+            .join(
+                closure.select("child", "ancestor"),
+                ["child", "ancestor"],
+                "left_anti",
+            )
+            .withColumn("depth", F.lit(r + 1).cast("int"))
         )
-        if not nxt.head(1):
-            break
-        # plain union: nxt is already checkpointed, so the accumulated
-        # closure is a union of cached RDDs — re-checkpointing the union
-        # each round (the old shape) re-materialized ALL prior rows per
-        # round, O(depth²) copies for no lineage benefit (r06)
-        closure = closure.union(nxt)
-        frontier = nxt
-    return closure
+
+    return _search(
+        e.withColumn("depth", F.lit(1).cast("int")), deeper, max_depth - 1
+    )
 
 
 def kcore(sym: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
@@ -396,38 +398,29 @@ def kcore(sym: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
     standard noise filter before community/embedding work).
 
     Each round is one degree aggregate + two semi-joins on the shrinking
-    edge list, lineage truncated per round. Early exit at the fixed point
+    edge list, materialized per round. Early exit at the fixed point
     is safe under a bounded-round contract (once stable, further rounds
     are identity — the oracle's fixed unroll gives identical output).
     Returns (entity, degree) — the degree WITHIN the k-core subgraph."""
-    edges = sym.localCheckpoint(eager=True)
-    prev = None
-    converged = False
-    for _ in range(max_rounds):
+    def peel(edges: DataFrame, _r: int) -> DataFrame:
         keep = (
             edges.groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= k)
             .select("u")
         )
-        edges = (
+        return (
             edges.join(keep, "u", "left_semi")
             .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-        n = edges.count()
-        if n == prev:
-            converged = True
-            break
-        prev = n
-    if not converged:
-        # chain-like graphs peel only their endpoints per round — returning
-        # the partial peel as "the k-core" would be silently wrong
-        raise RuntimeError(
-            f"kcore did not reach its peeling fixed point in {max_rounds} "
-            f"rounds; raise max_rounds (chain-like graphs need ~diameter/2)"
-        )
+
+    # chain-like graphs peel only their endpoints per round — returning
+    # the partial peel as "the k-core" would be silently wrong
+    edges = _converge(
+        materialize(sym), peel, max_rounds, _row_count_unchanged(),
+        "kcore peeling (chain-like graphs need ~diameter/2 rounds)",
+    )
     return edges.groupBy("u").agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     ).select(F.col("u").alias("entity"), "degree")
@@ -458,7 +451,9 @@ def deterministic_walks(
     out = state.select(
         "start", "walk_id", F.lit(0).alias("step"), F.col("cur").alias("node")
     )
-    for t in range(1, walk_len + 1):
+
+    def step(walk: tuple, t: int) -> tuple:
+        state, out = walk
         idx = F.conv(
             F.substring(
                 F.md5(F.concat_ws(":", F.col("cur"), F.col("walk_id"), F.lit(t))),
@@ -476,20 +471,21 @@ def deterministic_walks(
                 ).alias("cur"),
             )
         )
-        out = out.union(
+        return state, out.union(
             state.select(
                 "start", "walk_id", F.lit(t).alias("step"),
                 F.col("cur").alias("node"),
             )
         )
+
+    _, out = iterate((state, out), step, walk_len)
     return out.select(
         "start", F.col("walk_id").cast("int"), F.col("step").cast("int"), "node"
     )
 
 
 def personalized_pagerank(
-    sym: DataFrame, seeds: DataFrame, iters: int = 5, scale: int = PR_SCALE,
-    truncate_every: int = 0,
+    sym: DataFrame, seeds: DataFrame, iters: int = 5, scale: int = PR_SCALE
 ) -> DataFrame:
     """Personalized PageRank: identical fixed-point integer loop to
     pagerank_fixed_point, but ALL teleport mass lands on the seed set —
@@ -504,55 +500,48 @@ def personalized_pagerank(
     (it cannot hold or spread mass). Nodes never reached hold rank 0 and
     are dropped from the output, so the result is the seed's
     neighborhood, not a |V|-sized table. Same scale notes as the
-    global variant (integer overflow bound, one shuffle/iteration,
-    localCheckpoint truncation; float production path = pagerank_float's
-    shape with the seeded base).
+    global variant (integer overflow bound, one shuffle/iteration, lazy
+    rank chain).
     """
     base = scale * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
-    sym = sym.localCheckpoint(eager=True)
+    sym = materialize(sym)
     deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
-    seeded = deg.join(
-        F.broadcast(seeds.select("u").distinct().withColumn("_s", F.lit(1))),
-        "u",
-        "left",
-    ).select("u", "deg", F.coalesce("_s", F.lit(0)).alias("is_seed"))
-    # lazy loop, same shape note as pagerank_fixed_point (r06); seeded is
-    # localCheckpointed so the seed attach computes once instead of per
-    # round. NOT persist(): an InMemoryRelation inside an AQE lazy chain
-    # measured 3.5× SLOWER than this (7.5 s vs 2.0 s at sf0.1) — cached
-    # relations break AQE shuffle-stage reuse, so every round re-read and
-    # re-sorted the cache instead of reusing one materialized exchange.
-    seeded = seeded.localCheckpoint(eager=True)
-    ranks = seeded.withColumn(
-        "rank", (F.col("is_seed") * F.lit(scale)).cast("long")
+    # materialized so the seed attach computes once instead of per round
+    seeded = materialize(
+        deg.join(
+            F.broadcast(seeds.select("u").distinct().withColumn("_s", F.lit(1))),
+            "u",
+            "left",
+        ).select("u", "deg", F.coalesce("_s", F.lit(0)).alias("is_seed"))
     )
-    for i in range(iters):
+
+    def step(ranks: DataFrame, _r: int) -> DataFrame:
         contrib = sym.join(ranks, "u").select(
             F.col("v").alias("u"), F.expr("rank DIV deg").alias("c")
         )
         sums = contrib.groupBy("u").agg(F.sum("c").alias("s"))
-        ranks = (
-            seeded.join(sums, "u", "left")
-            .select(
-                "u",
-                "deg",
-                "is_seed",
-                (
-                    F.col("is_seed") * F.lit(base)
-                    + F.expr(f"({PR_DAMP_NUM} * coalesce(s, 0L)) DIV {PR_DAMP_DEN}")
-                ).cast("long").alias("rank"),
-            )
+        return seeded.join(sums, "u", "left").select(
+            "u",
+            "deg",
+            "is_seed",
+            (
+                F.col("is_seed") * F.lit(base)
+                + F.expr(f"({PR_DAMP_NUM} * coalesce(s, 0L)) DIV {PR_DAMP_DEN}")
+            ).cast("long").alias("rank"),
         )
-        if truncate_every and (i + 1) % truncate_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = iterate(
+        seeded.withColumn("rank", (F.col("is_seed") * F.lit(scale)).cast("long")),
+        step,
+        iters,
+    )
     return ranks.where(F.col("rank") > 0).select(
         F.col("u").alias("entity"), F.col("rank").alias("rank_fp")
     )
 
 
 def weighted_sssp(
-    wedges: DataFrame, seeds: DataFrame, iters: int = 4,
-    truncate_every: int = 2,
+    wedges: DataFrame, seeds: DataFrame, iters: int = 4
 ) -> DataFrame:
     """Multi-source weighted shortest paths by synchronous Bellman-Ford
     (min-plus) rounds over an integer-weighted edge list (u, v, w) —
@@ -562,33 +551,27 @@ def weighted_sssp(
     ``seeds`` is a 1-column (u) frame; all seeds start at distance 0.
     Each round relaxes every current distance across its out-edges (one
     equi-join on u, shuffle bounded by |E|) and folds with the previous
-    table via a min aggregate (partial-agg combines map-side); the
-    distance table is localCheckpoint-truncated per round. Integer
-    weights make min-plus exact — results are bit-identical across
-    engines and partitionings. ``iters`` bounds path LENGTH (edges), so
+    table via a min aggregate (partial-agg combines map-side); each round
+    reads the last distance table twice, so ``iterate`` materializes it
+    every few rounds. Integer weights make min-plus exact — results are
+    bit-identical across engines and partitionings. ``iters`` bounds path LENGTH (edges), so
     the result after k rounds is exactly "shortest distance using ≤ k
     edges" — a well-defined contract even before global convergence,
     which is what makes a fixed-round oracle twin possible.
     """
-    wedges = wedges.localCheckpoint(eager=True)
-    dist = (
-        seeds.select("u").distinct().withColumn("dist", F.lit(0).cast("long"))
-    )
+    wedges = materialize(wedges)
+
     # frontier-only relaxation (same exactness argument as bfs_distances:
     # any path improving dist(v) at round i extends one that improved at
     # round i-1, so relaxing ONLY last round's improved nodes computes the
     # identical ≤k-edge minimum) — the relax join shrinks every round as
     # the wavefront passes instead of rescanning all settled distances.
-    # r06: rounds compose lazily between truncations (one action, AQE
-    # stage reuse — see pagerank_fixed_point); the merged frame is
-    # referenced twice per round (dist + frontier), so the un-truncated
-    # plan DOUBLES per round and re-executes the duplicated subtrees —
-    # truncating every 2 rounds measured fastest at sf0.1 (3.7 s vs
-    # 4.1 s fully lazy vs 4.1 s per-round checkpointed, warm)
-    frontier = dist
-    for _i in range(iters):
+    # The state is the distance table flagged with last round's
+    # improvements; the frontier is its improved rows.
+    def relax(dist: DataFrame, _r: int) -> DataFrame:
         relaxed = (
-            frontier.join(wedges, "u")
+            dist.where(F.col("_improved") & F.col("dist").isNotNull())
+            .join(wedges, "u")
             .select(
                 F.col("v").alias("u"),
                 (F.col("dist") + F.col("w")).cast("long").alias("cand"),
@@ -596,25 +579,21 @@ def weighted_sssp(
             .groupBy("u")
             .agg(F.min("cand").alias("cand"))
         )
-        merged = (
-            dist.join(relaxed, "u", "full")
-            .select(
-                "u",
-                # least() skips NULLs (only all-NULL yields NULL), so the
-                # full-outer join's missing side never wins spuriously
-                F.least("dist", "cand").alias("new_dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("cand") < F.col("dist"))
-                ).alias("_improved"),
-            )
+        return dist.select("u", "dist").join(relaxed, "u", "full").select(
+            "u",
+            # least() skips NULLs (only all-NULL yields NULL), so the
+            # full-outer join's missing side never wins spuriously
+            F.least("dist", "cand").alias("dist"),
+            (
+                F.col("dist").isNull()
+                | (F.col("cand") < F.col("dist"))
+            ).alias("_improved"),
         )
-        if truncate_every and (_i + 1) % truncate_every == 0:
-            merged = merged.localCheckpoint(eager=True)
-        frontier = merged.where(
-            F.col("_improved") & F.col("new_dist").isNotNull()
-        ).select("u", F.col("new_dist").alias("dist"))
-        dist = merged.select("u", F.col("new_dist").alias("dist"))
+
+    dist = seeds.select("u").distinct().select(
+        "u", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("_improved")
+    )
+    dist = iterate(dist, relax, iters)
     return dist.select(F.col("u").alias("entity"), "dist")
 
 
@@ -641,13 +620,11 @@ def adamic_adar(
     (u, v, common, aa_score) with u < v, score rounded 6dp.
     """
     # sym feeds the adjacency, the degree pass and the known-edge
-    # anti-join; nzk feeds both wedge sides — materialize each once (r06)
-    sym = sym.localCheckpoint(eager=True)
+    # anti-join; nzk feeds both wedge sides — materialize each once
+    sym = materialize(sym)
     nz = sym.select(F.col("u").alias("z"), F.col("v").alias("x"))
     deg = nz.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    nzk = nz.join(deg.where(F.col("deg") <= max_hub_deg), "z").localCheckpoint(
-        eager=True
-    )
+    nzk = materialize(nz.join(deg.where(F.col("deg") <= max_hub_deg), "z"))
     a = nzk.select("z", F.col("x").alias("xa"), "deg")
     b = nzk.select("z", F.col("x").alias("xb"))
     cand = (
@@ -676,34 +653,26 @@ def cycle_residue(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
     — ancestor_closure on a cyclic input silently double-counts.
 
     Each round: two distinct-projections of the shrinking edge list +
-    two semi-joins; lineage truncated per round. Converges in ~longest
+    two semi-joins, materialized per round. Converges in ~longest
     acyclic tail length rounds; like kcore, a bounded-round partial trim
     is never returned — raise instead. Returns distinct entangled nodes
     (node); empty ⟺ the input is a DAG."""
-    e = edges.select("u", "v").distinct().localCheckpoint(eager=True)
-    prev = None
-    converged = False
-    for _ in range(max_rounds):
+    def trim(e: DataFrame, _r: int) -> DataFrame:
         sources = e.select("u").distinct()
         targets = e.select(F.col("v").alias("u")).distinct()
-        e = (
+        return (
             e.join(targets, "u", "left_semi")  # u has an incoming edge
             .join(
                 sources.withColumnRenamed("u", "v"), "v", "left_semi"
             )  # v has an outgoing edge
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-        n = e.count()
-        if n == prev:
-            converged = True
-            break
-        prev = n
-    if not converged:
-        raise RuntimeError(
-            f"cycle_residue did not converge in {max_rounds} rounds; "
-            f"raise max_rounds (long acyclic tails trim one layer/round)"
-        )
+
+    e = _converge(
+        materialize(edges.select("u", "v").distinct()), trim, max_rounds,
+        _row_count_unchanged(),
+        "cycle_residue (long acyclic tails trim one layer a round)",
+    )
     return (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
@@ -726,57 +695,46 @@ def luby_mis(sym: DataFrame, max_rounds: int = 8) -> DataFrame:
     identically on both engines; derived inline from the node id, so no
     |V|-sized broadcast exists. Each round: two semi-joins restrict the
     edge list to active endpoints, one max-aggregate per node, one
-    anti-join pair deactivates. Lineage truncated per round; like kcore,
-    a partial result is never returned — raise on non-convergence.
+    anti-join pair deactivates, materialized per round; like kcore, a
+    partial result is never returned — raise on non-convergence.
     Returns (node) — the MIS members."""
     def pr(c: Column) -> Column:
         return F.concat(F.md5(c), c)
 
     # materialize the edge list once — it is semi-joined twice per round
     # and a lazy caller plan (symmetric_edges' union+distinct) would
-    # otherwise re-execute 2×/round (r06)
-    sym = sym.localCheckpoint(eager=True)
-    nodes = sym.select("u").distinct()
-    active = nodes.localCheckpoint(eager=True)
-    mis = None
-    converged = False
-    for _ in range(max_rounds):
-        if active.isEmpty():
-            converged = True
-            break
+    # otherwise re-execute 2×/round
+    sym = materialize(sym)
+    chosen: list[DataFrame] = []
+
+    def select_round(active: DataFrame, _r: int) -> DataFrame:
         # the active-restricted edge list feeds ONLY the priority max:
         # neighbor deactivation below can read raw ``sym`` because its
         # result is anti-joined against ``active`` anyway (sel ⊆ active
-        # pins the v side; inactive u's drop out in the anti-join), so
-        # act_e no longer needs a per-round checkpoint — one fewer
-        # edge-list materialization + driver job per round (r06)
+        # pins the v side; inactive u's drop out in the anti-join)
         act_e = sym.join(active, "u", "left_semi").join(
             active.withColumnRenamed("u", "v"), "v", "left_semi"
         )
         nbrmax = act_e.groupBy("u").agg(F.max(pr(F.col("v"))).alias("mx"))
-        sel = (
+        # read twice (the MIS and the deactivation): materialized
+        sel = materialize(
             active.join(nbrmax, "u", "left")
             .where(F.col("mx").isNull() | (pr(F.col("u")) > F.col("mx")))
             .select("u")
-            .localCheckpoint(eager=True)
         )
-        mis = sel if mis is None else mis.union(sel)
+        chosen.append(sel)
         nbr_of_sel = sym.join(
             sel.withColumnRenamed("u", "v"), "v", "left_semi"
         ).select("u")
-        active = (
-            active.join(sel, "u", "left_anti")
-            .join(nbr_of_sel, "u", "left_anti")
-            .localCheckpoint(eager=True)
+        return active.join(sel, "u", "left_anti").join(
+            nbr_of_sel, "u", "left_anti"
         )
-    if not converged:
-        raise RuntimeError(
-            f"luby_mis did not deactivate all nodes in {max_rounds} rounds; "
-            f"raise max_rounds (expected O(log n) w.h.p.)"
-        )
-    if mis is None:  # empty input graph: MIS of nothing is nothing
-        return nodes.select(F.col("u").alias("node")).limit(0)
-    return mis.select(F.col("u").alias("node")).distinct()
+
+    _converge(
+        materialize(sym.select("u").distinct()), select_round, max_rounds,
+        DataFrame.isEmpty, "luby_mis (expected O(log n) rounds w.h.p.)",
+    )
+    return _union_all(chosen).select(F.col("u").alias("node")).distinct()
 
 
 def harmonic_centrality(
@@ -795,11 +753,24 @@ def harmonic_centrality(
     Scale shape: one multi-source BFS — the |S| frontiers advance
     SIMULTANEOUSLY as (seed, node) rows through the same per-hop join,
     so the hop count, not the seed count, sets the number of shuffles.
-    Frontier-only expansion with per-round lineage truncation, exactly
+    Frontier-only expansion with a materialized frontier per hop, exactly
     like bfs_distances. Returns (entity, n_reached, harmonic) for nodes
     reached by ≥1 seed at dist ≥ 1."""
-    sym = sym.localCheckpoint(eager=True)
-    visited = (
+    sym = materialize(sym)
+
+    def hop(frontier: DataFrame, visited: DataFrame, r: int) -> DataFrame:
+        return (
+            sym.join(frontier.select("seed", "u"), "u")
+            .select(
+                "seed",
+                F.col("v").alias("u"),
+                F.lit(r).cast("int").alias("dist"),
+            )
+            .distinct()
+            .join(visited.select("seed", "u"), ["seed", "u"], "left_anti")
+        )
+
+    seeds0 = materialize(
         seeds.select(F.col(seeds.columns[0]).alias("seed"))
         .distinct()
         .select(
@@ -807,28 +778,10 @@ def harmonic_centrality(
             F.col("seed").alias("u"),
             F.lit(0).cast("int").alias("dist"),
         )
-        .localCheckpoint(eager=True)
     )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            sym.join(frontier.select("seed", "u"), "u")
-            .select(
-                "seed",
-                F.col("v").alias("u"),
-                F.lit(hop).cast("int").alias("dist"),
-            )
-            .distinct()
-            .join(visited.select("seed", "u"), ["seed", "u"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not nxt.head(1):
-            break
-        # plain union of checkpointed frontiers — see ancestor_closure
-        visited = visited.union(nxt)
-        frontier = nxt
     return (
-        visited.where(F.col("dist") > 0)
+        _search(seeds0, hop, max_hops)
+        .where(F.col("dist") > 0)
         .groupBy(F.col("u").alias("entity"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_reached"),
@@ -900,14 +853,14 @@ def composition_body(t1: DataFrame, t2: DataFrame | None = None) -> DataFrame:
             "mid",
         )
         .select("p1", "p2", "x", "z")
-        # (x, z)-keyed exchange BEFORE the distinct (r06, guide §2.4):
+        # (x, z)-keyed exchange BEFORE the distinct (guide §2.4):
         # hash-partitioning on (x, z) clusters every duplicate
         # (p1, p2, x, z) into one partition, so the DISTINCT aggregates
         # locally with NO second exchange — and the head-attach equi-join
         # on (x, z) downstream (mine_path_rules' support pass) reuses the
         # partitioning outright, turning two full body shuffles into one.
-        # (Map-side pre-dedup of the old plain distinct reduced the body
-        # by <7% at sf0.1, so the raw-row exchange costs almost the same.)
+        # (A map-side pre-dedup would shrink the body by <7% at sf0.1, so
+        # the raw-row exchange costs almost the same.)
         .repartition("x", "z")
         .distinct()
     )
@@ -951,28 +904,21 @@ def mine_path_rules(
 
     Reuse: ``t`` is consumed up to six times (two join sides, head
     attach, PCA heads, two degree aggregates) and the internally-built
-    body three times (body_size, support, PCA) — both are persisted as
-    InMemoryRelations, which cut the sf0.1 wall time ~2× (the lazy
-    replays cost ~2 s and ~5.5 s per extra evaluation respectively). A
-    CALLER-passed body is left untouched: q143 measured its wider
-    mine-then-apply plan and lazy recompute won there (see its note).
+    body three times (body_size, support, PCA) — both are materialized
+    once (the lazy replays cost ~2 s and ~5.5 s per extra evaluation at
+    sf0.1). A CALLER-passed body is left untouched: q143 measured its
+    wider mine-then-apply plan and lazy recompute won there (see its
+    note).
 
     ``assume_distinct=True`` skips the defensive input DISTINCT (one
     full (subj, pred, obj) shuffle) — pass it when the caller's triple
     view is distinct by construction (e.g. the lifted relational KG,
     whose per-branch PK-dedup guarantees it).
-
-    ``t`` is materialized via localCheckpoint, NOT persist() (r06): the
-    cached-relation form measured 20–24 s vs 9–10 s for the whole miner
-    at sf0.1 — an InMemoryRelation referenced from four branches defeats
-    AQE shuffle-stage reuse (the personalized_pagerank finding). The
-    body keeps persist(): with t severed it showed no such penalty and
-    edged out its checkpointed form in the same A/B.
     """
     t = triples.select("subj", "pred", "obj")
     if not assume_distinct:
         t = t.distinct()
-    t = t.localCheckpoint(eager=True)
+    t = materialize(t)
     if body is None:
         t1 = t
         t2 = t
@@ -993,7 +939,7 @@ def mine_path_rules(
             )
             t1 = t.join(hot.select(F.col("node").alias("obj")), "obj", "left_anti")
             t2 = t.join(hot.select(F.col("node").alias("subj")), "subj", "left_anti")
-        body = composition_body(t1, t2).persist()
+        body = materialize(composition_body(t1, t2))
     body_n = body.groupBy("p1", "p2").agg(
         F.count(F.lit(1)).cast("long").alias("body_size")
     )
@@ -1020,7 +966,7 @@ def mine_path_rules(
     ).distinct()
     # pca_body = Σ_x |body rows (p1, p2, x, ·)| · 1[x has some p3 edge]:
     # pre-aggregating body to (p1, p2, x) counts BEFORE the head attach
-    # (r06, guide §2.3 "aggregate before you shuffle") shuffles the
+    # (guide §2.3 "aggregate before you shuffle") shuffles the
     # ~|distinct (p1, p2, x)| reduced table instead of the full body —
     # the sum over the join is identical to counting join rows.
     bx = body.groupBy("p1", "p2", "x").agg(
@@ -1122,7 +1068,7 @@ def apply_rules(
     ``checkpoint`` truncates the DISTINCT-ed triple table's lineage so the
     two consumers (body join's both sides + novelty anti-join) don't each
     re-run the upstream scan — mine-then-apply pipelines otherwise pay the
-    triple materialization twice per stage (on a cluster: persist the
+    triple materialization twice per stage (on a cluster: write the
     triple table to storage between the mining and inference passes).
     """
     acc = F.broadcast(
@@ -1132,7 +1078,7 @@ def apply_rules(
     )
     t = triples.select("subj", "pred", "obj").distinct()
     if checkpoint:
-        t = t.localCheckpoint(eager=True)
+        t = materialize(t)
     if body is None:
         body = composition_body(t)
     inferred = (
@@ -1199,9 +1145,9 @@ def edge_support(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
     least/greatest) instead of its three vertices. Edges on no triangle
     come back with support 0 (left join), because truss peeling must see
     them to remove them."""
-    oriented = oriented_edges(edges, broadcast_keys).localCheckpoint(
-        eager=True
-    )
+    # edges feed the orientation and the closing support join
+    edges = materialize(edges)
+    oriented = materialize(oriented_edges(edges, broadcast_keys))
     w1 = oriented.select(
         F.col("src").alias("a"), F.col("dst").alias("b"),
         F.col("kdst").alias("kb"),
@@ -1246,20 +1192,21 @@ def ktruss(
 
     Each round is one edge_support pass — O(m^1.5) wedge-bounded via the
     degree orientation, one shuffle for the key attach, one for the
-    wedge join, one for the per-edge rollup — with the edge set lineage-
-    truncated per round (multiplicative joins nest otherwise). Returns
-    (u, v, support), u < v.
+    wedge join, one for the per-edge rollup — edge_support materializes
+    the surviving edge set it is handed, so each round reads the last
+    round's edges once. Returns (u, v, support), u < v.
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    e = edges.select("u", "v").distinct()
-    for _ in range(iters):
-        e = (
+
+    def peel(e: DataFrame, _r: int) -> DataFrame:
+        return (
             edge_support(e, broadcast_keys)
             .where(F.col("support") >= k - 2)
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
+
+    e = iterate(edges.select("u", "v").distinct(), peel, iters)
     return edge_support(e, broadcast_keys)
 
 
@@ -1272,7 +1219,6 @@ def hits_fixed_point(
     dst: str = "obj",
     iters: int = 4,
     scale: int = HITS_SCALE,
-    truncate_every: int = 0,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) on a DIRECTED edge list,
     in exact integer arithmetic: (node, hub_fp, auth_fp).
@@ -1291,75 +1237,55 @@ def hits_fixed_point(
     Shape: 2 shuffles per iteration (groupBy dst, groupBy src); the only
     broadcast is the 1-row total. Overflow headroom: raw sums ≤ N·scale
     and the normalize multiplies by scale, so N·scale² < 2^63 → N ≲
-    9·10^6 at the default scale=10^6; drop scale (or flip to floats à la
-    pagerank_float) beyond that. Sum-normalization (not L2) keeps the
-    math in integers; rankings are unaffected (positive scalar)."""
-    e = (
+    9·10^6 at the default scale=10^6; drop scale beyond that.
+    Sum-normalization (not L2) keeps the math in integers; rankings are
+    unaffected (positive scalar).
+
+    The state is one (node, hub, auth) table and each ``iterate`` step is
+    a half-round, auth first. A half-round reads the state twice (the
+    edge sums and the node-set attach) and its normalize reads the result
+    twice (total + join), so the lazy plan grows ×4 per half-round and
+    ``iterate`` materializes about once a round."""
+    e = materialize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    hub = nodes.withColumn("hub", F.lit(scale).cast("long"))
-    auth = nodes.withColumn("auth", F.lit(0).cast("long"))
 
-    # r06: rounds compose lazily by default (see pagerank_fixed_point;
-    # measured 3.1 s lazy vs 3.3 s per-round-checkpointed vs 6.4 s
-    # mis-sequenced truncation at sf0.1). Each _normalize references its
-    # input twice (total + join), so the un-truncated plan doubles per
-    # half-round — fine at the default 4 iters (shallow checkpointed
-    # leaves); set truncate_every for deep fixpoints. Truncation is
-    # sequenced INSIDE the round — auth must be truncated before raw_h
-    # captures it, or the checkpoint materializes a subtree the very next
-    # half-round re-executes from scratch.
-    def _normalize(df: DataFrame, col: str) -> DataFrame:
-        tot = df.agg(F.sum("raw").alias("_tot"))
-        return (
-            df.join(F.broadcast(tot))
-            .select(
-                "node",
-                F.expr(f"(raw * {scale}) DIV _tot").cast("long").alias(col),
-            )
+    def half_round(state: DataFrame, r: int) -> DataFrame:
+        # odd r: auth(v) = Σ_{u→v} hub(u); even r: hub(u) = Σ_{u→v} auth(v)
+        frm, to, at, to_end = (
+            ("hub", "auth", "src", "dst") if r % 2 else ("auth", "hub", "dst", "src")
+        )
+        sums = (
+            e.join(state.select(F.col("node").alias(at), frm), at)
+            .groupBy(to_end)
+            .agg(F.sum(frm).alias("s"))
+            .withColumnRenamed(to_end, "node")
+        )
+        raw = state.select("node", frm).join(sums, "node", "left").select(
+            "node", frm, F.coalesce("s", F.lit(0)).cast("long").alias("raw")
+        )
+        tot = raw.agg(F.sum("raw").alias("_tot"))
+        return raw.join(F.broadcast(tot)).select(
+            "node",
+            frm,
+            F.expr(f"(raw * {scale}) DIV _tot").cast("long").alias(to),
         )
 
-    for _i in range(iters):
-        raw_a = (
-            e.join(hub.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("s"))
-            .withColumnRenamed("dst", "node")
-        )
-        auth = _normalize(
-            nodes.join(raw_a, "node", "left").select(
-                "node", F.coalesce("s", F.lit(0)).cast("long").alias("raw")
-            ),
-            "auth",
-        )
-        if truncate_every and (_i + 1) % truncate_every == 0:
-            auth = auth.localCheckpoint(eager=True)
-        raw_h = (
-            e.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.sum("auth").alias("s"))
-            .withColumnRenamed("src", "node")
-        )
-        hub = _normalize(
-            nodes.join(raw_h, "node", "left").select(
-                "node", F.coalesce("s", F.lit(0)).cast("long").alias("raw")
-            ),
-            "hub",
-        )
-        if truncate_every and (_i + 1) % truncate_every == 0:
-            hub = hub.localCheckpoint(eager=True)
-    return (
-        hub.join(auth, "node")
-        .select("node", F.col("hub").alias("hub_fp"), F.col("auth").alias("auth_fp"))
+    state = nodes.select(
+        "node",
+        F.lit(scale).cast("long").alias("hub"),
+        F.lit(0).cast("long").alias("auth"),
+    )
+    state = iterate(state, half_round, 2 * iters)
+    return state.select(
+        "node", F.col("hub").alias("hub_fp"), F.col("auth").alias("auth_fp")
     )
 
 
@@ -1454,14 +1380,10 @@ def propagate_labels(
     labeled (0 = seed); nodes never reached by a labeled neighbor are
     absent. Integer vote counts + struct-min tie-break → bit-identical
     across partitionings and engines. One edge join + one (node, label)
-    aggregate per round; lineage truncated per round."""
-    sym = sym.localCheckpoint(eager=True)
-    labeled = (
-        seeds.select("node", "label", F.lit(0).cast("int").alias("hop"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for i in range(1, iters + 1):
+    aggregate per round; each round's new labels are materialized."""
+    sym = materialize(sym)
+
+    def spread(_new: DataFrame, labeled: DataFrame, r: int) -> DataFrame:
         nbr = sym.join(
             labeled.select(F.col("node").alias("u"), "label"), "u"
         ).select(F.col("v").alias("node"), "label")
@@ -1470,7 +1392,7 @@ def propagate_labels(
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        new = (
+        return (
             cand.groupBy("node")
             .agg(
                 F.min(
@@ -1480,14 +1402,14 @@ def propagate_labels(
             .select(
                 "node",
                 F.col("b.l").alias("label"),
-                F.lit(i).cast("int").alias("hop"),
+                F.lit(r).cast("int").alias("hop"),
             )
-            .localCheckpoint(eager=True)
         )
-        if not new.head(1):
-            break
-        labeled = labeled.union(new).localCheckpoint(eager=True)
-    return labeled
+
+    seeds0 = materialize(
+        seeds.select("node", "label", F.lit(0).cast("int").alias("hop")).distinct()
+    )
+    return _search(seeds0, spread, iters)
 
 
 def degree_assortativity(sym: DataFrame) -> DataFrame:
@@ -1550,33 +1472,30 @@ def pagerank_directed(
     spread sink mass without an N×N term). All sums are longs —
     bit-identical across engines/partitionings. Overflow: N·scale·85
     must stay under 2^63 → N ≲ 10^8 at the default scale=10^9."""
-    e = (
+    e = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = materialize(
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     outdeg = e.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
-    ranks = (
-        nodes.join(outdeg, "node", "left")
-        .select(
+    ranks = materialize(
+        nodes.join(outdeg, "node", "left").select(
             "node",
             F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
             F.lit(scale).cast("long").alias("rank"),
         )
-        .localCheckpoint(eager=True)
     )
     n_nodes = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
     base = scale * 15 // 100
-    for _ in range(iters):
+
+    def step(ranks: DataFrame, _r: int) -> DataFrame:
         emitting = ranks.where(F.col("outdeg") > 0).withColumnRenamed(
             "node", "u"
         )
@@ -1589,7 +1508,7 @@ def pagerank_directed(
         dangling = ranks.where(F.col("outdeg") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dang")
         )
-        ranks = (
+        return (
             ranks.select("node", "outdeg")
             .join(contrib, "node", "left")
             .join(F.broadcast(dangling))
@@ -1604,8 +1523,9 @@ def pagerank_directed(
                 .cast("long")
                 .alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    ranks = iterate(ranks, step, iters)
     return ranks.select("node", F.col("rank").alias("rank_fp"))
 
 
@@ -1939,26 +1859,37 @@ def boruvka_spanning_forest(
     joins), keep cross-component edges, each component picks its best
     edge by (weight, u, v) — a per-component window whose frame is the
     component's frontier, then the accumulated forest relabels through
-    connected_components (large-star/small-star, lineage-truncated).
+    connected_components (large-star/small-star).
     Tie-break by edge key = a consistent total order on edges, so the
     result is the unique spanning forest of the perturbed order —
     deterministic across engines and partitionings (weights here are
     exact integers). The per-round emptiness check is one tiny count
     (same driver-action budget as k-core's early exit). Returns the
     forest edges (u, v, w)."""
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(w_col).alias("w")
-    ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    from bran_spark.operators.components import connected_components
+
+    e = materialize(
+        edges.select(
+            F.col(src).alias("u"), F.col(dst).alias("v"), F.col(w_col).alias("w")
+        )
     )
-    labels = nodes.withColumn("lab", F.col("node"))
-    chosen = None
+    nodes = materialize(
+        e.select(F.col("u").alias("node")).union(e.select("v")).distinct()
+    )
     order_w = F.asc("w") if minimum else F.desc("w")
-    for _ in range(max_rounds):
+
+    # state = (forest so far, edges picked last round): each round merges
+    # last round's picks, relabels, and picks again; it stops once a round
+    # picks nothing
+    def grow(state: tuple, _r: int) -> tuple:
+        chosen, picked = state
+        chosen = chosen.unionByName(picked).dropDuplicates()
+        cc = connected_components(
+            chosen.select(F.col("u").alias("id_a"), F.col("v").alias("id_b"))
+        )
+        labels = nodes.join(
+            cc.select(F.col("node"), F.col("component")), "node", "left"
+        ).select("node", F.coalesce("component", F.col("node")).alias("lab"))
         la = labels.select(F.col("node").alias("u"), F.col("lab").alias("lu"))
         lb = labels.select(F.col("node").alias("v"), F.col("lab").alias("lv"))
         cross = (
@@ -1974,26 +1905,13 @@ def boruvka_spanning_forest(
             .select("u", "v", "w")
             .dropDuplicates()
         )
-        if picked.isEmpty():
-            break
-        chosen = (
-            picked
-            if chosen is None
-            else chosen.unionByName(picked).dropDuplicates()
-        ).localCheckpoint(eager=True)
-        from bran_spark.operators.components import connected_components
+        return chosen, picked
 
-        cc = connected_components(
-            chosen.select(F.col("u").alias("id_a"), F.col("v").alias("id_b"))
-        )
-        labels = nodes.join(
-            cc.select(F.col("node"), F.col("component")), "node", "left"
-        ).select(
-            "node", F.coalesce("component", F.col("node")).alias("lab")
-        ).localCheckpoint(eager=True)
-    if chosen is None:
-        return e.where(F.lit(False))
-    return chosen
+    none = e.where(F.lit(False))
+    chosen, picked = iterate(
+        (none, none), grow, max_rounds, until=lambda s: s[1].isEmpty()
+    )
+    return chosen.unionByName(picked).dropDuplicates()
 
 
 def maximal_matching(
@@ -2013,7 +1931,7 @@ def maximal_matching(
     would truncate and collide (a lighter edge could then beat a
     heavier one on the md5 tiebreak). Each round is two
     dimension-light aggregates over the live incidence list + one
-    anti-join; lineage is truncated per round. Every returned edge set
+    anti-join, materialized per round. Every returned edge set
     is a valid matching after ANY number of rounds; maximality is
     reached in O(log n) rounds w.h.p. — ``max_rounds`` bounds the
     iteration, and matched coverage is monotone in rounds. Input:
@@ -2027,20 +1945,15 @@ def maximal_matching(
         ),
         F.md5(F.concat_ws(":", F.col("u"), F.col("v"))),
     )
-    live = (
-        edges.select("u", "v", F.col("w").cast("long").alias("w"))
-        .withColumn("pri", pri)
-        .localCheckpoint(eager=True)
-    )
-    matched = None
-    for _ in range(max_rounds):
-        if live.isEmpty():
-            break
+    matched: list[DataFrame] = []
+
+    def match(live: DataFrame, _r: int) -> DataFrame:
         inc = live.select(F.col("u").alias("x"), "pri").unionByName(
             live.select(F.col("v").alias("x"), "pri")
         )
         best = inc.groupBy("x").agg(F.min("pri").alias("bp"))
-        m = (
+        # read twice (the result and the retirement): materialized
+        m = materialize(
             live.join(
                 best.select(F.col("x").alias("u"), F.col("bp").alias("bu")),
                 "u",
@@ -2051,21 +1964,26 @@ def maximal_matching(
             )
             .where((F.col("pri") == F.col("bu")) & (F.col("pri") == F.col("bv")))
             .select("u", "v", "w")
-            .localCheckpoint(eager=True)
         )
-        matched = m if matched is None else matched.unionByName(m)
+        matched.append(m)
         gone = m.select(F.col("u").alias("x")).unionByName(
             m.select(F.col("v").alias("x"))
         ).distinct()
-        live = (
+        return (
             live.join(gone.withColumnRenamed("x", "u"), "u", "left_anti")
             .join(gone.withColumnRenamed("x", "v"), "v", "left_anti")
             .select("u", "v", "w", "pri")
-            .localCheckpoint(eager=True)
         )
-    if matched is None:
+
+    live = materialize(
+        edges.select("u", "v", F.col("w").cast("long").alias("w")).withColumn(
+            "pri", pri
+        )
+    )
+    iterate(live, match, max_rounds, until=DataFrame.isEmpty)
+    if not matched:
         return edges.select("u", "v", F.col("w").cast("long").alias("w")).limit(0)
-    return matched.orderBy("u", "v")
+    return _union_all(matched).orderBy("u", "v")
 
 
 def wl_refinement(
@@ -2109,11 +2027,10 @@ def wl_refinement(
             )
         )
 
-    summaries.append(_summary(colors, 0))
-    for r in range(1, rounds + 1):
-        # each round reads `colors` twice (neighbor side + own side):
-        # truncate lineage so round r doesn't replay rounds 1..r−1 2^r×
-        colors = colors.localCheckpoint(eager=True)
+    # each round reads ``colors`` twice (neighbor side + own side), so the
+    # lazy plan doubles per round and ``iterate`` cuts it every few rounds
+    def refine(colors: DataFrame, r: int) -> DataFrame:
+        summaries.append(_summary(colors, r - 1))
         nb = (
             e.join(colors.withColumnRenamed("node", "_v"), "_v")
             .groupBy(F.col("_u").alias("node"))
@@ -2127,7 +2044,7 @@ def wl_refinement(
                 ).alias("sig")
             )
         )
-        colors = colors.join(nb, "node", "left").select(
+        return colors.join(nb, "node", "left").select(
             "node",
             md5int8(
                 F.concat_ws(
@@ -2135,11 +2052,10 @@ def wl_refinement(
                 )
             ).alias("c"),
         )
-        summaries.append(_summary(colors, r))
-    out = summaries[0]
-    for s in summaries[1:]:
-        out = out.unionByName(s)
-    return out.orderBy("round")
+
+    colors = iterate(colors, refine, rounds)
+    summaries.append(_summary(colors, rounds))
+    return _union_all(summaries).orderBy("round")
 
 
 def butterfly_count(
@@ -2213,7 +2129,6 @@ def node2vec_walks(
     q: float = 1.0,
     n_walks: int = 2,
     walk_len: int = 3,
-    truncate_every: int = 0,
 ) -> DataFrame:
     """Second-order biased random walks (node2vec; Grover & Leskovec,
     KDD 2016) — deterministic_walks' upgrade from DeepWalk to the p/q
@@ -2243,27 +2158,16 @@ def node2vec_walks(
     engine-exact."""
     inv_p = int(round(1000000.0 / p))
     inv_q = int(round(1000000.0 / q))
-    # adj is referenced 2×/step plus the seed/step-1 joins — checkpointed
-    # so every reference reads one materialized table. The per-STEP state
-    # checkpoints that used to ride along were re-measured in r06: since
-    # the candidate scoring moved from array_max-over-transform() to
-    # explode + grouped max (see below), no lambda HOF remains in the
-    # step expressions, so the Catalyst relation-dedup/lambda mis-binding
-    # landmine that originally motivated them cannot bite, and composing
-    # the (short, default 3-step) walk lazily lets AQE reuse the repeated
-    # exchange subtrees instead of paying an eager driver job per step —
-    # interleaved A/B at sf0.1: 4.9–5.4 s → 3.6–3.7 s, rows bit-identical
-    # (tests/test_r6_opt.py). ``truncate_every=k`` restores lineage
-    # truncation every k steps for DEEP walks, where the lazy plan's
-    # step-in-step recompute is O(walk_len²).
-    adj = sym.groupBy("u").agg(
-        F.sort_array(F.collect_set("v")).alias("nbrs")
-    ).localCheckpoint(eager=True)
+    # adj is referenced 2×/step plus the seed/step-1 joins — materialized
+    # so every reference reads one table. The steps compose lazily (no
+    # lambda HOF remains in the step expressions, see below); the emitted
+    # rows of every step reference its walk state, so the lazy plan grows
+    # quadratically with walk length and ``iterate`` cuts deep walks.
+    adj = materialize(
+        sym.groupBy("u").agg(F.sort_array(F.collect_set("v")).alias("nbrs"))
+    )
+    from bran_spark.operators.kglearn import md5int8
 
-    def _trunc(df: DataFrame, step_no: int) -> DataFrame:
-        if truncate_every and step_no % truncate_every == 0:
-            return df.localCheckpoint(eager=True)
-        return df
     state = (
         adj.select(F.col("u").alias("start"))
         .select(
@@ -2277,35 +2181,26 @@ def node2vec_walks(
     out = state.select(
         "start", "walk_id", F.lit(0).alias("step"), F.col("cur").alias("node")
     )
-    # step 1: first-order uniform (no prev yet), q86's selection rule
-    idx = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.col("cur"), F.col("walk_id"), F.lit(1))),
-            1, 8,
-        ),
-        16, 10,
-    ).cast("long")
-    state = _trunc(
-        state.join(adj, state["cur"] == adj["u"])
-        .select(
+
+    def first_step(state: DataFrame) -> DataFrame:
+        # first-order uniform (no prev yet), q86's selection rule
+        idx = F.conv(
+            F.substring(
+                F.md5(F.concat_ws(":", F.col("cur"), F.col("walk_id"), F.lit(1))),
+                1, 8,
+            ),
+            16, 10,
+        ).cast("long")
+        return state.join(adj, state["cur"] == adj["u"]).select(
             "start",
             "walk_id",
             F.col("cur").alias("prev"),
             F.element_at(
                 F.col("nbrs"), (idx % F.size("nbrs") + 1).cast("int")
             ).alias("cur"),
-        ),
-        1,
-    )
-    out = out.union(
-        state.select(
-            "start", "walk_id", F.lit(1).alias("step"),
-            F.col("cur").alias("node"),
         )
-    )
-    from bran_spark.operators.kglearn import md5int8
 
-    for t in range(2, walk_len + 1):
+    def biased_step(state: DataFrame, t: int) -> DataFrame:
         a_cur = adj.select(F.col("u").alias("_cu"), F.col("nbrs").alias("nbrs"))
         a_prev = adj.select(
             F.col("u").alias("_pu"), F.col("nbrs").alias("pnbrs")
@@ -2323,7 +2218,7 @@ def node2vec_walks(
         # mis-bind; the price is one (start, walk_id)-keyed shuffle per
         # step, the same cadence every iterative graph op here pays.
         # (This lambda-free shape is also what makes the lazy step
-        # composition above safe — see the adj note.)
+        # composition safe — see the adj note.)
         w = F.col("w")
         wt = (
             F.when(w == F.col("prev"), F.lit(inv_p))
@@ -2354,7 +2249,7 @@ def node2vec_walks(
             "start", "walk_id", "cur",
             F.struct(score.alias("s"), w.alias("w")).alias("sw"),
         )
-        state = _trunc(
+        return (
             cand.groupBy("start", "walk_id", "cur")
             .agg(F.max("sw").alias("mx"))
             .select(
@@ -2362,15 +2257,20 @@ def node2vec_walks(
                 "walk_id",
                 F.col("cur").alias("prev"),
                 F.col("mx").getField("w").alias("cur"),
-            ),
-            t,
+            )
         )
-        out = out.union(
+
+    def step(walk: tuple, t: int) -> tuple:
+        state, out = walk
+        state = first_step(state) if t == 1 else biased_step(state, t)
+        return state, out.union(
             state.select(
                 "start", "walk_id", F.lit(t).alias("step"),
                 F.col("cur").alias("node"),
             )
         )
+
+    _, out = iterate((state, out), step, walk_len)
     return out.select(
         "start", F.col("walk_id").cast("int"), F.col("step").cast("int"),
         "node",
@@ -2397,11 +2297,8 @@ def hub_ablation(
     n_components, largest_cc), 'before' then 'after'."""
     from bran_spark.operators.components import connected_components
 
-    und = (
-        sym.select(F.col("u"), F.col("v"))
-        .where(F.col("u") < F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    und = materialize(
+        sym.select(F.col("u"), F.col("v")).where(F.col("u") < F.col("v")).distinct()
     )
     nodes = sym.select(F.col("u").alias("node")).distinct()
 
@@ -2434,18 +2331,14 @@ def hub_ablation(
         )
 
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    hubs = (
-        deg.orderBy(F.desc("d"), F.asc("u")).limit(k).select("u")
-    ).localCheckpoint(eager=True)
+    hubs = materialize(deg.orderBy(F.desc("d"), F.asc("u")).limit(k).select("u"))
     keep_nodes = nodes.join(
         F.broadcast(hubs.withColumnRenamed("u", "node")), "node", "left_anti"
     )
-    e_after = (
-        und.join(F.broadcast(hubs), "u", "left_anti")
-        .join(
+    e_after = materialize(
+        und.join(F.broadcast(hubs), "u", "left_anti").join(
             F.broadcast(hubs.withColumnRenamed("u", "v")), "v", "left_anti"
         )
-        .localCheckpoint(eager=True)
     )
     out = _stats("before", nodes, und).unionByName(
         _stats("after", keep_nodes, e_after)
@@ -2526,7 +2419,6 @@ def katz_centrality(
     beta_num: int = 5,
     beta_den: int = 100,
     scale: int = 1_000_000,
-    truncate_every: int = 0,
 ) -> DataFrame:
     """Truncated Katz centrality (Katz 1953) on a DIRECTED edge list in
     exact integer arithmetic: x(v) = Σ_{k≤iters} β^k · |walks of length
@@ -2549,45 +2441,39 @@ def katz_centrality(
     4 iterations; raise beta_den or drop scale beyond that.
 
     Shape: 1 shuffle per iteration (groupBy dst) + a node-set left join;
-    edges and nodes localCheckpoint once so the lineage stays O(1).
+    edges and nodes are materialized once and the rounds compose lazily
+    (a linear chain, see pagerank_fixed_point).
     Output: (node, katz_fp) — fixed-point micro units, floor(x·10^6/
     scale) semantics, base mass scale = every node's own empty walk."""
-    e = (
+    e = materialize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    # lazy linear chain (r06) — see pagerank_fixed_point; truncate_every
-    # restores per-k-round truncation for deep series
-    x = nodes.withColumn("x", F.lit(scale).cast("long"))
-    for i in range(iters):
+
+    def step(x: DataFrame, _r: int) -> DataFrame:
         raw = (
             e.join(x.withColumnRenamed("node", "src"), "src")
             .groupBy("dst")
             .agg(F.sum("x").cast("long").alias("s"))
             .withColumnRenamed("dst", "node")
         )
-        x = (
-            nodes.join(raw, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(scale).cast("long")
-                    + F.expr(
-                        f"(coalesce(s, 0L) * {beta_num}) DIV {beta_den}"
-                    ).cast("long")
-                ).alias("x"),
-            )
+        return nodes.join(raw, "node", "left").select(
+            "node",
+            (
+                F.lit(scale).cast("long")
+                + F.expr(
+                    f"(coalesce(s, 0L) * {beta_num}) DIV {beta_den}"
+                ).cast("long")
+            ).alias("x"),
         )
-        if truncate_every and (i + 1) % truncate_every == 0:
-            x = x.localCheckpoint(eager=True)
+
+    x = iterate(nodes.withColumn("x", F.lit(scale).cast("long")), step, iters)
     return x.select("node", F.col("x").alias("katz_fp"))
 
 
@@ -2622,35 +2508,50 @@ def scc(
 
     Shape per round: trim = two distinct-projections + two semi-joins on
     the shrinking edge list; each fixpoint hop = one edge join + one
-    min-aggregate + a change count (all on active nodes only); lineage
-    truncated per hop. No broadcast of anything graph-sized, no
+    min-aggregate + a change count (all on active nodes only),
+    materialized per hop. No broadcast of anything graph-sized, no
     collect. Output: (node, scc_id) for every node, scc_id = min member
     id; singletons (and self-loop-only nodes) map to themselves."""
-    e = (
+    e = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # node set from the ORIGINAL edges so self-loop-only nodes (dropped
     # from e) still appear in the output — the first trim peels them as
     # the singletons they are
-    active_nodes = (
+    active_nodes = materialize(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     done: list[DataFrame] = []
-    spark = edges.sparkSession
+
+    def _restrict(ed: DataFrame, keep: DataFrame) -> DataFrame:
+        return ed.join(keep.withColumnRenamed("node", "u"), "u", "left_semi").join(
+            keep.withColumnRenamed("node", "v"), "v", "left_semi"
+        )
+
+    def _trim(state: tuple, _r: int) -> tuple:
+        # peel nodes with no in- or no out-edge (singletons); the state's
+        # third frame is last hop's peel, empty at the fixed point
+        active, ed, peeled = state
+        done.append(peeled.select("node", F.col("node").alias("scc_id")))
+        keep = materialize(  # read three times below
+            ed.select(F.col("u").alias("node"))
+            .distinct()
+            .join(ed.select(F.col("v").alias("node")).distinct(), "node")
+        )
+        return (
+            active.join(keep, "node", "left_semi"),
+            _restrict(ed, keep),
+            active.join(keep, "node", "left_anti"),
+        )
 
     def _min_label_fixpoint(nodes, ed, forward: bool) -> DataFrame:
-        lab = nodes.withColumn("lab", F.col("node")).localCheckpoint(
-            eager=True
-        )
         a, b = ("u", "v") if forward else ("v", "u")
 
-        def _hop(lab):
+        def _hop(lab: DataFrame, _r: int) -> DataFrame:
             upd = (
                 ed.join(
                     lab.select(F.col("node").alias(a), "lab"), a
@@ -2658,9 +2559,9 @@ def scc(
                 .groupBy(F.col(b).alias("node"))
                 .agg(F.min("lab").alias("nlab"))
             )
-            # chg rides the checkpointed hop output so convergence needs
-            # only a filter scan of the checkpoint — not a second
-            # join-the-previous-round job per hop (r06)
+            # chg rides the materialized hop output so convergence needs
+            # only a filter scan of it — not a second join-the-previous-
+            # round job per hop
             return lab.join(upd, "node", "left").select(
                 "node",
                 F.least(
@@ -2672,87 +2573,45 @@ def scc(
                 ).alias("chg"),
             )
 
-        # one hop per materialization: a 2-hop lazy batch was measured
-        # SLOWER (each hop references lab twice, so the un-materialized
-        # inner hop re-executes — ~3 hop-computations per 2 hops) (r06)
-        for _ in range(max_hops):
-            nxt = _hop(lab).localCheckpoint(eager=True)
-            changed = nxt.where("chg").limit(1).count()
-            lab = nxt.select("node", "lab")
-            if changed == 0:
-                return lab
-        raise RuntimeError(
-            f"scc: min-label fixpoint did not converge in {max_hops} hops"
+        # one hop per materialization: each hop references lab twice, so
+        # a lazy inner hop would re-execute
+        lab = _converge(
+            materialize(nodes.withColumn("lab", F.col("node"))), _hop, max_hops,
+            lambda lab: lab.where("chg").isEmpty(), "scc min-label fixpoint",
         )
+        return lab.select("node", "lab")
 
-    for _ in range(max_rounds):
-        # ---- trim: peel nodes with no in- or no out-edge (singletons)
-        for _ in range(max_hops):
-            srcs = e.select(F.col("u").alias("node")).distinct()
-            dsts = e.select(F.col("v").alias("node")).distinct()
-            keep = srcs.join(dsts, "node").localCheckpoint(eager=True)
-            trimmed = active_nodes.join(keep, "node", "left_anti")
-            n_trimmed = trimmed.limit(1).count()
-            if n_trimmed == 0:
-                break
-            done.append(
-                trimmed.select(
-                    "node", F.col("node").alias("scc_id")
-                ).localCheckpoint(eager=True)
-            )
-            active_nodes = active_nodes.join(
-                keep, "node", "left_semi"
-            ).localCheckpoint(eager=True)
-            e = (
-                e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-                .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            raise RuntimeError(
-                f"scc: trim did not converge in {max_hops} hops"
-            )
-        if active_nodes.limit(1).count() == 0:
-            break
+    def _peel(state: tuple, _r: int) -> tuple:
+        active, ed = state
+        active, ed, _ = _converge(
+            (active, ed, active.limit(0)), _trim, max_hops,
+            lambda s: s[2].isEmpty(), "scc trim",
+        )
+        if active.isEmpty():
+            return active, ed
         # ---- min-label both directions, peel the agreeing SCCs
         # the forward and backward fixpoints are independent (both read
-        # only the frozen active_nodes/e checkpoints), so their per-hop
-        # job streams run from two driver threads and interleave on the
-        # executors (guide §2.6 — the PQ-codebook pattern). Results are
+        # only the frozen active/ed frames), so their per-hop job streams
+        # run from two driver threads and interleave on the executors
+        # (guide §2.6 — the PQ-codebook pattern). Results are
         # bit-identical: each loop's hops stay ordered within its thread.
-        # Interleaved A/B at sf0.1 (q281, rows identical): 5.6–6.4 s
-        # sequential → 3.7–4.2 s overlapped.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_fut = pool.submit(_min_label_fixpoint, active_nodes, e, True)
-            b_fut = pool.submit(_min_label_fixpoint, active_nodes, e, False)
+            f_fut = pool.submit(_min_label_fixpoint, active, ed, True)
+            b_fut = pool.submit(_min_label_fixpoint, active, ed, False)
             f, bk = f_fut.result(), b_fut.result()
-        resolved = (
+        resolved = materialize(
             f.join(bk.withColumnRenamed("lab", "blab"), "node")
             .where(F.col("lab") == F.col("blab"))
             .select("node", F.col("lab").alias("scc_id"))
-            .localCheckpoint(eager=True)
         )
         done.append(resolved)
-        active_nodes = active_nodes.join(
-            resolved, "node", "left_anti"
-        ).localCheckpoint(eager=True)
-        keep = active_nodes
-        e = (
-            e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        if active_nodes.limit(1).count() == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"scc: peeling did not converge in {max_rounds} rounds"
-        )
-    if not done:
-        return spark.createDataFrame([], "node string, scc_id string")
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    return out
+        active = active.join(resolved, "node", "left_anti")
+        return active, _restrict(ed, active)
+
+    _converge(
+        (active_nodes, e), _peel, max_rounds, lambda s: s[0].isEmpty(),
+        "scc peeling",
+    )
+    return _union_all(done)

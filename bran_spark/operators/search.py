@@ -466,9 +466,8 @@ def textrank_keywords(
     F4 max-length truncate) collapsed to a DISTINCT word-pair edge list
     — vocabulary-sized (Zipf-bounded), orders of magnitude below the
     token stream. Ranking reuses graphalgo.pagerank_fixed_point (exact
-    integer arithmetic, one shuffle per iteration, lineage truncated
-    per round), so the scores are bit-exact across engines and
-    partitionings. Returns the top-k (word, rank_fp)."""
+    integer arithmetic, one shuffle per iteration), so the scores are
+    bit-exact across engines and partitionings. Returns the top-k (word, rank_fp)."""
     from bran_spark.operators.graphalgo import (
         pagerank_fixed_point,
         symmetric_edges,

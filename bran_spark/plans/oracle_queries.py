@@ -55,24 +55,22 @@ ORACLE: dict[str, str] = {}
 
 def _q(name: str, sql: str | None = None):
     def deco(fn):
-        # Session hygiene (r06, guide §5 "unpersist when done"): operators
-        # persist() intermediates that are consumed multiple times WITHIN
-        # one returned plan, but the consumer's action runs after the
-        # operator returns, so no operator can unpersist its own cache.
-        # In a long-lived session that runs many registry queries back to
-        # back (bench.py times 85 of them), those InMemoryRelations pile
-        # up in the shared CacheManager: storageFraction-protected memory
-        # shrinks the execution pool and late queries spill (q138 measured
-        # 22.6 s in-bench vs ~8 s solo on an identical plan). Each query
-        # therefore drops every cached relation leaked by its predecessors
-        # on entry. localCheckpoint blocks (e.g. the _FX_MEMO fixture
-        # memo) live outside the CacheManager and are untouched.
+        # Session hygiene (guide §5 "unpersist when done"): some operators
+        # (reasoning.py, the pipeline's triples) persist() intermediates
+        # that are consumed multiple times WITHIN one returned plan, but the
+        # consumer's action runs after the operator returns, so no operator
+        # can unpersist its own cache. In a long-lived session that runs
+        # many registry queries back to back (bench.py times 85 of them),
+        # those InMemoryRelations pile up in the shared CacheManager:
+        # storageFraction-protected memory shrinks the execution pool and
+        # late queries spill (q138 measured 22.6 s in-bench vs ~8 s solo on
+        # an identical plan). Each query therefore drops every cached
+        # relation leaked by its predecessors on entry. localCheckpoint
+        # blocks (e.g. the _FX_MEMO fixture memo) live outside the
+        # CacheManager and are untouched.
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass  # never let hygiene break a query (e.g. mock sessions)
+            spark.catalog.clearCache()
             return fn(spark, sf_dir)
 
         QUERIES[name] = wrapped

@@ -53,25 +53,6 @@ def test_pagerank_matches_local_reference(spark):
     assert sum(got.values()) <= len(adj) * PR_SCALE
 
 
-def test_pagerank_float_agrees_with_integer_twin(spark):
-    """The float production path must agree with the bit-exact integer
-    oracle twin within 1e-9 relative — the integer DIV truncation is
-    ~1e-12/op, so 5 iterations over a small graph stay far inside that.
-    Documents the division of labor: integer = oracle (bit-exact,
-    ~10^5-node bound at scale=10^12), float = production (no node bound)."""
-    from bran_spark.operators.graphalgo import pagerank_float
-
-    pairs = [("a", "x"), ("a", "y"), ("b", "x"), ("c", "y"), ("c", "z"),
-             ("b", "z"), ("d", "x")]
-    sym = symmetric_edges(_edges(spark, pairs))
-    fp = {r.entity: r.rank_fp / PR_SCALE
-          for r in pagerank_fixed_point(sym, iters=5).collect()}
-    fl = {r.entity: r.rank for r in pagerank_float(sym, iters=5).collect()}
-    assert set(fp) == set(fl)
-    for k in fp:
-        assert abs(fp[k] - fl[k]) <= 1e-9 * max(abs(fl[k]), 1.0), k
-
-
 def test_triangle_counts_no_vertex_broadcast_by_default(spark):
     """Scale guard: the |V|-sized degree-key attach must NOT be broadcast
     unless explicitly requested — a 10^8-node vertex set would OOM the

@@ -254,9 +254,42 @@ def test_mention_dict_candidates_matches_groupby_formulation(spark):
     assert len(_rows(got, cols)) > 0
 
 
-def test_lazy_loops_match_truncated(spark):
-    """Lazy iteration chains must be bit-identical to the per-round
-    truncated form (truncate_every=1 replays the old shape)."""
+def _truncations(monkeypatch):
+    """Count the materializations ``iterate`` itself decides on."""
+    from bran_spark.operators import fixpoint
+
+    calls = []
+    real = fixpoint.materialize
+
+    def counting(df):
+        calls.append(1)
+        return real(df)
+
+    monkeypatch.setattr(fixpoint, "materialize", counting)
+    return calls
+
+
+_LOOP_PAIRS = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
+               ("e", "a"), ("b", "d")]
+
+
+def _duck_pairs():
+    import duckdb
+
+    con = duckdb.connect()
+    values = ", ".join(f"('{s}', '{o}')" for s, o in _LOOP_PAIRS)
+    con.execute(
+        f"CREATE TABLE pairs AS SELECT * FROM (VALUES {values}) t(subj, obj)"
+    )
+    return con
+
+
+def test_lazy_loops_match_references_past_truncation(spark, monkeypatch):
+    """Each fixed-round loop at its registry round count and at 4× that
+    count — deep enough that ``iterate`` materializes mid-loop — equals its
+    reference unrolled to the same count: the DuckDB oracle SQL for
+    PageRank and HITS, local recurrences for the others. The linear
+    chains stay fully lazy at registry counts."""
     from bran_spark.operators.graphalgo import (
         hits_fixed_point,
         katz_centrality,
@@ -265,60 +298,162 @@ def test_lazy_loops_match_truncated(spark):
         symmetric_edges,
         weighted_sssp,
     )
+    from bran_spark.plans.oracle_queries import _hits_iter_sql, _pr_iter_sql
 
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")],
-        ["subj", "obj"],
-    )
+    pairs = spark.createDataFrame(_LOOP_PAIRS, ["subj", "obj"])
     sym = symmetric_edges(pairs)
-    assert _rows(
-        pagerank_fixed_point(sym, iters=3), ["entity", "rank_fp"]
-    ) == _rows(
-        pagerank_fixed_point(sym, iters=3, truncate_every=1),
-        ["entity", "rank_fp"],
-    )
     seeds = spark.createDataFrame([("a",)], ["u"])
-    assert _rows(
-        personalized_pagerank(sym, seeds, iters=3), ["entity", "rank_fp"]
-    ) == _rows(
-        personalized_pagerank(sym, seeds, iters=3, truncate_every=1),
-        ["entity", "rank_fp"],
+    adj: dict[str, list[str]] = {}
+    for s, o in _LOOP_PAIRS:
+        adj.setdefault(s, []).append(o)
+        adj.setdefault(o, []).append(s)
+    weight = {(u, v): (ord(u) + 2 * ord(v)) % 7 + 1
+              for u in adj for v in adj[u]}
+    wedges = spark.createDataFrame(
+        [(u, v, w) for (u, v), w in weight.items()], "u string, v string, w long"
     )
-    cols = ["node", "hub_fp", "auth_fp"]
-    assert _rows(hits_fixed_point(pairs, iters=3), cols) == _rows(
-        hits_fixed_point(pairs, iters=3, truncate_every=1), cols
-    )
-    assert _rows(katz_centrality(pairs, iters=3), ["node", "katz_fp"]) == _rows(
-        katz_centrality(pairs, iters=3, truncate_every=1), ["node", "katz_fp"]
-    )
-    wedges = sym.withColumn("w", F.lit(7).cast("long"))
-    assert _rows(
-        weighted_sssp(wedges, seeds, iters=3), ["entity", "dist"]
-    ) == _rows(
-        weighted_sssp(wedges, seeds, iters=3, truncate_every=1),
-        ["entity", "dist"],
-    )
+    con = _duck_pairs()
+    truncated = _truncations(monkeypatch)
+
+    def pr_ref(n):
+        scale = 10**12
+        sql = f"""
+        WITH sym AS (SELECT subj AS u, obj AS v FROM pairs
+                     UNION SELECT obj AS u, subj AS v FROM pairs),
+        deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
+        r0 AS (SELECT u, deg, CAST({scale} AS BIGINT) AS rank FROM deg)
+        {_pr_iter_sql(n, scale * 15 // 100)}
+        SELECT u, rank FROM r{n}"""
+        return sorted(con.execute(sql).fetchall())
+
+    def hits_ref(n):
+        sql = "WITH _ AS (SELECT 1)" + _hits_iter_sql(n, 10**6)
+        return sorted(con.execute(sql).fetchall())
+
+    def ppr_ref(n, scale=10**12):
+        base = scale * 15 // 100
+        rank = {u: (scale if u == "a" else 0) for u in adj}
+        for _ in range(n):
+            sums = dict.fromkeys(adj, 0)
+            for u, nbrs in adj.items():
+                for v in nbrs:
+                    sums[v] += rank[u] // len(nbrs)
+            rank = {u: (base if u == "a" else 0) + 85 * sums[u] // 100
+                    for u in adj}
+        return sorted((u, r) for u, r in rank.items() if r > 0)
+
+    def katz_ref(n, scale=1_000_000):
+        x = dict.fromkeys(adj, scale)
+        for _ in range(n):
+            x = {v: scale + 5 * sum(x[u] for u, w in _LOOP_PAIRS if w == v)
+                 // 100 for v in adj}
+        return sorted(x.items())
+
+    def sssp_ref(n):
+        dist = {"a": 0}
+        for _ in range(n):
+            nxt = dict(dist)
+            for (u, v), w in weight.items():
+                if u in dist:
+                    nxt[v] = min(nxt.get(v, dist[u] + w), dist[u] + w)
+            dist = nxt
+        return sorted(dist.items())
+
+    loops = [  # (name, registry count, lazy at that count?, run, ref)
+        ("pagerank", 5, True,
+         lambda n: pagerank_fixed_point(sym, iters=n), pr_ref),
+        ("ppr", 5, True,
+         lambda n: personalized_pagerank(sym, seeds, iters=n), ppr_ref),
+        ("hits", 4, False, lambda n: hits_fixed_point(pairs, iters=n), hits_ref),
+        ("katz", 4, True, lambda n: katz_centrality(pairs, iters=n), katz_ref),
+        ("sssp", 4, False, lambda n: weighted_sssp(wedges, seeds, iters=n),
+         sssp_ref),
+    ]
+    for name, n, lazy, run, ref in loops:
+        for rounds in (n, 4 * n):
+            truncated.clear()
+            got = sorted(tuple(r) for r in run(rounds).collect())
+            assert got == ref(rounds), (name, rounds)
+            if rounds > n:
+                assert truncated, (name, rounds)
+            elif lazy:
+                assert not truncated, (name, rounds)
 
 
-def test_node2vec_lazy_matches_truncated(spark):
-    """r06b: node2vec steps compose lazily by default (the step
-    expressions are lambda-HOF-free, so the relation-dedup mis-binding
-    that motivated per-step checkpoints cannot bite); truncate_every=1
-    replays the old per-step-checkpointed shape bit-identically."""
+def _node2vec_replay(edges, p, q, n_walks, walk_len):
+    """Local replay of node2vec_walks' hash-driven Gumbel-max sampling."""
+    import hashlib
+    import math
+
+    adj: dict[str, set[str]] = {}
+    for s, o in edges:
+        adj.setdefault(s, set()).add(o)
+        adj.setdefault(o, set()).add(s)
+    nbrs = {k: sorted(v) for k, v in adj.items()}
+
+    def h8(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+    inv_p, inv_q = round(1e6 / p), round(1e6 / q)
+    out = []
+    for start in nbrs:
+        for wid in range(n_walks):
+            cur = start
+            out.append((start, wid, 0, cur))
+            prev, cur = cur, nbrs[cur][h8(f"{cur}:{wid}:1") % len(nbrs[cur])]
+            out.append((start, wid, 1, cur))
+            for t in range(2, walk_len + 1):
+                best = None
+                for w in nbrs[cur]:
+                    wt = (inv_p if w == prev
+                          else 1000000 if w in adj[prev] else inv_q)
+                    u = ((h8(f"{start}:{cur}:{w}:{wid}:{t}") % 1000000)
+                         + 0.5) / 1000000.0
+                    sc = round(math.log(wt) - math.log(-math.log(u)), 6)
+                    if best is None or (sc, w) > best:
+                        best = (sc, w)
+                prev, cur = cur, best[1]
+                out.append((start, wid, t, cur))
+    return sorted(out)
+
+
+def test_node2vec_matches_replay_past_truncation(spark, monkeypatch):
+    """node2vec at q266's walk length stays one lazy plan; at 4× that
+    length ``iterate`` materializes mid-walk. Both equal the local replay."""
     from bran_spark.operators.graphalgo import node2vec_walks, symmetric_edges
 
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
-         ("e", "a"), ("b", "d")],
-        ["subj", "obj"],
+    sym = symmetric_edges(spark.createDataFrame(_LOOP_PAIRS, ["subj", "obj"]))
+    truncated = _truncations(monkeypatch)
+    for walk_len in (3, 12):
+        truncated.clear()
+        got = sorted(
+            tuple(r)
+            for r in node2vec_walks(
+                sym, p=4.0, q=0.25, n_walks=2, walk_len=walk_len
+            ).collect()
+        )
+        assert got == _node2vec_replay(_LOOP_PAIRS, 4.0, 0.25, 2, walk_len)
+        assert bool(truncated) == (walk_len > 3)
+
+
+def test_loop_plans_stay_under_plan_bound(spark):
+    """q56, q161 and q266 built at 4× their registry round counts return
+    plans under fixpoint.MAX_PLAN_NODES. Plan size does not depend on the
+    data, so a small graph stands in for the fixture graph."""
+    from bran_spark.operators.fixpoint import MAX_PLAN_NODES, _plan_nodes
+    from bran_spark.operators.graphalgo import (
+        hits_fixed_point,
+        node2vec_walks,
+        pagerank_fixed_point,
+        symmetric_edges,
     )
+
+    pairs = spark.createDataFrame(_LOOP_PAIRS, ["subj", "obj"])
     sym = symmetric_edges(pairs)
-    cols = ["start", "walk_id", "step", "node"]
-    assert _rows(
-        node2vec_walks(sym, p=4.0, q=0.25, n_walks=2, walk_len=4), cols
-    ) == _rows(
-        node2vec_walks(
-            sym, p=4.0, q=0.25, n_walks=2, walk_len=4, truncate_every=1
-        ),
-        cols,
-    )
+    built = {
+        "q56": pagerank_fixed_point(sym, iters=20),
+        "q161": hits_fixed_point(pairs, iters=16),
+        "q266": node2vec_walks(sym, p=4.0, q=0.25, n_walks=2, walk_len=12),
+    }
+    for name, df in built.items():
+        assert _plan_nodes(df) < MAX_PLAN_NODES, (name, _plan_nodes(df))
