@@ -54,13 +54,6 @@ def stopword_ratio(col: str | Column) -> Column:
     ) / F.greatest(F.size(w), F.lit(1))
 
 
-def avg_word_len(col: str | Column) -> Column:
-    w = words(col)
-    return F.aggregate(
-        w, F.lit(0), lambda acc, x: acc + F.length(x)
-    ) / F.greatest(F.size(w), F.lit(1))
-
-
 def punct_ratio(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.size(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bran_spark.functions.text import shingles, shingles_of_array, words
+from bran_spark.operators.fixpoint import materialize
 
 
 def _even_parallelism(df: DataFrame) -> DataFrame:
@@ -163,7 +164,7 @@ def _shingle_common_sizes(
     # (per-doc sizes, the hot-shingle df pass, and both self-join sides)
     # — lazily each one re-ran the shingle split+explode over the corpus,
     # ~2.5-4 s per replay at sf0.1
-    sh = sh.localCheckpoint(eager=True)
+    sh = materialize(sh)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     hot = sh.groupBy("shingle").agg(F.count("*").alias("df")).where(
         F.col("df") > max_df
@@ -639,9 +640,9 @@ def semantic_dedup(
     # the survivor anti-join — lazily each reference re-ran the whole
     # Lloyd chain (r06; at 100 TB this is the write-partitioned-by-cell
     # materialization the docstring already mandates)
-    cells = kmeans_cells(
-        emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    cells = materialize(
+        kmeans_cells(emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
+    )
     dropped = (
         _intra_cell_cosine_pairs(cells, tau)
         .select(F.col("id_b").alias("vec_id"))
@@ -936,9 +937,9 @@ def semdedup_pairs(
     from bran_spark.operators.similarity import kmeans_cells
 
     # materialized once — both self-join sides read it (see semantic_dedup)
-    cells = kmeans_cells(
-        emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    cells = materialize(
+        kmeans_cells(emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
+    )
     return _intra_cell_cosine_pairs(cells, threshold)
 
 

@@ -1,7 +1,10 @@
-"""The one loop helper and the one materialization point of the graph
-operators (operators/graphalgo.py, operators/components.py).
+"""The program's one materialization point and its round-loop helpers.
 
-``materialize`` computes a frame once and cuts its lineage
+Every operator, registry entry and job that needs rows computed once
+calls ``materialize``; nothing else in the package calls
+``localCheckpoint``, ``persist`` or ``cache``, so no cached relation
+outlives the plan that made it. ``materialize`` computes a frame once
+and cuts its lineage
 (``localCheckpoint``; a cluster job with a reliable checkpoint directory
 would use ``checkpoint`` — same call shape). Later plans read the rows as
 a leaf scan. Unlike ``persist()`` nothing lands in the session's
@@ -23,6 +26,10 @@ tuple of them, and decides by itself where to materialize:
   ``until(state)`` decides whether to stop. The test is a Spark action
   anyway; on an unmaterialized state it would compute the round once for
   the test and again for the next round.
+
+``converge`` is ``iterate`` for loops whose result is only valid at the
+fixed point, and ``row_count_unchanged`` is the ``until`` test of loops
+whose row set only grows or only shrinks.
 """
 
 from __future__ import annotations
@@ -85,3 +92,35 @@ def iterate(
         if until(state):
             break
     return state
+
+
+def converge(state: State, step, rounds: int, until, what: str) -> State:
+    """``iterate`` for a loop whose result is only valid at its fixed
+    point: raises instead of returning a partial result when ``until``
+    never held within ``rounds``."""
+    held = [False]
+
+    def test(s) -> bool:
+        held[0] = until(s)
+        return held[0]
+
+    state = iterate(state, step, rounds, until=test)
+    if not held[0]:
+        raise RuntimeError(
+            f"{what} did not converge in {rounds} rounds; raise the round limit"
+        )
+    return state
+
+
+def row_count_unchanged():
+    """``until`` test for loops whose row set only grows or only shrinks:
+    true once a round leaves the row count unchanged, so the set is
+    stable. The first call only records a count, so the first round can
+    hold only if the caller seeds the test with one call on the input."""
+    counts = [None]
+
+    def test(df: DataFrame) -> bool:
+        counts.append(df.count())
+        return counts[-1] == counts[-2]
+
+    return test

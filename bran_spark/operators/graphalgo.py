@@ -45,7 +45,12 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bran_spark.operators.fixpoint import iterate, materialize
+from bran_spark.operators.fixpoint import (
+    converge,
+    iterate,
+    materialize,
+    row_count_unchanged,
+)
 
 PR_SCALE = 10**12      # fixed-point rank unit (1.0 == 10^12)
 PR_DAMP_NUM = 85       # damping factor 0.85 as a ratio — integer math only
@@ -66,24 +71,6 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
 
 
-def _converge(state, step, rounds: int, until, what: str):
-    """``iterate`` for a loop whose result is only valid at its fixed
-    point: raises instead of returning a partial result when ``until``
-    never held within ``rounds``."""
-    held = [False]
-
-    def test(s) -> bool:
-        held[0] = until(s)
-        return held[0]
-
-    state = iterate(state, step, rounds, until=test)
-    if not held[0]:
-        raise RuntimeError(
-            f"{what} did not converge in {rounds} rounds; raise the round limit"
-        )
-    return state
-
-
 def _search(first: DataFrame, expand, rounds: int) -> DataFrame:
     """Level-synchronous search: round r runs ``expand(frontier, seen, r)``
     — the rows first reached at round r, given last round's frontier and
@@ -100,18 +87,6 @@ def _search(first: DataFrame, expand, rounds: int) -> DataFrame:
 
     last = iterate(first, step, rounds, until=DataFrame.isEmpty)
     return _union_all(found + [last])
-
-
-def _row_count_unchanged():
-    """``until`` test for shrinking loops: true once a round leaves the
-    row count unchanged (rows only ever leave, so the set is stable)."""
-    counts = [None]
-
-    def test(df: DataFrame) -> bool:
-        counts.append(df.count())
-        return counts[-1] == counts[-2]
-
-    return test
 
 
 def pagerank_fixed_point(
@@ -417,8 +392,8 @@ def kcore(sym: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
 
     # chain-like graphs peel only their endpoints per round — returning
     # the partial peel as "the k-core" would be silently wrong
-    edges = _converge(
-        materialize(sym), peel, max_rounds, _row_count_unchanged(),
+    edges = converge(
+        materialize(sym), peel, max_rounds, row_count_unchanged(),
         "kcore peeling (chain-like graphs need ~diameter/2 rounds)",
     )
     return edges.groupBy("u").agg(
@@ -668,9 +643,9 @@ def cycle_residue(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
             .select("u", "v")
         )
 
-    e = _converge(
+    e = converge(
         materialize(edges.select("u", "v").distinct()), trim, max_rounds,
-        _row_count_unchanged(),
+        row_count_unchanged(),
         "cycle_residue (long acyclic tails trim one layer a round)",
     )
     return (
@@ -730,7 +705,7 @@ def luby_mis(sym: DataFrame, max_rounds: int = 8) -> DataFrame:
             nbr_of_sel, "u", "left_anti"
         )
 
-    _converge(
+    converge(
         materialize(sym.select("u").distinct()), select_round, max_rounds,
         DataFrame.isEmpty, "luby_mis (expected O(log n) rounds w.h.p.)",
     )
@@ -835,7 +810,7 @@ def composition_body(t1: DataFrame, t2: DataFrame | None = None) -> DataFrame:
     p1(x, y) AND p2(y, z): ONE self-equi-join on the mid entity y over
     (subj, pred, obj) triple tables. Shared by mine_path_rules and
     apply_rules so a mine-then-apply pipeline can materialize it once
-    (checkpoint it and pass it to both — see q143)."""
+    and pass it to both."""
     if t2 is None:
         t2 = t1
     return (
@@ -1049,7 +1024,6 @@ def apply_rules(
     triples: DataFrame,
     rules: DataFrame,
     min_confidence: float = 0.8,
-    checkpoint: bool = True,
     body: DataFrame | None = None,
 ) -> DataFrame:
     """One forward-chaining step of KB completion: for every accepted rule
@@ -1064,12 +1038,6 @@ def apply_rules(
     mid-entity self-join as mine_path_rules (DISTINCT-ed before the rule
     attach), and novelty is one left-anti join on the full triple key.
     Inferred triples carry their rule's confidence as a provenance score.
-
-    ``checkpoint`` truncates the DISTINCT-ed triple table's lineage so the
-    two consumers (body join's both sides + novelty anti-join) don't each
-    re-run the upstream scan — mine-then-apply pipelines otherwise pay the
-    triple materialization twice per stage (on a cluster: write the
-    triple table to storage between the mining and inference passes).
     """
     acc = F.broadcast(
         rules.where(F.col("confidence") >= min_confidence).select(
@@ -1077,8 +1045,6 @@ def apply_rules(
         )
     )
     t = triples.select("subj", "pred", "obj").distinct()
-    if checkpoint:
-        t = materialize(t)
     if body is None:
         body = composition_body(t)
     inferred = (
@@ -2575,7 +2541,7 @@ def scc(
 
         # one hop per materialization: each hop references lab twice, so
         # a lazy inner hop would re-execute
-        lab = _converge(
+        lab = converge(
             materialize(nodes.withColumn("lab", F.col("node"))), _hop, max_hops,
             lambda lab: lab.where("chg").isEmpty(), "scc min-label fixpoint",
         )
@@ -2583,7 +2549,7 @@ def scc(
 
     def _peel(state: tuple, _r: int) -> tuple:
         active, ed = state
-        active, ed, _ = _converge(
+        active, ed, _ = converge(
             (active, ed, active.limit(0)), _trim, max_hops,
             lambda s: s[2].isEmpty(), "scc trim",
         )
@@ -2610,7 +2576,7 @@ def scc(
         active = active.join(resolved, "node", "left_anti")
         return active, _restrict(ed, active)
 
-    _converge(
+    converge(
         (active_nodes, e), _peel, max_rounds, lambda s: s[0].isEmpty(),
         "scc peeling",
     )

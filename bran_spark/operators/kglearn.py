@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bran_spark.operators.fixpoint import materialize
+
 __all__ = ["md5int8", "int_embedding", "transe_rank_eval", "feature_propagation"]
 
 EMB_DIM = 8
@@ -95,14 +97,13 @@ def transe_rank_eval(
     ``cand_sample_mod=m`` additionally confines the candidate pool to
     c == o or md5(c~s|p) % m == 0 — the sampled-negatives protocol that
     bounds the expansion when a tail type is corpus-scale."""
-    # localCheckpoint (r06): trip is consumed three times (test sample,
-    # candidate pool, true-tail attach). The previous persist() form
+    # materialized (r06): trip is consumed three times (test sample,
+    # candidate pool, true-tail attach). A cached InMemoryRelation
     # measured ~2× slower (10.2 s vs 5.2 s cold, 5.6 vs 4.8 warm at
-    # sf0.1) — an InMemoryRelation referenced from several branches
-    # defeats AQE shuffle-stage reuse (the personalized_pagerank
-    # finding). The historical relation-dedup landmine that motivated
-    # persist() (LogicalRDD reused 3× under the window+filter-join rank
-    # shape) no longer applies to the inclusion–exclusion shape below,
+    # sf0.1) — referenced from several branches it defeats AQE
+    # shuffle-stage reuse (the personalized_pagerank finding). The
+    # historical relation-dedup landmine that motivated caching
+    # (LogicalRDD reused 3× under the window+filter-join rank shape) no longer applies to the inclusion–exclusion shape below,
     # whose true-tail side joins through a SEVERED renamed leaf;
     # test_kglearn's test_sample_mod=1 cases gate this.
     # assume_distinct=True skips the defensive DISTINCT shuffle for
@@ -111,7 +112,7 @@ def transe_rank_eval(
     trip = triples.select("subj", "pred", "obj")
     if not assume_distinct:
         trip = trip.distinct()
-    trip = trip.localCheckpoint(eager=True)
+    trip = materialize(trip)
     # single-reference entity pool (explode, not a two-branch union): the
     # input relation already appears 3× in this plan (test, filter,
     # pool); a 4th copy trips Catalyst's relation dedup on in-memory
@@ -238,8 +239,8 @@ def transe_rank_eval(
     # true_score rides the expansion rows (constant per group), so
     # beats_all is one straight map-side-combining aggregate — no attach
     # join, no window. The true-tail side reads a SEVERED leaf of the
-    # sample-sized test table (localCheckpoint + renamed columns) with
-    # explicit join keys: a USING join of the persisted ``trip`` against
+    # sample-sized test table (materialized + renamed columns) with
+    # explicit join keys: a USING join of the materialized ``trip`` against
     # a trip-derived frame re-trips the relation-dedup mis-binding
     # documented above (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND /
     # ArrayIndexOutOfBounds in generated code).
@@ -264,12 +265,14 @@ def transe_rank_eval(
             ).alias("_ball")
         )
     )
-    test_t = test.select(
-        F.col("subj").alias("t_subj"),
-        F.col("pred").alias("t_pred"),
-        F.col("obj").alias("t_obj"),
-        F.col("true_score").alias("t_ts"),
-    ).localCheckpoint(eager=True)
+    test_t = materialize(
+        test.select(
+            F.col("subj").alias("t_subj"),
+            F.col("pred").alias("t_pred"),
+            F.col("obj").alias("t_obj"),
+            F.col("true_score").alias("t_ts"),
+        )
+    )
     # true tails of each sampled (s, p), scored row-locally; confined to
     # the pool the same way the expansion is (same type as o, and the
     # cand_sample_mod coin when sampling negatives)
@@ -370,8 +373,8 @@ def feature_propagation(
     (ent, in_deg, f1_mean, n_paths2, f2_mean)."""
     # lazy on purpose (re-measured r06b): the distinct edge view feeds
     # five consumers, but they all hang off the SAME distinct-exchange
-    # subtree, which AQE materializes once and reuses — an eager
-    # localCheckpoint here only added a serial barrier + block-manager
+    # subtree, which AQE materializes once and reuses — materializing
+    # it here only added a serial barrier + block-manager
     # write (interleaved A/B at sf0.1: ckpt 2.6–3.0 s vs lazy 2.1–2.4 s
     # for q249 end to end)
     e = edges.select(

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bran_spark.operators.components import connected_components
+from bran_spark.operators.fixpoint import materialize
 
 
 def sameas_rewrite(
@@ -54,16 +55,13 @@ def sameas_rewrite(
 
     Both joins are left joins — entities with no sameAs statement keep
     their own id — and both are shuffle joins by design (see module
-    scale notes). The canonical map is persisted: it is consumed by BOTH
-    joins, and its closing distinct would otherwise re-shuffle per
+    scale notes). The canonical map is materialized: it is consumed by
+    BOTH joins, and its closing distinct would otherwise re-shuffle per
     consumption (the star-contraction rounds themselves are
-    localCheckpointed inside connected_components and never replay)."""
-    # localCheckpoint, not persist (r06): both rewrite joins read it, and
-    # the cached-relation form measured slower cold with no warm upside
-    # (AQE stage-reuse penalty — see personalized_pagerank)
-    canon = connected_components(sameas, src=src, dst=dst).localCheckpoint(
-        eager=True
-    )
+    materialized inside connected_components and never replay)."""
+    # a cached relation instead measured slower cold with no warm upside
+    # (r06; AQE stage-reuse penalty — see personalized_pagerank)
+    canon = materialize(connected_components(sameas, src=src, dst=dst))
     rewritten = (
         triples.select(
             F.col("subj").alias("subj0"),

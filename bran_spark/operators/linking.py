@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bran_spark.operators.fixpoint import iterate, materialize
+
 
 def link_mentions(mentions: DataFrame, mesh_dict: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Returns (linked, unlinked).
@@ -116,7 +118,6 @@ def truth_discovery(
     source_col: str = "source",
     key_col: str = "key",
     value_col: str = "value",
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Conflict resolution for functional attributes by iterated
     source-trust voting (Sums / TruthFinder-lite): when heterogeneous
@@ -136,45 +137,42 @@ def truth_discovery(
     cross-engine hash; the final arg-max breaks exact confidence ties by
     value string, deterministically.
 
-    The distinct claim set is ALWAYS materialized once (localCheckpoint):
-    it is re-read twice per round, and an r06 A/B at sf0.1 measured the
-    claims-only checkpoint fastest (≈5.6 s vs 5.9–9.7 s fully lazy,
-    warm min-of-3). ``checkpoint=True`` additionally lineage-truncates
-    the per-round trust table for deep ``iters`` — at the default 2
-    rounds that measured SLOWER (≈10 s: the trust table is tiny but its
-    eager materialization serializes the rounds), so it stays opt-in.
+    The distinct claim set is materialized once: it is re-read twice per
+    round, and an r06 A/B at sf0.1 measured that fastest (≈5.6 s vs
+    5.9–9.7 s fully lazy, warm min-of-3). The trust table's rounds run
+    through ``fixpoint.iterate``: its plan doubles every round, so deep
+    ``iters`` are cut while the default 2 rounds stay one lazy plan.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    c = claims.select(
-        F.col(source_col).alias("source"),
-        F.col(key_col).alias("key"),
-        F.col(value_col).alias("value"),
-    ).distinct().localCheckpoint(eager=True)
-    trust = c.select("source").distinct().withColumn(
-        "trust", F.lit(1.0)
+    c = materialize(
+        claims.select(
+            F.col(source_col).alias("source"),
+            F.col(key_col).alias("key"),
+            F.col(value_col).alias("value"),
+        ).distinct()
     )
-    conf = None
-    for _ in range(iters):
+
+    def confidence(trust: DataFrame) -> DataFrame:
         vote = (
             c.join(F.broadcast(trust), "source")
             .groupBy("key", "value")
             .agg(F.round(F.sum("trust"), 6).alias("vote"))
         )
         tot = vote.groupBy("key").agg(F.round(F.sum("vote"), 6).alias("tot"))
-        conf = vote.join(tot, "key").select(
+        return vote.join(tot, "key").select(
             "key", "value", F.round(F.col("vote") / F.col("tot"), 6).alias("conf")
         )
-        # one tiny row-per-source table — the broadcast payload of the
-        # next round; checkpointing it caps the conf->trust->conf plan
-        # recursion when iters is deep
-        trust = (
-            c.join(conf, ["key", "value"])
+
+    def step(trust: DataFrame, _: int) -> DataFrame:
+        return (
+            c.join(confidence(trust), ["key", "value"])
             .groupBy("source")
             .agg(F.round(F.avg("conf"), 6).alias("trust"))
         )
-        if checkpoint:
-            trust = trust.localCheckpoint(eager=True)
+
+    trust = c.select("source").distinct().withColumn("trust", F.lit(1.0))
+    conf = confidence(iterate(trust, step, iters - 1))
     w = Window.partitionBy("key").orderBy(
         F.col("conf").desc(), F.col("value").desc()
     )

@@ -97,7 +97,7 @@ def semantic_similarity(
     rounded to 6 dp so the DuckDB twin hash-matches across engines.
 
     ``closure`` shares a precomputed _closure_with_self frame (its BFS
-    rounds are localCheckpointed, so all consumers reuse one
+    rounds are materialized, so all consumers reuse one
     materialization) — composed scorers like Lin otherwise rebuild the
     identical closure per component (r06: q160 built it 3×)."""
     clo = closure if closure is not None else _closure_with_self(edges, nodes, max_depth)

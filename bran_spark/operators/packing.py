@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bran_spark.operators.fixpoint import materialize
+
 
 def pack_token_bins(
     df: DataFrame,
@@ -64,9 +66,9 @@ def pack_token_bins(
     local = parted.withColumn("local_cum", F.sum("n_tokens").over(w))
 
     # phase 2: one tiny row per partition → exclusive offsets in id order.
-    # localCheckpoint pins the partitioning so the pid column stays
+    # materializing pins the partitioning so the pid column stays
     # consistent between this collect and the final join.
-    local = local.localCheckpoint(eager=True)
+    local = materialize(local)
     psums = (
         local.groupBy("pid")
         .agg(F.sum("n_tokens").alias("psum"), F.min("id").alias("min_id"))

@@ -38,15 +38,6 @@ def mention_pairs(mentions: DataFrame) -> DataFrame:
     return chem.join(dis, "doc_id")
 
 
-def entity_pairs(mentions: DataFrame) -> DataFrame:
-    """Document-level entity pairs (D4/D5): distinct MeSH pairs per doc."""
-    return (
-        mention_pairs(mentions)
-        .select("doc_id", "chem_mesh", "dis_mesh")
-        .dropDuplicates(["doc_id", "chem_mesh", "dis_mesh"])
-    )
-
-
 def label_pairs(pairs: DataFrame, gold: DataFrame) -> DataFrame:
     """J2: gold-label join; unmatched ⇒ negative (label 0).
 

@@ -27,6 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bran_spark.operators.fixpoint import (
+    converge,
+    materialize,
+    row_count_unchanged,
+)
+
 #: RDFS vocabulary (short local names; IRI prefixes add nothing here)
 SUB_CLASS = "subClassOf"
 SUB_PROP = "subPropertyOf"
@@ -45,25 +51,19 @@ def _transitive_closure_small(
     squaring rounds). A cyclic hierarchy CONVERGES — the closure then
     contains s==o rows and the cycle's classes effectively merge; cycle
     detection, if wanted, is the caller's check on those rows."""
-    clo = edges.select("s", "o").distinct().persist()
-    n = clo.count()
-    for _ in range(max_iters):
+    clo = materialize(edges.select("s", "o").distinct())
+
+    def square(clo: DataFrame, _: int) -> DataFrame:
         stepped = (
             clo.alias("a")
             .join(clo.alias("b"), F.col("a.o") == F.col("b.s"))
             .select(F.col("a.s").alias("s"), F.col("b.o").alias("o"))
         )
-        nxt = clo.unionByName(stepped).distinct().persist()
-        m = nxt.count()
-        clo.unpersist()
-        clo = nxt
-        if m == n:
-            return clo
-        n = m
-    raise RuntimeError(
-        f"transitive closure did not converge in {max_iters} squaring "
-        "rounds — cyclic or pathologically deep hierarchy"
-    )
+        return clo.unionByName(stepped).distinct()
+
+    unchanged = row_count_unchanged()
+    unchanged(clo)  # seeds the count, so a closed input stops in round 1
+    return converge(clo, square, max_iters, unchanged, "transitive closure")
 
 
 def prepare_ontology(schema: DataFrame, max_iters: int = 16) -> dict:
@@ -89,9 +89,7 @@ def prepare_ontology(schema: DataFrame, max_iters: int = 16) -> dict:
     }
 
 
-def rdfs_derivations(
-    triples: DataFrame, onto: dict, persist: bool = True
-) -> DataFrame:
+def rdfs_derivations(triples: DataFrame, onto: dict) -> DataFrame:
     """Per-triple RDFS derivation rows (entity, cls, cls0, pred, role)
     for a triple batch against a :func:`prepare_ontology` result —
     the pre-aggregation stage of :func:`rdfs_closure`. RDFS rules are
@@ -100,34 +98,22 @@ def rdfs_derivations(
     batch's derivations, which is what makes the incremental streaming
     materialization exact.
 
-    ``persist=True`` (batch default) caches the two multiply-consumed
-    frames for the life of the session (the AMIE precedent — a handful
-    of InMemoryRelations per job). Pass ``persist=False`` from
-    PER-BATCH contexts (foreachBatch): there each call would otherwise
-    pin two more cache entries forever, growing storage with every
-    micro-batch, and re-scanning one micro-batch is cheaper than that."""
+    Lazy: the input is read twice (raw + subproperty-lifted) and the
+    lifted frame twice more (domain + range attach), which is cheap for
+    a micro-batch; a caller with a costly corpus-sized input
+    materializes it first."""
     sub_prop, sub_cls = onto["sub_prop"], onto["sub_cls"]
     dom, rng = onto["dom"], onto["rng"]
 
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.persist() if persist else df
-
-    # The input is consumed TWICE here (raw + subproperty-lifted) and the
-    # lifted frame twice more below (domain + range attach), so a lazy
-    # ``triples`` subtree would re-execute up to 4×; persisting it once
-    # keeps the corpus scan single-pass (same fix as AMIE's lifted KG —
-    # q292 at sf0.1 dropped ~7× with this + the lifted persist).
-    t = _pin(triples.select("subj", "pred", "obj"))
+    t = triples.select("subj", "pred", "obj")
     # rdfs7: lift each corpus triple through the subPropertyOf closure
     # (keeping the original pred too). Corpus-side map-only: the
     # closure is broadcast.
-    lifted = _pin(
-        t.unionByName(
-            t.join(
-                F.broadcast(sub_prop.withColumnRenamed("s", "pred")),
-                "pred",
-            ).select("subj", F.col("o").alias("pred"), "obj")
-        )
+    lifted = t.unionByName(
+        t.join(
+            F.broadcast(sub_prop.withColumnRenamed("s", "pred")),
+            "pred",
+        ).select("subj", F.col("o").alias("pred"), "obj")
     )
 
     # rdfs2 + rdfs3: base type assertions with (pred, role) provenance.
@@ -231,7 +217,7 @@ def rdfs_closure(
     The ontology side runs in PLAIN PYTHON on the driver (one collect of
     the ontology-sized ``schema``): the previous driver-looped DataFrame
     fixpoint cost ~12 s of tiny-data Spark jobs per call at sf0.1 —
-    two iterated-squaring closures with a persist+count per round plus
+    two iterated-squaring closures with a materialize+count per round plus
     an ontology join pipeline — versus milliseconds as dict/set
     fixpoints. ``max_iters`` still bounds the Python fixpoint so a
     pathologically deep hierarchy fails the same way."""
@@ -242,7 +228,7 @@ def rdfs_closure(
         # degenerate ontology (no domain/range statements): no
         # derivations exist; preserve the empty-result schema
         onto = prepare_ontology(schema, max_iters)
-        return aggregate_closure(rdfs_derivations(triples, onto, persist=False))
+        return aggregate_closure(rdfs_derivations(triples, onto))
     n_combos, d = combo
     t = triples.select("subj", "pred", "obj")
     hits = t.join(F.broadcast(d), t["pred"] == d["pred0"]).select(
@@ -405,10 +391,10 @@ def disjointness_audit(
         .unionByName(disjoint.select(F.col("cls_b").alias("cls")))
         .distinct()
     )
-    # persisted: both self-join sides read it, and a lazy ``typed`` is
+    # materialized: both self-join sides read it, and a lazy ``typed`` is
     # usually a full rdfs_closure plan — replaying that twice doubles
     # the audit's cost for no reason
-    slim = typed.join(F.broadcast(watch), "cls").persist()
+    slim = materialize(typed.join(F.broadcast(watch), "cls"))
     a = slim.select(
         "entity",
         F.col("cls").alias("cls_a"),

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bran_spark.operators.fixpoint import materialize
+
 KEY_SPACE = 65536  # 4 hex chars
 
 
@@ -458,7 +460,7 @@ def greedy_set_cover(
         .limit(pool)
         .select("id")
     )
-    tok = tok_all.join(pool_ids, "id", "left_semi").localCheckpoint(eager=True)
+    tok = materialize(tok_all.join(pool_ids, "id", "left_semi"))
     covered = None
     picked: list = []
     rows = []
@@ -478,11 +480,11 @@ def greedy_set_cover(
         total += top.gain
         rows.append((step, top.id, int(top.gain), total))
         new_words = tok.where(F.col("id") == top.id).select("w")
-        covered = (
+        covered = materialize(
             new_words
             if covered is None
             else covered.union(new_words).distinct()
-        ).localCheckpoint(eager=True)
+        )
     spark = docs.sparkSession
     id_type = dict(
         (f.name, f.dataType.simpleString()) for f in tok.schema.fields
@@ -1010,9 +1012,7 @@ def sequential_looks(
     # K per-look rollups each re-reference this table — materialize the
     # ONE corpus groupBy once (user-dimension-sized) instead of paying
     # K corpus passes
-    per_user = per_user.withColumn("arm", md5_arm("u")).localCheckpoint(
-        eager=True
-    )
+    per_user = materialize(per_user.withColumn("arm", md5_arm("u")))
     k = float(scale)
     rows = []
     for i, (cut, bound) in enumerate(zip(looks, bounds)):

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bran_spark.operators.fixpoint import iterate, materialize
+
 
 def _gap_seconds(gap: str) -> int:
     """'<n> seconds|minutes|hours' -> seconds (the subset session_window
@@ -491,23 +493,22 @@ def stationary_distribution(
     stay under 2⁶³ (10⁶·10¹² = 10¹⁸ < 9.2·10¹⁸ holds at the north-rule
     scale). Output: (event_type, p_fp, share 6 dp)."""
     totals = trans.groupBy("from_type").agg(F.sum("n").alias("n_from"))
-    # edges/states are re-joined EVERY round — truncate lineage once so
+    # edges/states are re-joined EVERY round — materialize them once so
     # the corpus-scale subtree behind `trans` is not re-executed per
     # iteration (the pagerank_fixed_point idiom; both tables are
-    # n_types-dimension-sized, so the checkpoint itself is trivial).
-    edges = (
-        trans.join(totals, "from_type")
-        .select("from_type", "to_type", "n", "n_from")
-        .localCheckpoint(eager=True)
+    # n_types-dimension-sized, so materializing them is trivial).
+    edges = materialize(
+        trans.join(totals, "from_type").select(
+            "from_type", "to_type", "n", "n_from"
+        )
     )
-    states = (
+    states = materialize(
         edges.select(F.col("from_type").alias("event_type"))
         .unionByName(edges.select(F.col("to_type").alias("event_type")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    p = states.withColumn("p", F.lit(int(scale)).cast("long"))
-    for _ in range(iters):
+
+    def step(p: DataFrame, _: int) -> DataFrame:
         contrib = edges.join(
             p.select(F.col("event_type").alias("from_type"), "p"),
             "from_type",
@@ -518,13 +519,14 @@ def stationary_distribution(
         nxt = contrib.groupBy("event_type").agg(
             F.sum("c").cast("long").alias("p")
         )
-        p = (
-            states.join(nxt, "event_type", "left")
-            .select(
-                "event_type",
-                F.coalesce("p", F.lit(0).cast("long")).alias("p"),
-            )
+        return states.join(nxt, "event_type", "left").select(
+            "event_type",
+            F.coalesce("p", F.lit(0).cast("long")).alias("p"),
         )
+
+    p = iterate(
+        states.withColumn("p", F.lit(int(scale)).cast("long")), step, iters
+    )
     tot = p.agg(F.sum("p").cast("double").alias("ptot"))
     return (
         p.crossJoin(F.broadcast(tot))

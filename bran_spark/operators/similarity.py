@@ -18,43 +18,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bran_spark.operators.fixpoint import materialize
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column, d: "int | None" = None) -> Column:
-    """Dot product of two array columns. With ``d`` (the known vector
-    dimension) the sum is UNROLLED into a chain of element_at
-    multiply-adds — plain per-row expressions that stay inside
-    whole-stage codegen, measured ~3× faster than the aggregate/zip_with
-    higher-order form at SMALL d (d=8, the q248 finding). The fold order
-    is identical (acc = 0.0, then + a_i·b_i in index order), so both
-    forms are bit-identical. CAUTION: at d=64 the unrolled form measured
-    ~2.4× SLOWER than the HOF on the q110 pair scan (the ~200-node
-    expression tree falls out of efficient codegen) — only pass ``d``
-    for narrow vectors, and A/B anything in between."""
-    if d is not None:
-        out: Column = F.lit(0.0)
-        for i in range(1, d + 1):
-            out = out + F.element_at(a, i) * F.element_at(b, i)
-        return out
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two array columns: a zip_with/aggregate fold,
+    acc = 0.0 then + a_i·b_i in index order."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
 
 
-def norm(a: Column, d: "int | None" = None) -> Column:
-    """L2 norm; same unrolled-vs-HOF contract as :func:`dot`."""
-    if d is not None:
-        out: Column = F.lit(0.0)
-        for i in range(1, d + 1):
-            e = F.element_at(a, i)
-            out = out + e * e
-        return F.sqrt(out)
+def norm(a: Column) -> Column:
+    """L2 norm, the same fold over a_i²."""
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
 
-def cosine(a: Column, b: Column, d: "int | None" = None) -> Column:
-    return dot(a, b, d) / (norm(a, d) * norm(b, d))
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def sign_bucket(
@@ -240,7 +223,10 @@ def kmeans_centroids(
     )
     for _ in range(iters):
         assigned = _assign_cells(base, cents)
-        cents = (
+        # k-row table: materializing it per Lloyd round costs nothing
+        # and stops round i+1's broadcast build from re-executing the
+        # whole round-i assignment chain (r06)
+        cents = materialize(
             assigned.select("cell", F.posexplode("v").alias("dim", "val"))
             .groupBy("cell", "dim")
             .agg(F.avg("val").alias("m"))
@@ -252,10 +238,6 @@ def kmeans_centroids(
                 ).alias("cv")
             )
             .select(F.col("cell").alias("cid"), "cv")
-            # k-row table: materializing it per Lloyd round costs nothing
-            # and stops round i+1's broadcast build from re-executing the
-            # whole round-i assignment chain (r06)
-            .localCheckpoint(eager=True)
         )
     return cents
 

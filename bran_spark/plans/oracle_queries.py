@@ -17,8 +17,6 @@ SQL-expressible — model forward passes, hash-function-specific ops).
 
 from __future__ import annotations
 
-import functools
-
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -40,6 +38,7 @@ from bran_spark.operators.dedup import (
     simhash,
 )
 from bran_spark.operators.evaluate import sweep_threshold
+from bran_spark.operators.fixpoint import materialize
 from bran_spark.operators.pairs import salted_count_distinct
 from bran_spark.operators.pooling import lse_pool
 from bran_spark.operators.similarity import cosine_topk, lsh_bucket_topk
@@ -55,28 +54,10 @@ ORACLE: dict[str, str] = {}
 
 def _q(name: str, sql: str | None = None):
     def deco(fn):
-        # Session hygiene (guide §5 "unpersist when done"): some operators
-        # (reasoning.py, the pipeline's triples) persist() intermediates
-        # that are consumed multiple times WITHIN one returned plan, but the
-        # consumer's action runs after the operator returns, so no operator
-        # can unpersist its own cache. In a long-lived session that runs
-        # many registry queries back to back (bench.py times 85 of them),
-        # those InMemoryRelations pile up in the shared CacheManager:
-        # storageFraction-protected memory shrinks the execution pool and
-        # late queries spill (q138 measured 22.6 s in-bench vs ~8 s solo on
-        # an identical plan). Each query therefore drops every cached
-        # relation leaked by its predecessors on entry. localCheckpoint
-        # blocks (e.g. the _FX_MEMO fixture memo) live outside the
-        # CacheManager and are untouched.
-        @functools.wraps(fn)
-        def wrapped(spark, sf_dir):
-            spark.catalog.clearCache()
-            return fn(spark, sf_dir)
-
-        QUERIES[name] = wrapped
+        QUERIES[name] = fn
         if sql is not None:
             ORACLE[name] = sql
-        return wrapped
+        return fn
 
     return deco
 
@@ -1890,7 +1871,7 @@ def _fx_memo(spark, key: str, sf: float, build) -> DataFrame:
         # cycles SparkSessions doesn't accumulate dead DataFrame refs
         for stale in [mk for mk in _FX_MEMO if mk[0] != app]:
             del _FX_MEMO[stale]
-        _FX_MEMO[k] = build().localCheckpoint(eager=True)
+        _FX_MEMO[k] = materialize(build())
     return _FX_MEMO[k]
 
 
@@ -1927,11 +1908,10 @@ def _fx_entity_pairs(spark, sf) -> DataFrame:
     # materialized once: q56-q58/q64/q65 consume this small edge table from
     # multiple branches and iterative loops — without this the mention
     # pipeline upstream re-executes per branch
-    return (
+    return materialize(
         per_doc.select(F.explode("chems").alias("subj"), "diss")
         .select("subj", F.explode("diss").alias("obj"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -4199,7 +4179,7 @@ def q112(spark, sf):
     # materialized once (r06): the incidence DISTINCT feeds both join
     # sides — filters push below the aggregate, so the two branches were
     # two separate distinct exchanges over the mention table
-    inc = _fx_entity_incidence(spark, sf).localCheckpoint(eager=True)
+    inc = materialize(_fx_entity_incidence(spark, sf))
     a = inc.where(F.col("type") == "Chemical").select(
         "doc_id", F.col("mesh_id").alias("subj")
     )
@@ -5796,13 +5776,13 @@ def q143(spark, sf):
     carry the max accepting-rule confidence as provenance."""
     from bran_spark.operators.graphalgo import apply_rules, mine_path_rules
 
-    # deliberately lazy end-to-end: on one box recomputing the fast body
-    # shuffle beats forcing its materialization (measured 27 s vs 35-45 s
-    # at sf0.1); a cluster-scale mine-then-apply pipeline would instead
-    # persist composition_body(t) once and pass it to both stages via the
-    # body= parameter (unit-tested equivalence)
+    # lazy end-to-end: on one box recomputing the fast body shuffle beats
+    # forcing its materialization (measured 27 s vs 35-45 s at sf0.1); a
+    # cluster-scale mine-then-apply pipeline would instead materialize
+    # composition_body(t) once and pass it to both stages via the body=
+    # parameter (unit-tested equivalence)
     t = _kg_relational_triples(spark, sf)
-    return apply_rules(t, mine_path_rules(t), min_confidence=0.8, checkpoint=False)
+    return apply_rules(t, mine_path_rules(t), min_confidence=0.8)
 
 
 @_q(
@@ -6878,9 +6858,9 @@ def _fs_cand_weights(spark, sf):
     ensure(s)
     mentions = spark.read.parquet(f"{fixture_dir(s)}/mentions.parquet")
     mesh = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
-    cand = mention_dict_candidates(
-        mentions, mesh, prefix_len=3, max_block=50
-    ).localCheckpoint(eager=True)
+    cand = materialize(
+        mention_dict_candidates(mentions, mesh, prefix_len=3, max_block=50)
+    )
     weights = fs_field_weights(
         cand, ["agree_name", "agree_syn", "agree_type"]
     )

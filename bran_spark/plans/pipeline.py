@@ -37,6 +37,7 @@ from bran_spark.functions.bpe import (
 from bran_spark.model.encoder import Weights
 from bran_spark.model.scorer import score_documents
 from bran_spark.operators.evaluate import confusion
+from bran_spark.operators.fixpoint import materialize
 from bran_spark.operators.linking import canonical_triples, link_mentions
 from bran_spark.operators.mentions import detect_mentions
 from bran_spark.operators.pooling import dedup_triples, lse_pool, threshold, to_triples
@@ -358,11 +359,11 @@ class Pipeline:
     # ---- end to end ------------------------------------------------------
     def run(self, resume: bool = True, evaluate: bool = True) -> dict:
         """With checkpointing, each stage materializes exactly once and
-        counts come from the committed manifests. Without it, the whole DAG
-        runs as ONE action (intermediate counts ride along as ``observe``
-        metrics — no extra passes, no block-manager caching of the fat token
-        intermediates); only the small triples table is persisted for the
-        edges/eval consumers."""
+        counts come from the committed manifests. Without it, the DAG up to
+        the triples runs as ONE action (intermediate counts ride along as
+        ``observe`` metrics — no extra passes, no block-manager caching of
+        the fat token intermediates) that materializes only the small
+        triples table for the edges/eval consumers."""
         from pyspark.sql import Observation
 
         t0 = time.time()
@@ -384,17 +385,15 @@ class Pipeline:
         triples = self.stage_triples(scores, resume)
         t_obs = None
         if not self.cfg.checkpoint:
-            triples = triples.persist()
-            # one action materializes everything: edges.count() fills the
-            # triples persist on the way through the dedup, and the triples
-            # row count rides along as an observation (a separate
+            # one action runs the DAG up to the triples and materializes
+            # the small triples table for the edges/eval consumers; the row
+            # count rides along as an observation (a separate
             # triples.count() job costs ~1-2s of pure serial time per run)
             t_obs = Observation("triple_rows")
-            edges = self.stage_edges(
-                triples.observe(t_obs, F.count(F.lit(1)).alias("n")), resume
+            triples = materialize(
+                triples.observe(t_obs, F.count(F.lit(1)).alias("n"))
             )
-        else:
-            edges = self.stage_edges(triples, resume)
+        edges = self.stage_edges(triples, resume)
 
         if self.cfg.checkpoint:
             n_triples = self.io.manifest("triples")["rows"]

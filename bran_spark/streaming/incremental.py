@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bran_spark.operators.fixpoint import materialize
+
 SPANS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
@@ -549,20 +551,15 @@ def streaming_rdfs_closure(
         rdfs_derivations,
     )
 
-    onto = {k: v.localCheckpoint(eager=True)
-            for k, v in prepare_ontology(schema).items()}
+    onto = {k: materialize(v) for k, v in prepare_ontology(schema).items()}
 
     triples = spark.readStream.schema(
         "subj string, pred string, obj string"
     ).parquet(triples_dir)
 
     def _entail(batch: DataFrame, batch_id: int) -> None:
-        # persist=False: a per-batch persist would pin two more cache
-        # entries EVERY micro-batch with nothing ever unpersisting them
-        # (storage grows with the whole ingested corpus on a continuous
-        # run); re-scanning one micro-batch twice is the cheaper trade
         (
-            rdfs_derivations(batch, onto, persist=False)
+            rdfs_derivations(batch, onto)
             .distinct()
             .write.mode("append")
             .parquet(derivations_dir)

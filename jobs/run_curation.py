@@ -89,6 +89,7 @@ def main() -> None:
     from bran_spark.functions.text import quality_score
     from bran_spark.operators.components import dedup_corpus
     from bran_spark.operators.dedup import exact_dedup_groups, minhash_lsh_pairs
+    from bran_spark.operators.fixpoint import materialize
     from bran_spark.operators.quality import repetition_stats
     from bran_spark.operators.sampling import stratified_sample
     from bran_spark.session import get_spark
@@ -310,12 +311,12 @@ def main() -> None:
 
         if tio is None:
             # materialize the <= dsir-k survivor set BEFORE counting it:
-            # the eager checkpoint is the single evaluation of the
+            # the materialization is the single evaluation of the
             # expensive two-model DSIR subtree, and the count plus every
-            # later funnel action run against the checkpoint (counting
+            # later funnel action run against the stored rows (counting
             # first would evaluate the full chain an extra time)
             spark.sparkContext.setJobDescription("curation:cur_dsir")
-            kept = _build_dsir().localCheckpoint(eager=True)
+            kept = materialize(_build_dsir())
             n_dsir = kept.count()
         else:
             kept, n_dsir = _stage("cur_dsir", _build_dsir, _snap(_dsir_input))

@@ -53,6 +53,7 @@ def main() -> None:
 
     import pyspark.sql.functions as F
 
+    from bran_spark.operators.fixpoint import materialize
     from bran_spark.operators.sampling import (
         ab_assignment_srm,
         ab_effect,
@@ -104,7 +105,7 @@ def main() -> None:
         # stages share it without re-scanning events
         units = tio.read(spark, "exp_units")
     else:
-        units = _build_units().localCheckpoint(eager=True)  # shared by all four stages
+        units = materialize(_build_units())  # shared by all four stages
 
     report: dict = {"sf_dir": args.sf_dir, "cut": args.cut, "units_resumed": resumed}
 

@@ -53,6 +53,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from bran_spark.operators.fixpoint import materialize
     from bran_spark.operators.graphalgo import (
         align_predicates,
         inverse_predicates,
@@ -116,8 +117,8 @@ def main() -> None:
         )
         .distinct()
     )
-    feed_a = feed_a.localCheckpoint(eager=True)
-    feed_b = feed_b.localCheckpoint(eager=True)
+    feed_a = materialize(feed_a)
+    feed_b = materialize(feed_b)
     funnel["feed_a_triples"] = feed_a.count()
     funnel["feed_b_triples"] = feed_b.count()
 
@@ -174,7 +175,7 @@ def main() -> None:
         + [(b, a, True) for b, a in flips.items()],
         "pred string, canon string, flip boolean",
     )
-    b_canon = (
+    b_canon = materialize(
         feed_b.join(F.broadcast(mapping), "pred", "left")
         .select(
             F.when(F.col("flip"), F.col("obj")).otherwise(F.col("subj")).alias("subj"),
@@ -182,16 +183,14 @@ def main() -> None:
             F.when(F.col("flip"), F.col("subj")).otherwise(F.col("obj")).alias("obj"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     # ---- fuse: union with per-feed support (1 = one feed, 2 = both)
-    fused = (
+    fused = materialize(
         feed_a.withColumn("src", F.lit("a"))
         .unionByName(b_canon.withColumn("src", F.lit("b")))
         .groupBy("subj", "pred", "obj")
         .agg(F.countDistinct("src").cast("int").alias("n_feeds"))
-        .localCheckpoint(eager=True)
     )
     funnel["fused_triples"] = fused.count()
     funnel["corroborated_triples"] = fused.where(F.col("n_feeds") == 2).count()

@@ -43,6 +43,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from bran_spark.fixtures.gen import ensure, fixture_dir
+    from bran_spark.operators.fixpoint import materialize
     from bran_spark.operators.kgquality import validate_kg
     from bran_spark.operators.pooling import dedup_triples
     from bran_spark.plans.pipeline import flagship
@@ -64,8 +65,8 @@ def main() -> None:
         F.col("support") >= args.min_support
     )
     # one materialization: validation, publish, and the funnel count all
-    # branch from this frame (localCheckpoint -> checkpoint on a cluster)
-    deduped = deduped.localCheckpoint(eager=True)
+    # branch from this frame
+    deduped = materialize(deduped)
     funnel["published_triples"] = deduped.count()
 
     # mesh ids carry their entity type as the leading character; lift it

@@ -44,6 +44,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from bran_spark.operators.fixpoint import materialize
     from bran_spark.operators.kglifecycle import induce_schema
     from bran_spark.operators.reasoning import (
         disjointness_audit,
@@ -65,12 +66,12 @@ def main() -> None:
     t0 = time.time()
     report: dict = {"sf_dir": args.sf_dir, "dirty": args.dirty}
 
-    kg = (
+    # closure + conformance + induction all consume it
+    kg = materialize(
         _noisy_kg(spark, args.sf_dir)
         if args.dirty
         else _kg_relational_triples(spark, args.sf_dir)
     )
-    kg = kg.persist()  # closure + conformance + induction all consume it
     schema = spark.createDataFrame(_ONTOLOGY_ROWS, ["s", "p", "o"])
     prefix_map = spark.createDataFrame(
         [
@@ -81,7 +82,7 @@ def main() -> None:
         ["prefix", "cls"],
     )
 
-    typed = rdfs_closure(kg, schema).persist()
+    typed = materialize(rdfs_closure(kg, schema))
     report["closure"] = {
         "n_type_assertions": typed.count(),
         "n_classes": typed.select("cls").distinct().count(),

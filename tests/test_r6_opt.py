@@ -49,7 +49,7 @@ def test_rdfs_closure_fused_equals_derivation_store(spark):
     )
     fused = rdfs_closure(triples, schema)
     store = aggregate_closure(
-        rdfs_derivations(triples, prepare_ontology(schema), persist=False)
+        rdfs_derivations(triples, prepare_ontology(schema))
     )
     cols = ["entity", "cls", "n_derivations"]
     assert _rows(fused, cols) == _rows(store, cols)
@@ -76,7 +76,7 @@ def test_rdfs_closure_chunked_masks_past_64_combos(spark):
     )
     fused = rdfs_closure(triples, schema)
     store = aggregate_closure(
-        rdfs_derivations(triples, prepare_ontology(schema), persist=False)
+        rdfs_derivations(triples, prepare_ontology(schema))
     )
     cols = ["entity", "cls", "n_derivations"]
     got = _rows(fused, cols)
@@ -289,7 +289,10 @@ def test_lazy_loops_match_references_past_truncation(spark, monkeypatch):
     count — deep enough that ``iterate`` materializes mid-loop — equals its
     reference unrolled to the same count: the DuckDB oracle SQL for
     PageRank and HITS, local recurrences for the others. The linear
-    chains stay fully lazy at registry counts."""
+    chains and truth discovery's two rounds stay fully lazy at registry
+    counts."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from bran_spark.operators.graphalgo import (
         hits_fixed_point,
         katz_centrality,
@@ -298,6 +301,7 @@ def test_lazy_loops_match_references_past_truncation(spark, monkeypatch):
         symmetric_edges,
         weighted_sssp,
     )
+    from bran_spark.operators.linking import truth_discovery
     from bran_spark.plans.oracle_queries import _hits_iter_sql, _pr_iter_sql
 
     pairs = spark.createDataFrame(_LOOP_PAIRS, ["subj", "obj"])
@@ -311,6 +315,15 @@ def test_lazy_loops_match_references_past_truncation(spark, monkeypatch):
               for u in adj for v in adj[u]}
     wedges = spark.createDataFrame(
         [(u, v, w) for (u, v), w in weight.items()], "u string, v string, w long"
+    )
+    claim_rows = [
+        ("A", "k1", "v"), ("B", "k1", "v"), ("C", "k1", "w"), ("D", "k1", "w"),
+        ("A", "k2", "x"), ("C", "k2", "y"), ("D", "k2", "y"),
+        ("B", "k3", "z"), ("C", "k3", "z"), ("D", "k3", "u"),
+        ("A", "k4", "p"), ("B", "k4", "q"), ("D", "k4", "q"), ("C", "k5", "r"),
+    ]
+    claims = spark.createDataFrame(
+        claim_rows, "source string, key string, value string"
     )
     con = _duck_pairs()
     truncated = _truncations(monkeypatch)
@@ -349,6 +362,32 @@ def test_lazy_loops_match_references_past_truncation(spark, monkeypatch):
                  // 100 for v in adj}
         return sorted(x.items())
 
+    def r6(x):  # Spark's ROUND(x, 6) on a double: HALF_UP on its decimal
+        return float(
+            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+        )
+
+    def truth_ref(n):
+        trust = {s: 1.0 for s, _, _ in claim_rows}
+        for _ in range(n):
+            vote: dict[tuple, float] = {}
+            for s, k, v in claim_rows:
+                vote[k, v] = vote.get((k, v), 0.0) + trust[s]
+            vote = {kv: r6(x) for kv, x in vote.items()}
+            tot: dict[str, float] = {}
+            for (k, _), x in vote.items():
+                tot[k] = tot.get(k, 0.0) + x
+            conf = {(k, v): r6(x / r6(tot[k])) for (k, v), x in vote.items()}
+            mine = {s: [] for s in trust}
+            for s, k, v in claim_rows:
+                mine[s].append(conf[k, v])
+            trust = {s: r6(sum(c) / len(c)) for s, c in mine.items()}
+        best = {}
+        for (k, v), c in conf.items():
+            if k not in best or (c, v) > (best[k][1], best[k][0]):
+                best[k] = (v, c)
+        return sorted((k, v, c) for k, (v, c) in best.items())
+
     def sssp_ref(n):
         dist = {"a": 0}
         for _ in range(n):
@@ -368,6 +407,8 @@ def test_lazy_loops_match_references_past_truncation(spark, monkeypatch):
         ("katz", 4, True, lambda n: katz_centrality(pairs, iters=n), katz_ref),
         ("sssp", 4, False, lambda n: weighted_sssp(wedges, seeds, iters=n),
          sssp_ref),
+        ("truth", 2, True, lambda n: truth_discovery(claims, iters=n),
+         truth_ref),
     ]
     for name, n, lazy, run, ref in loops:
         for rounds in (n, 4 * n):
@@ -437,9 +478,9 @@ def test_node2vec_matches_replay_past_truncation(spark, monkeypatch):
 
 
 def test_loop_plans_stay_under_plan_bound(spark):
-    """q56, q161 and q266 built at 4× their registry round counts return
-    plans under fixpoint.MAX_PLAN_NODES. Plan size does not depend on the
-    data, so a small graph stands in for the fixture graph."""
+    """q56, q161, q266, q144 and q219 built at 4× their registry round
+    counts return plans under fixpoint.MAX_PLAN_NODES. Plan size does not
+    depend on the data, so small inputs stand in for the registry's."""
     from bran_spark.operators.fixpoint import MAX_PLAN_NODES, _plan_nodes
     from bran_spark.operators.graphalgo import (
         hits_fixed_point,
@@ -447,13 +488,25 @@ def test_loop_plans_stay_under_plan_bound(spark):
         pagerank_fixed_point,
         symmetric_edges,
     )
+    from bran_spark.operators.linking import truth_discovery
+    from bran_spark.operators.sessions import stationary_distribution
 
     pairs = spark.createDataFrame(_LOOP_PAIRS, ["subj", "obj"])
     sym = symmetric_edges(pairs)
+    claims = spark.createDataFrame(
+        [("A", "k1", "v"), ("B", "k1", "w"), ("A", "k2", "x")],
+        "source string, key string, value string",
+    )
+    trans = spark.createDataFrame(
+        [("A", "B", 3), ("B", "A", 2), ("B", "C", 1), ("C", "A", 4)],
+        "from_type string, to_type string, n long",
+    )
     built = {
         "q56": pagerank_fixed_point(sym, iters=20),
         "q161": hits_fixed_point(pairs, iters=16),
         "q266": node2vec_walks(sym, p=4.0, q=0.25, n_walks=2, walk_len=12),
+        "q144": truth_discovery(claims, iters=8),
+        "q219": stationary_distribution(trans, iters=32),
     }
     for name, df in built.items():
         assert _plan_nodes(df) < MAX_PLAN_NODES, (name, _plan_nodes(df))

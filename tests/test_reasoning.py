@@ -27,10 +27,15 @@ class TestTransitiveClosure:
         edges = spark.createDataFrame(
             [("a", "b"), ("b", "c"), ("c", "d")], ["s", "o"]
         )
-        assert _pairs(_transitive_closure_small(edges)) == {
+        closed = {
             ("a", "b"), ("b", "c"), ("c", "d"),
             ("a", "c"), ("b", "d"), ("a", "d"),
         }
+        assert _pairs(_transitive_closure_small(edges)) == closed
+        # an already-closed edge set converges in its first round: the
+        # row count is compared against the input's, not a second round
+        again = spark.createDataFrame(sorted(closed), ["s", "o"])
+        assert _pairs(_transitive_closure_small(again, max_iters=1)) == closed
 
     def test_deep_chain_squares(self, spark):
         # depth 9 needs only ceil(log2(9)) = 4 squaring rounds; with
