@@ -2,10 +2,11 @@
 
 Reference parity: bran's processing scripts tokenize PubTator abstracts and
 apply a byte-pair-encoded subword vocabulary before the transformer
-(reference: src/processing/ — reconstructed, SURVEY.md §0). Here the encoder
-is a **scalar Arrow-batched pandas UDF** (no per-row Python — mandated by
-BASELINE.json input_hint); the merge list and vocab are tiny dimension tables
-broadcast to every executor once per worker process.
+(reference: src/processing/ — reconstructed, SURVEY.md §0). Here BpeCodec
+runs inside the flagship scorer's Arrow-batched mapInPandas (model/scorer.py)
+or in the pandas UDFs below (no per-row Python — mandated by BASELINE.json
+input_hint); the merge list and vocab are tiny dimension tables broadcast to
+every executor once per worker process.
 
 Offsets: word tokens carry exact [start, end) char offsets into the
 document's ``full_text``; BPE sub-tokens carry their word's offsets plus a
@@ -90,6 +91,20 @@ class BpeCodec:
     def encode_word(self, word: str) -> list[tuple[str, int]]:
         return [(s, self.vocab.get(s, self.unk)) for s in self._encode_word(word)]
 
+    def token_arrays(self, text: str, max_tokens: int) -> tuple[list[int], list[int]]:
+        """(token ids, char start of each token's word) of ``text``, cut at
+        the F4 cap: the prefix ``slice(tokens, 1, max_tokens)`` keeps, with
+        no BPE work past the cap."""
+        ids: list[int] = []
+        starts: list[int] = []
+        for wd, a, _b in tokenize_words(text):
+            for _tok, tid in self.encode_word(wd):
+                if len(ids) >= max_tokens:
+                    return ids, starts
+                ids.append(tid)
+                starts.append(a)
+        return ids, starts
+
 
 def load_codec(spark: SparkSession, merges_path: str, vocab_path: str) -> BpeCodec:
     """Load the (small) merge/vocab dims on the driver once.
@@ -162,38 +177,17 @@ TOKEN_ARRAYS_SCHEMA = T.StructType(
 def with_token_arrays(
     df: DataFrame, codec_bc, text_col: str = "full_text", max_tokens: int = 512
 ) -> DataFrame:
-    """Scoring-path tokenizer: adds ``tok_ids`` / ``tok_starts`` int arrays.
-
-    The scorer consumes ONLY (tok_id, char-start) per sub-token; the full
-    ``array<struct>`` form (with_tokens) ships the token string plus five
-    struct fields per sub-token through Arrow — ~10× the bytes and a python
-    dict per token. The F4 length cap is applied in-loop (identical prefix
-    to ``slice(tokens, 1, max_tokens)``), which also skips BPE work beyond
-    the cap on long documents.
-    """
+    """Add ``tok_ids`` / ``tok_starts`` int arrays (BpeCodec.token_arrays):
+    the lean form of ``with_tokens`` for token-id consumers (the reranker).
+    The flagship scorer tokenizes its text itself (model/scorer.py)."""
 
     @F.pandas_udf(TOKEN_ARRAYS_SCHEMA)
     def ta_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         codec: BpeCodec = codec_bc.value
-
-        def enc(text: str) -> tuple[list[int], list[int]]:
-            tids: list[int] = []
-            tstarts: list[int] = []
-            for wd, a, _b in tokenize_words(text or ""):
-                for _tok, tid in codec.encode_word(wd):
-                    if len(tids) >= max_tokens:
-                        return tids, tstarts
-                    tids.append(tid)
-                    tstarts.append(a)
-            return tids, tstarts
-
         for s in it:
-            res = [enc(t) for t in s]
             yield pd.DataFrame(
-                {
-                    "tok_ids": [r[0] for r in res],
-                    "tok_starts": [r[1] for r in res],
-                }
+                [codec.token_arrays(t or "", max_tokens) for t in s],
+                columns=["tok_ids", "tok_starts"],
             )
 
     return (

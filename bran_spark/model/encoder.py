@@ -10,6 +10,14 @@ executors, weights broadcast once per python worker.
 Determinism: float32 throughout, fixed reduction shapes; the session factory
 pins OMP/BLAS to 1 thread per python worker so results are bitwise stable
 across parallelism levels (the `local[8]` vs `local[32]` invariance gate).
+They are NOT stable across OpenBLAS kernels: the kernel OpenBLAS picks for
+the CPU (overridable with ``OPENBLAS_CORETYPE``) changes the float32
+rounding, and with it the flagship's triple fingerprint. At perfbench seed 1
+the pinned flagship value (935, 26018070874730114849) reproduces with
+``OPENBLAS_CORETYPE=SkylakeX``; the Haswell kernel gives
+(935, 27865378801409533497), and the Prescott kernel that OpenBLAS falls
+back to on a virtual CPU it does not recognise gives
+(935, 17387043426688547287).
 """
 
 from __future__ import annotations
@@ -18,18 +26,24 @@ import numpy as np
 
 
 class Weights:
-    """Loaded view over fixtures model_weights.npz (FIXTURES.md §6)."""
+    """Loaded view over fixtures model_weights.npz (FIXTURES.md §6).
 
-    def __init__(self, arrays: dict[str, np.ndarray]):
+    ``codec`` (a functions.bpe.BpeCodec) and ``max_tokens`` (the F4 cap)
+    turn text into this model's token ids; the scorer needs them only for
+    text input, and they ride the same broadcast as the arrays."""
+
+    def __init__(self, arrays: dict[str, np.ndarray], codec=None, max_tokens: int | None = None):
         self.a = arrays
         meta = arrays["__meta__"].astype(int)
         (self.d_model, self.n_blocks, self.n_heads,
          self.d_ff, self.max_len, self.n_rels, self.n_ner) = map(int, meta)
+        self.codec = codec
+        self.max_tokens = max_tokens
 
     @classmethod
-    def load(cls, path: str) -> "Weights":
+    def load(cls, path: str, codec=None, max_tokens: int | None = None) -> "Weights":
         with np.load(path) as z:
-            return cls({k: z[k] for k in z.files})
+            return cls({k: z[k] for k in z.files}, codec, max_tokens)
 
     def __getitem__(self, k: str) -> np.ndarray:
         return self.a[k]

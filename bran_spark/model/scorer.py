@@ -1,17 +1,19 @@
-"""Spark-side encode+score stage (SURVEY.md §2 P1+P2+P4, §4.4).
+"""Spark-side tokenize+encode+score stage (SURVEY.md §2 X1+P1+P2+P4, §4.4).
 
-One ``mapInPandas`` pass fuses: transformer encoding of the whole abstract,
-mention-span alignment (binary search over token char offsets — same rule as
+One ``mapInPandas`` pass fuses: BPE tokenization of the abstract's text
+(with the F4 cap), transformer encoding of the whole abstract, mention-span
+alignment (binary search over token char offsets — same rule as
 operators.mentions.align_mentions_to_tokens), and bi-affine scoring of every
 (chemical-mention × disease-mention) pair. Emitting mention-pair logits in
 long format lets the defining LSE pooling (A2) run relationally downstream —
 exactly the paper's "one encoder pass scores all pairs in the abstract"
 structure (paper §2.3), re-expressed for Spark.
 
-Scale design: weights are a SparkContext broadcast (one deserialize per
-python worker); batches arrive via Arrow (iterator form — the model loads
-once per partition, not per batch); upstream length-bucketing keeps padding
-waste low. This is the pipeline's only JVM↔Python boundary besides BPE.
+Scale design: weights, BPE codec and cap are one SparkContext broadcast
+(one deserialize per python worker); batches arrive via Arrow (iterator
+form — the model loads once per partition, not per batch). Text goes in and
+pair logits come out, so scoring is one JVM↔Python crossing; the flagship's
+only other one is the word split that feeds JVM-side mention detection.
 """
 
 from __future__ import annotations
@@ -57,9 +59,12 @@ def _align(tok_starts: np.ndarray, a: int, b: int) -> tuple[int, int]:
 def score_documents(
     docs: DataFrame, weights_bc, batch_docs: int = 1, emit: str = "pairs"
 ) -> DataFrame:
-    """Input rows: (doc_id, tok_ids array<int>, tok_starts array<int>,
-    mentions array<struct<mention_id,type,mesh_id,start,end>> — the mentions
-    column may be absent when emit="ner").
+    """Input rows: (doc_id, full_text string, mentions
+    array<struct<mention_id,type,mesh_id,start,end>>) — the text is
+    tokenized here with ``weights_bc.value.codec``, cut at its
+    ``max_tokens`` — or, with ``tok_ids array<int>, tok_starts array<int>``
+    in place of full_text, already-tokenized documents. The mentions column
+    may be absent when emit="ner".
     Output: long-format mention-pair CID logits (SCORE_SCHEMA).
 
     ``emit`` selects what the single encoder pass produces (paper §2.4's
@@ -115,7 +120,16 @@ def score_documents(
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w: Weights = weights_bc.value
         for pdf in it:
-            ids = [np.asarray(t, dtype=np.int64) for t in pdf["tok_ids"]]
+            if "full_text" in pdf:
+                toks = [
+                    w.codec.token_arrays(t or "", w.max_tokens)
+                    for t in pdf["full_text"]
+                ]
+                tok_ids = [t[0] for t in toks]
+                tok_starts = [t[1] for t in toks]
+            else:
+                tok_ids, tok_starts = pdf["tok_ids"], pdf["tok_starts"]
+            ids = [np.asarray(t, dtype=np.int64) for t in tok_ids]
             encs = encode_bucketed(ids, w)
             # per-doc numpy chunks, one concat per Arrow batch — a per-pair
             # python append loop here allocated ~9M objects per sf0.5 run
@@ -132,11 +146,11 @@ def score_documents(
             mentions_col = (
                 pdf["mentions"] if emit != "ner" else [None] * len(pdf)
             )
-            for row_i, (doc_id, tok_starts, mentions) in enumerate(
-                zip(pdf["doc_id"], pdf["tok_starts"], mentions_col)
+            for row_i, (doc_id, doc_starts, mentions) in enumerate(
+                zip(pdf["doc_id"], tok_starts, mentions_col)
             ):
                 enc = encs[row_i]
-                starts = np.asarray(tok_starts, dtype=np.int64)
+                starts = np.asarray(doc_starts, dtype=np.int64)
                 if emit != "pairs":
                     # P4 joint NER head on the encoding already in hand
                     logits = ner_logits(enc, w)

@@ -7,8 +7,8 @@ reconstructed — SURVEY.md §0; paper §3). The north_star additionally mandate
 dictionary join"), so this module provides both:
 
 - ``detect_mentions``: dictionary-based detection as a pure JVM-side plan —
-  posexplode(words) ⋈ broadcast(surface dict). No Python in the hot path;
-  scales as a map-side (broadcast hash) join at 10^12 docs because the
+  posexplode_outer(words) ⋈ broadcast(surface dict). No Python in the hot
+  path; scales as a map-side (broadcast hash) join at 10^12 docs because the
   dictionary is the small side.
 - ``align_mentions_to_tokens``: the J5 interval join, relational form
   (token.start ∈ [mention.start, mention.end)) — the in-UDF scorer uses the
@@ -36,7 +36,7 @@ def detect_mentions(docs_with_words: DataFrame, mesh_dict: DataFrame) -> DataFra
     """Dictionary NER: match word tokens against entity surface forms.
 
     Input needs columns ``doc_id`` and ``words array<struct<word,start,end>>``
-    (functions.bpe.with_tokens). Output matches the fixture ``mentions``
+    (functions.bpe.with_words). Output matches the fixture ``mentions``
     schema: (doc_id, mention_id, type, mesh_id, start, end, text).
 
     mention_id is deterministic AND unique:
@@ -46,8 +46,10 @@ def detect_mentions(docs_with_words: DataFrame, mesh_dict: DataFrame) -> DataFra
     chemical and a disease synonym) — a bare doc#pos key would conflate
     those rows in every downstream per-mention join and distinct count.
     """
+    # _outer: for posexplode Spark adds a size(words) > 0 filter that runs a
+    # words UDF a second time; a NULL word matches no surface in the join
     words = docs_with_words.select(
-        "doc_id", F.posexplode("words").alias("pos", "w")
+        "doc_id", F.posexplode_outer("words").alias("pos", "w")
     ).select(
         "doc_id",
         "pos",

@@ -1344,7 +1344,7 @@ def ner_tags_fixture(spark, sf):
     Model forward — rows-only check; bitwise parity vs local NumPy is pinned
     by tests/test_model.py::test_ner_head_matches_local_numpy."""
     from bran_spark.fixtures.gen import ensure, fixture_dir
-    from bran_spark.functions.bpe import full_text_col, with_token_arrays
+    from bran_spark.functions.bpe import full_text_col
     from bran_spark.model.scorer import score_documents
     from bran_spark.plans.pipeline import Pipeline, PipelineConfig
 
@@ -1354,13 +1354,10 @@ def ner_tags_fixture(spark, sf):
         fixture_dir=fixture_dir(s), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
     )
     p = Pipeline(spark, cfg)
-    docs = with_token_arrays(
-        p._even_repartition(p.documents()).withColumn(
-            "full_text", full_text_col("spans")
-        ),
-        p.codec_bc(),
-        max_tokens=cfg.max_tokens,
-    ).select("doc_id", "tok_ids", "tok_starts")
+    # text in: the scorer tokenizes in its own Python pass
+    docs = p._even_repartition(p.documents()).select(
+        "doc_id", full_text_col("spans").alias("full_text")
+    )
     return score_documents(docs, p.weights_bc(), emit="ner")
 
 

@@ -1,21 +1,24 @@
 """The flagship KG-construction DAG (SURVEY.md §3 E3, §4.4).
 
 documents_interleaved ──(JVM array ops)── full_text
-  → BPE tokenize (Arrow pandas UDF, X1)
-  → mention detection (broadcast dict join, JVM) → linking/canonicalize (J4)
-  → length-bucketed encode+score (mapInPandas, P1+P2) — per-bucket commits
+  → word split (Arrow pandas UDF) → mention detection (broadcast dict
+    join, JVM) → linking/canonicalize (J4)
+  → full_text ⋈ per-doc mention lists
+  → BPE tokenize + encode + score in one mapInPandas (X1+P1+P2) —
+    per-bucket commits
   → LSE pooling (A2, relational) → threshold (F7)
   → triples (D8) partitioned by pred (S7) → salted dedup/edges (A5/P3)
   → eval vs gold (J6/J7/A4)
 
-Every stage commits through ManifestParquetTableIO (lineage + counters);
-``resume=True`` skips committed stages/buckets — the kill-and-rerun
-idempotency gate in tests/test_resume.py drives exactly this path.
+Two Python crossings: the word split and the scorer. With checkpointing,
+the linked mentions, the score buckets, the triples and the edges commit
+through ManifestParquetTableIO (lineage + counters); ``resume=True`` skips
+committed stages/buckets — the kill-and-rerun idempotency gate in
+tests/test_resume.py drives exactly this path.
 
 Shuffle budget (SURVEY.md §4.4): detection join is broadcast (no shuffle);
-the scoring stage repartitions by range on n_toks (shuffle 1 — doubles as
-W1 length bucketing); LSE pools on (doc, chem, dis) (shuffle 2); triple
-dedup on (subj, pred, obj) (shuffle 3). Nothing else exchanges.
+the text ⋈ mentions join and the scorer's round-robin repartition feed the
+scorer; LSE pools on (doc, chem, dis); triple dedup on (subj, pred, obj).
 """
 
 from __future__ import annotations
@@ -27,13 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bran_spark.functions.bpe import (
-    full_text_col,
-    load_codec,
-    with_token_arrays,
-    with_tokens,
-    with_words,
-)
+from bran_spark.functions.bpe import full_text_col, load_codec, with_tokens, with_words
 from bran_spark.model.encoder import Weights
 from bran_spark.model.scorer import score_documents
 from bran_spark.operators.evaluate import confusion
@@ -75,7 +72,6 @@ class Pipeline:
         self._mesh_df = mesh_df
         self._codec_bc = None
         self._weights_bc = None
-        self._toks_cache = None
         self._src_parts = None
 
     # ---- inputs ----------------------------------------------------------
@@ -100,18 +96,22 @@ class Pipeline:
             return self.documents().count()
 
     def _even_repartition(self, df: DataFrame) -> DataFrame:
-        """Round-robin repartition to 4×cores BEFORE a python stage when the
-        source has too few splits — one fat parquet row group or a small
-        file count would otherwise serialize the whole UDF chain onto a
-        handful of tasks. On a real cluster the table layout provides the
-        splits; this is the defensive floor. The probe result is cached:
-        getNumPartitions launches a file-listing job per call, and the plan
-        is probed from several stages."""
+        """Round-robin repartition to one partition per core BEFORE a python
+        stage when the source has too few splits — one fat parquet row
+        group or a small file count would otherwise serialize the word
+        split onto a handful of tasks. That split is linear in the text, so
+        more partitions than cores only add Python tasks, each with a fixed
+        start-up cost; the scorer, whose cost varies with doc length²,
+        oversubscribes with its own repartition (stage_scores). On a real
+        cluster the table layout provides the splits; this is the defensive
+        floor. The probe result is cached: getNumPartitions launches a
+        file-listing job per call, and the plan is probed from several
+        stages."""
         if self._src_parts is None:
             self._src_parts = df.rdd.getNumPartitions()
         par = self.spark.sparkContext.defaultParallelism
         if self._src_parts < par:
-            return df.repartition(par * 4)
+            return df.repartition(par)
         return df
 
     def mesh_dict(self) -> DataFrame:
@@ -128,8 +128,14 @@ class Pipeline:
         return self._codec_bc
 
     def weights_bc(self):
+        """Encoder weights with the BPE codec and the F4 cap: everything the
+        scorer needs to turn text into pair logits, in one broadcast."""
         if self._weights_bc is None:
-            w = Weights.load(os.path.join(self.cfg.fixture_dir, "model_weights.npz"))
+            w = Weights.load(
+                os.path.join(self.cfg.fixture_dir, "model_weights.npz"),
+                codec=load_codec(self.spark, self._path("bpe_merges"), self._path("vocab")),
+                max_tokens=self.cfg.max_tokens,
+            )
             self._weights_bc = self.spark.sparkContext.broadcast(w)
         return self._weights_bc
 
@@ -147,93 +153,33 @@ class Pipeline:
             "tokens", F.slice("tokens", 1, self.cfg.max_tokens)
         ).withColumn("n_toks", F.size("tokens"))
 
-    def stage_tokenized(self, resume: bool = True) -> DataFrame:
-        """Materialized shared subplan: BPE runs ONCE; detection, scoring and
-        the span-invariant check all read the committed table. At 100 TB the
-        same trade holds: tokens ≈ 3× text bytes, but one write beats
-        re-running the python tokenizer in every consumer stage.
-
-        Memoized per Pipeline instance: mentions AND scoring both resolve
-        this stage, and with resume=False each un-memoized call would re-run
-        the full BPE pass and commit a redundant snapshot (measured: 3
-        tokenize executions per run before the memo)."""
-        if self._toks_cache is not None:
-            return self._toks_cache
-        if self.cfg.checkpoint:
-            # resume only when the committed snapshot was produced under the
-            # SAME config — a changed max_tokens must recompute, not silently
-            # serve the stale table
-            if resume and self.io.exists_valid(
-                "docs_tokenized", {"max_tokens": self.cfg.max_tokens}
-            ):
-                self._toks_cache = self.io.read(self.spark, "docs_tokenized")
-                return self._toks_cache
-            self.io.write(
-                self.tokenized(), "docs_tokenized", stage="tokenize",
-                inputs={"documents": None},
-                config={"max_tokens": self.cfg.max_tokens},
-            )
-            self._toks_cache = self.io.read(self.spark, "docs_tokenized")
-            return self._toks_cache
-        # no-checkpoint mode: recompute instead of persist (lazily — the
-        # memo holds the PLAN, not materialized data). Caching the token
-        # structs (~30× the raw text) through the single-JVM block manager
-        # measured as the scaling killer (allocation+GC don't parallelize);
-        # the BPE recompute is python-side work that scales with cores.
-        self._toks_cache = self.tokenized()
-        return self._toks_cache
-
     def worded(self) -> DataFrame:
         """documents + full_text + words — the detection input. No BPE: the
-        codec pass is needed only by the scorer, and running it here too
-        would double the python corpus passes."""
+        scorer tokenizes the text itself."""
         docs = self._even_repartition(self.documents())
         return with_words(docs.withColumn("full_text", full_text_col("spans")))
 
     def stage_mentions(self, resume: bool = True) -> DataFrame:
-        if self.cfg.checkpoint:
-            # resolve the upstream table first (no-op when itself valid), so
-            # the input-snapshot lineage check below is against the LIVE
-            # tokenized snapshot — a recomputed upstream invalidates this one
-            toks = self.stage_tokenized(resume)
-            if resume and self.io.exists_valid(
-                "mentions_linked",
-                inputs={"docs_tokenized": self.io.current_snapshot("docs_tokenized")},
-            ):
-                return self.io.read(self.spark, "mentions_linked")
-        toks = self.stage_tokenized(resume) if self.cfg.checkpoint else self.worded()
-        mentions = detect_mentions(toks, self.mesh_dict())
-        linked, unlinked = link_mentions(mentions, self.mesh_dict())
-        if self.cfg.checkpoint:
-            # detection is pure JVM over the committed tokens table, so the
-            # two writes recompute only a broadcast join each
-            self.io.write(unlinked, "mentions_unlinked", stage="link")
-            self.io.write(
-                linked, "mentions_linked", stage="detect+link",
-                inputs={"docs_tokenized": self.io.current_snapshot("docs_tokenized")},
-            )
+        # the mentions depend on no config: a committed table always holds
+        if self.cfg.checkpoint and resume and self.io.exists_valid("mentions_linked"):
             return self.io.read(self.spark, "mentions_linked")
-        return linked
+        mentions = detect_mentions(self.worded(), self.mesh_dict())
+        if not self.cfg.checkpoint:
+            return link_mentions(mentions, self.mesh_dict())[0]
+        # both writes read the detected mentions: compute them, and the
+        # word split under them, once
+        linked, unlinked = link_mentions(materialize(mentions), self.mesh_dict())
+        self.io.write(unlinked, "mentions_unlinked", stage="link")
+        self.io.write(linked, "mentions_linked", stage="detect+link")
+        return self.io.read(self.spark, "mentions_linked")
 
     def _score_input(self, mentions: DataFrame, resume: bool = True) -> DataFrame:
-        if self.cfg.checkpoint:
-            # read the committed full-struct tokens table
-            docs = self.stage_tokenized(resume).select(
-                "doc_id",
-                F.expr("transform(tokens, t -> t.tok_id)").alias("tok_ids"),
-                F.expr("transform(tokens, t -> t.start)").alias("tok_starts"),
-                "n_toks",
-            )
-        else:
-            # lean tokenizer: int arrays only — the full struct form ships
-            # ~10× the bytes through Arrow for fields the scorer never reads
-            docs = with_token_arrays(
-                self._even_repartition(self.documents()).withColumn(
-                    "full_text", full_text_col("spans")
-                ),
-                self.codec_bc(),
-                max_tokens=self.cfg.max_tokens,
-            ).select("doc_id", "tok_ids", "tok_starts")
+        """(doc_id, full_text, mentions) rows: the scorer tokenizes the text
+        in the same Python pass that encodes it. ``resume`` has no effect:
+        no stage between the documents and the scorer is committed."""
+        docs = self.documents().select(
+            "doc_id", full_text_col("spans").alias("full_text")
+        )
         magg = mentions.groupBy("doc_id").agg(
             F.collect_list(
                 F.struct("mention_id", "type", "mesh_id", "start", "end")
@@ -242,13 +188,9 @@ class Pipeline:
         return docs.join(magg, "doc_id", "inner")
 
     def stage_scores(self, mentions: DataFrame, resume: bool = True) -> DataFrame:
-        """Encode + bi-affine score, committed per doc_id hash bucket.
-
-        No repartitionByRange here: range partitioning needs a sampling pass
-        that re-executes the input lineage, and the scorer already groups
-        same-length docs inside each Arrow batch (encode_bucketed) — the
-        join's hash partitioning on doc_id is reused as-is, zero extra
-        shuffles."""
+        """Tokenize + encode + bi-affine score, committed per doc_id hash
+        bucket. No repartitionByRange here: range partitioning needs a
+        sampling pass that re-executes the input lineage."""
         B = self.cfg.score_buckets
         par = self.spark.sparkContext.defaultParallelism
         if not self.cfg.checkpoint:

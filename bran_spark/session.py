@@ -8,8 +8,9 @@ Scale notes (100 TB / 1000-executor design intent):
   backstop behind our explicit salting (operators.pairs.salted_repartition).
 - Nested schema pruning on: text-only stages must not deserialize the
   ``media_ref`` payload of ``spans`` elements (BASELINE.json input_hint).
-- Arrow on + bounded batch size: the encoder/scorer pandas UDFs are the only
-  JVM<->Python boundaries; 128 docs/batch keeps NumPy matmuls amortized while
+- Arrow on + bounded batch size: the flagship crosses JVM<->Python twice,
+  in the word-split pandas UDF and in the scorer's mapInPandas (tokenize +
+  encode + score); 128 docs/batch keeps NumPy matmuls amortized while
   bounding python-worker memory at 32 concurrent workers.
 """
 

@@ -4,6 +4,7 @@ masking correctness — the properties the parallelism-invariance gate needs."""
 from __future__ import annotations
 
 import numpy as np
+import pyspark.sql.functions as F
 
 from bran_spark.fixtures.gen import ensure, fixture_dir
 from bran_spark.model.encoder import (
@@ -140,13 +141,15 @@ def test_encode_one_bitwise_matches_batch():
     assert encode_batch([np.zeros(0, dtype=np.int64)], w)[0].shape == (0, w.d_model)
 
 
-def test_batched_scorer_matches_solo_scorer(spark):
+def test_batched_scorer_matches_solo_scorer(spark, fx_dir):
     """score_documents(batch_docs=4) must produce the same pair scores as
     the batch_docs=1 default: the bucketed path once PRE-padded inputs to
     the bucket length, which defeated the attention mask (pad tokens
-    attended as real ones) and silently shifted every logit."""
-    import pandas as pd
-
+    attended as real ones) and silently shifted every logit. And text fed
+    to the scorer, tokenized in its worker, must score bitwise like the
+    same documents fed as token arrays, at the default cap and at one that
+    truncates."""
+    from bran_spark.functions.bpe import full_text_col, load_codec
     from bran_spark.model.scorer import score_documents
 
     w = _weights()
@@ -176,6 +179,42 @@ def test_batched_scorer_matches_solo_scorer(spark):
     assert set(solo) == set(batched)
     for k in solo:
         np.testing.assert_allclose(batched[k], solo[k], rtol=0, atol=1e-6)
+
+    codec = load_codec(spark, f"{fx_dir}/bpe_merges.parquet", f"{fx_dir}/vocab.parquet")
+    mentions = (
+        spark.read.parquet(f"{fx_dir}/mentions.parquet")
+        .groupBy("doc_id")
+        .agg(F.collect_list(
+            F.struct("mention_id", "type", "mesh_id", "start", "end")
+        ).alias("mentions"))
+    )
+    text_docs = (
+        spark.read.parquet(f"{fx_dir}/documents_interleaved.parquet")
+        .select("doc_id", full_text_col("spans").alias("full_text"))
+        .join(mentions, "doc_id")
+        .orderBy("doc_id")
+        .limit(12)
+        .collect()
+    )
+    assert max(len(codec.token_arrays(r.full_text, 10**6)[0]) for r in text_docs) > 64
+    for cap in (512, 64):
+        wbc = spark.sparkContext.broadcast(Weights(w.a, codec, cap))
+        arrays = spark.createDataFrame(
+            [(r.doc_id, *codec.token_arrays(r.full_text, cap), r.mentions)
+             for r in text_docs],
+            "doc_id string, tok_ids array<int>, tok_starts array<int>, "
+            "mentions array<struct<mention_id:string,type:string,mesh_id:string,"
+            "start:int,end:int>>",
+        )
+        text = spark.createDataFrame(
+            [(r.doc_id, r.full_text, r.mentions) for r in text_docs],
+            "doc_id string, full_text string, "
+            "mentions array<struct<mention_id:string,type:string,mesh_id:string,"
+            "start:int,end:int>>",
+        )
+        by_arrays = sorted(tuple(r) for r in score_documents(arrays, wbc).collect())
+        by_text = sorted(tuple(r) for r in score_documents(text, wbc).collect())
+        assert by_arrays and by_text == by_arrays, cap
 
 
 def test_rerank_matches_local_numpy(spark):

@@ -48,6 +48,18 @@ def test_dimension_joins_are_broadcast(spark, fx_dir):
     assert "SortMergeJoin" not in plan
 
 
+def test_flagship_crosses_into_python_twice(spark, fx_dir):
+    """The lazy flagship runs one word-split pandas UDF (feeding JVM
+    detection) and one scorer mapInPandas that tokenizes, encodes and
+    scores: every extra Python node is another set of Python tasks, each
+    with a fixed start-up cost."""
+    from bran_spark.plans.pipeline import flagship
+
+    plan = _plan(flagship(spark, fx_dir))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+
+
 def test_relational_corpus_ops_have_no_python(spark, testdata_dir):
     """Dedup/similarity/text-analysis operators are pure JVM plans: no
     Python UDF stage anywhere (BatchEvalPython/ArrowEvalPython/PythonUDF)."""

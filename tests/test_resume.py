@@ -72,12 +72,15 @@ def test_resume_invalidates_on_config_change(spark, fx_dir, tmp_path):
     assert r2["triples"] < r1["triples"]          # stricter threshold
     assert os.path.getmtime(score_manifest) == score_mtime  # buckets reused
 
-    # max_tokens change: tokenized + scores recompute too
+    # max_tokens change: the scores recompute; the mentions, which do not
+    # depend on the token cap, keep their snapshot
+    score_hash = json.load(open(score_manifest))["config_hash"]
     cfg3 = PipelineConfig(fixture_dir=fx_dir, checkpoint_root=root,
                           score_buckets=4, theta=1.5, max_tokens=64)
     Pipeline(spark, cfg3).run(evaluate=False)
-    assert open(f"{root}/docs_tokenized/_current").read() == "1"
     assert os.path.getmtime(score_manifest) > score_mtime
+    assert json.load(open(score_manifest))["config_hash"] != score_hash
+    assert open(f"{root}/mentions_linked/_current").read() == "0"
 
 
 def test_time_travel_read_returns_past_snapshot(spark, tmp_path):
