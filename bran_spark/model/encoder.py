@@ -29,8 +29,8 @@ class Weights:
     """Loaded view over fixtures model_weights.npz (FIXTURES.md §6).
 
     ``codec`` (a functions.bpe.BpeCodec) and ``max_tokens`` (the F4 cap)
-    turn text into this model's token ids; the scorer needs them only for
-    text input, and they ride the same broadcast as the arrays."""
+    turn text into this model's token ids; they ride the same broadcast as
+    the arrays, so the scorer tokenizes in its own pass."""
 
     def __init__(self, arrays: dict[str, np.ndarray], codec=None, max_tokens: int | None = None):
         self.a = arrays
@@ -215,9 +215,9 @@ def _conv1d_same_into(
 def encode_batch(tok_ids: list[np.ndarray], w: Weights) -> list[np.ndarray]:
     """Encode a batch of variable-length docs; returns per-doc [L_i, d].
 
-    Pads to the batch max length with attention masking — upstream
-    length-bucketing (SURVEY.md §2 W1: repartitionByRange on n_toks) keeps
-    batches homogeneous so padding waste stays low.
+    Pads to the batch max length with attention masking. The flagship
+    encodes each doc alone (``encode_one``); this padded form is the
+    reference that encode_one is pinned bitwise against.
     """
     if not tok_ids:
         return []

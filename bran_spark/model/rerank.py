@@ -15,8 +15,8 @@ set), never the corpus — the expensive model stays off the 10^12-doc scan
 path by construction. Weights ride the SparkContext broadcast; rows arrive
 via Arrow in iterator form (one weight deserialize per worker, not per
 batch); the per-pair encode is the same cache-friendly solo encode the
-flagship scorer measured best at 32-way concurrency (scorer.py batch_docs
-rationale).
+flagship scorer measured best at 32-way concurrency (see
+scorer.score_documents).
 """
 
 from __future__ import annotations

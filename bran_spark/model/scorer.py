@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame
 
 from bran_spark.model.encoder import (
     Weights,
-    encode_batch,
     encode_one,
     ner_logits,
     score_pairs,
@@ -56,15 +55,11 @@ def _align(tok_starts: np.ndarray, a: int, b: int) -> tuple[int, int]:
     return lo, max(hi, lo + 1)
 
 
-def score_documents(
-    docs: DataFrame, weights_bc, batch_docs: int = 1, emit: str = "pairs"
-) -> DataFrame:
+def score_documents(docs: DataFrame, weights_bc, emit: str = "pairs") -> DataFrame:
     """Input rows: (doc_id, full_text string, mentions
     array<struct<mention_id,type,mesh_id,start,end>>) — the text is
     tokenized here with ``weights_bc.value.codec``, cut at its
-    ``max_tokens`` — or, with ``tok_ids array<int>, tok_starts array<int>``
-    in place of full_text, already-tokenized documents. The mentions column
-    may be absent when emit="ner".
+    ``max_tokens``. The mentions column may be absent when emit="ner".
     Output: long-format mention-pair CID logits (SCORE_SCHEMA).
 
     ``emit`` selects what the single encoder pass produces (paper §2.4's
@@ -77,60 +72,29 @@ def score_documents(
         100 TB this is the mode that avoids re-encoding the corpus when both
         artifacts are wanted.
 
-    batch_docs=1 (exact-length solo encode) measured best under full
-    32-worker concurrency: aggregate 1001→3678 docs/s from 8→32 procs
-    (0.92 parallel efficiency) — the attention working set stays inside
-    per-core cache, where B≥4 batches contend on shared L3. Larger B only
-    pays off at larger d_model; kept available via the parameter.
+    Each document is encoded alone at its exact length (``encode_one``):
+    measured best under full 32-worker concurrency, aggregate 1001→3678
+    docs/s from 8→32 procs (0.92 parallel efficiency) — the attention
+    working set stays inside per-core cache, where batches of 4 or more
+    contend on shared L3.
     """
     if emit not in ("pairs", "ner", "both"):
         raise ValueError(f"emit must be pairs|ner|both, got {emit!r}")
 
-    def encode_bucketed(ids: list[np.ndarray], w: Weights) -> list[np.ndarray]:
-        """Deterministic batched encode: pad each doc to a bucket length
-        (next multiple of 32, capped at max_len) and encode same-bucket docs
-        together. A doc's result depends only on (doc, bucket) — bitwise
-        identical regardless of batch composition or parallelism (verified:
-        GEMM row results are stable across batch size at fixed L with
-        single-threaded BLAS) — while same-L batching keeps GEMMs large.
-        """
-        if batch_docs == 1:
-            # exact-length solo encodes via the allocation-free arena twin
-            # (bitwise-equal to encode_batch([t]); tests/test_model.py)
-            return [encode_one(t[: w.max_len], w) for t in ids]
-        buckets: dict[int, list[int]] = {}
-        for i, t in enumerate(ids):
-            L = min(max(len(t), 1), w.max_len)
-            b = min(((L + 31) // 32) * 32, w.max_len)
-            buckets.setdefault(b, []).append(i)
-        out: list[np.ndarray | None] = [None] * len(ids)
-        for b, idxs in buckets.items():
-            for off in range(0, len(idxs), batch_docs):
-                grp = idxs[off : off + batch_docs]
-                # pass RAW truncated arrays: encode_batch pads internally
-                # with a true attention mask. Pre-padding here made every
-                # len == bucket, so the mask never engaged and pad tokens
-                # were attended as real tokens — batched scores silently
-                # diverged from the batch_docs=1 default.
-                encs = encode_batch([ids[i][: w.max_len] for i in grp], w)
-                for i, e in zip(grp, encs):
-                    out[i] = e
-        return out  # type: ignore[return-value]
-
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w: Weights = weights_bc.value
         for pdf in it:
-            if "full_text" in pdf:
-                toks = [
-                    w.codec.token_arrays(t or "", w.max_tokens)
-                    for t in pdf["full_text"]
-                ]
-                tok_ids = [t[0] for t in toks]
-                tok_starts = [t[1] for t in toks]
-            else:
-                tok_ids, tok_starts = pdf["tok_ids"], pdf["tok_starts"]
-            ids = [np.asarray(t, dtype=np.int64) for t in tok_ids]
-            encs = encode_bucketed(ids, w)
+            toks = [
+                w.codec.token_arrays(t or "", w.max_tokens)
+                for t in pdf["full_text"]
+            ]
+            tok_starts = [t[1] for t in toks]
+            # exact-length solo encodes via the allocation-free arena twin
+            # (bitwise-equal to encode_batch([t]); tests/test_model.py)
+            encs = [
+                encode_one(np.asarray(t[0], dtype=np.int64)[: w.max_len], w)
+                for t in toks
+            ]
             # per-doc numpy chunks, one concat per Arrow batch — a per-pair
             # python append loop here allocated ~9M objects per sf0.5 run
             # and was both slow and a GC/allocator-churn source at 32-way

@@ -145,44 +145,6 @@ def snapshot_diff(
     )
 
 
-def trend_slope_grouped_map(events: DataFrame, min_n: int = 2) -> DataFrame:
-    """Grouped-map (applyInPandas) twin of the relational OLS slope (q84):
-    per-user regression computed in NumPy over each user's Arrow batch.
-    The relational covar_pop/var_pop form is the production path (partial
-    aggregation, no Python); this pins the §2.10 grouped-map surface and
-    is equivalence-tested against it. Use the grouped-map form only when
-    the per-group computation genuinely has no aggregate decomposition
-    (e.g., an iterative fit)."""
-    import numpy as np
-
-    def fit(pdf):
-        import pandas as pd
-
-        x = pdf["x"].to_numpy()
-        y = pdf["y"].to_numpy()
-        if len(x) < min_n or np.var(x) == 0.0:
-            return pd.DataFrame(
-                {"user_id": [], "n": [], "slope_per_hour": []}
-            ).astype({"user_id": "int64", "n": "int64", "slope_per_hour": "float64"})
-        slope = float(np.cov(y, x, bias=True)[0, 1] / np.var(x))
-        return pd.DataFrame(
-            {
-                "user_id": [int(pdf["user_id"].iloc[0])],
-                "n": [len(x)],
-                "slope_per_hour": [round(slope, 6)],
-            }
-        )
-
-    p = events.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        (F.unix_micros(F.col("ts").cast("timestamp")) / 3.6e9).alias("x"),
-        F.col("value").alias("y"),
-    )
-    return p.groupBy("user_id").applyInPandas(
-        fit, "user_id long, n long, slope_per_hour double"
-    )
-
-
 def ewma_scores(
     events: DataFrame,
     key_col: str,

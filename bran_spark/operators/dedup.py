@@ -365,7 +365,6 @@ def embedding_neardup_pairs(
     vec_col: str = "embedding",
     min_cos: float = 0.95,
     bands: tuple[tuple[int, ...], ...] = DEFAULT_SIGN_BANDS,
-    center: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup via BANDED sign-LSH (deterministic
     axis-aligned random-hyperplane buckets), cosine verified per candidate.
@@ -379,11 +378,10 @@ def embedding_neardup_pairs(
     0.53, so 4 bands give ≈ 1-(1-0.53)^4 ≈ 95% recall — versus a single
     wider key whose recall decays geometrically with k.
 
-    Sign bits are taken relative to each coordinate's corpus mean by
-    default (``center=True``): real embedding stores are frequently
-    positively biased (post-ReLU, cosine caches), and raw sign bits then
-    put the whole corpus in one bucket, degenerating the self-join toward
-    O(N²). The means are one tiny aggregate, rounded 6 dp for determinism
+    Sign bits are taken relative to each coordinate's corpus mean: real
+    embedding stores are frequently positively biased (post-ReLU, cosine
+    caches), and raw sign bits then put the whole corpus in one bucket,
+    degenerating the self-join toward O(N²). The means are one tiny aggregate, rounded 6 dp for determinism
     (similarity.dim_means).
 
     Scale shape: the banded explode shuffles only (id, band, key); vectors
@@ -394,7 +392,7 @@ def embedding_neardup_pairs(
 
     ids = F.col(id_col).alias("id")
     all_dims = tuple(sorted({d for dims in bands for d in dims}))
-    offsets = dim_means(emb, vec_col, all_dims) if center else None
+    offsets = dim_means(emb, vec_col, all_dims)
     keyed = banded_sign_keys(emb, id_col, vec_col, bands, offsets)
     a = keyed.select(F.col("id").alias("id_a"), "band", "key")
     b = keyed.select(F.col("id").alias("id_b"), "band", "key")

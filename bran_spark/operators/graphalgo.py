@@ -161,12 +161,12 @@ def project_bipartite(
     )
 
 
-def oriented_edges(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
+def oriented_edges(edges: DataFrame) -> DataFrame:
     """Degree-ordered orientation of an undirected (u, v) edge list:
     (src, dst, kdst) with every edge pointing from its lower-(deg, id)
     endpoint. Split out of ``triangle_counts`` so the key-attach join
     strategy is plan-testable BEFORE the lineage-truncating checkpoint
-    (tests/test_graphalgo.py asserts no BroadcastExchange by default)."""
+    (tests/test_graphalgo.py asserts no BroadcastExchange)."""
     sym = symmetric_edges(edges, "u", "v")
     deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
     keyed = deg.select(
@@ -175,12 +175,9 @@ def oriented_edges(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
     )
     ku = keyed.withColumnRenamed("node", "u")
     kv = keyed.select(F.col("node").alias("v"), F.col("k").alias("kv"))
-    if broadcast_keys:
-        ku, kv = F.broadcast(ku), F.broadcast(kv)
-    else:
-        # shuffle_hash hint: one shuffle each side, no sort, and Catalyst
-        # never auto-broadcasts the |V|-sized key table
-        ku, kv = ku.hint("shuffle_hash"), kv.hint("shuffle_hash")
+    # shuffle_hash hint: one shuffle each side, no sort, and Catalyst
+    # never auto-broadcasts the |V|-sized key table
+    ku, kv = ku.hint("shuffle_hash"), kv.hint("shuffle_hash")
     e = edges.join(ku, "u").withColumnRenamed("k", "ku").join(kv, "v")
     lt = F.col("ku") < F.col("kv")
     return e.select(
@@ -190,25 +187,22 @@ def oriented_edges(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
     )
 
 
-def triangle_counts(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """(entity, n_triangles) over an undirected edge list given as (u, v)
     with u < v. Degree-ordered orientation: every edge points from its
     lower-(deg, id) endpoint, every triangle is enumerated exactly once as a
     wedge at its lowest-key apex plus the closing edge.
 
-    The degree-key attach joins a |V|-sized table against the edges. Default
-    is a plain shuffle join (``shuffle_hash`` hint so Catalyst never
-    auto-broadcasts it either) — |V| can be 10^8+ on a web-scale entity
-    graph, far past any driver/executor broadcast budget. Pass
-    ``broadcast_keys=True`` only for dimension-sized vertex sets (e.g. the
-    ~30k-node MeSH vocabulary) where skipping the two shuffles is worth it;
-    the orientation math is identical either way."""
+    The degree-key attach joins a |V|-sized table against the edges as a
+    plain shuffle join (``shuffle_hash`` hint so Catalyst never
+    auto-broadcasts it) — |V| can be 10^8+ on a web-scale entity graph,
+    far past any driver/executor broadcast budget."""
     # edges feed the degree pass AND the two key-attach joins — a lazy
     # caller plan (e.g. q57's bipartite projection) would re-execute per
     # reference
     edges = materialize(edges)
     # consumed by three branches below
-    oriented = materialize(oriented_edges(edges, broadcast_keys))
+    oriented = materialize(oriented_edges(edges))
     w1 = oriented.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), F.col("kdst").alias("kb")
     )
@@ -1103,7 +1097,7 @@ def predicate_profile(triples: DataFrame) -> DataFrame:
     )
 
 
-def edge_support(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
+def edge_support(edges: DataFrame) -> DataFrame:
     """(u, v, support): triangles through each undirected edge (input as
     (u, v) with u < v). Same degree-ordered orientation as
     triangle_counts — each triangle enumerated once at its lowest-key
@@ -1113,7 +1107,7 @@ def edge_support(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
     them to remove them."""
     # edges feed the orientation and the closing support join
     edges = materialize(edges)
-    oriented = materialize(oriented_edges(edges, broadcast_keys))
+    oriented = materialize(oriented_edges(edges))
     w1 = oriented.select(
         F.col("src").alias("a"), F.col("dst").alias("b"),
         F.col("kdst").alias("kb"),
@@ -1140,12 +1134,7 @@ def edge_support(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
     )
 
 
-def ktruss(
-    edges: DataFrame,
-    k: int = 3,
-    iters: int = 3,
-    broadcast_keys: bool = False,
-) -> DataFrame:
+def ktruss(edges: DataFrame, k: int = 3, iters: int = 3) -> DataFrame:
     """k-truss peeling (Cohen 2008): iteratively remove edges lying on
     fewer than k-2 triangles, ``iters`` rounds, then report the
     surviving edges with their support WITHIN the surviving subgraph —
@@ -1167,13 +1156,13 @@ def ktruss(
 
     def peel(e: DataFrame, _r: int) -> DataFrame:
         return (
-            edge_support(e, broadcast_keys)
+            edge_support(e)
             .where(F.col("support") >= k - 2)
             .select("u", "v")
         )
 
     e = iterate(edges.select("u", "v").distinct(), peel, iters)
-    return edge_support(e, broadcast_keys)
+    return edge_support(e)
 
 
 HITS_SCALE = 10**6  # fixed-point hub/auth unit — see overflow note below
@@ -1292,7 +1281,7 @@ def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
     )
 
 
-def clustering_coefficient(edges: DataFrame, broadcast_keys: bool = False) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """(entity, degree, n_triangles, clustering) — local clustering
     coefficient 2·T(v)/(deg(v)·(deg(v)−1)) over an undirected (u, v)
     edge list with u < v; degree-1 nodes get 0 by convention. The
@@ -1302,13 +1291,13 @@ def clustering_coefficient(edges: DataFrame, broadcast_keys: bool = False) -> Da
     df-cut worries about), while high clustering marks a dense clique.
 
     Cost: triangle_counts (O(m^1.5) wedges) + one degree aggregate +
-    one |V|-keyed shuffle join (never broadcast by default — same rule
-    as the orientation's key attach). clustering rounds to 6 dp."""
+    one |V|-keyed shuffle join (never broadcast — same rule as the
+    orientation's key attach). clustering rounds to 6 dp."""
     sym = symmetric_edges(edges, "u", "v")
     deg = sym.groupBy(F.col("u").alias("entity")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
-    tri = triangle_counts(edges, broadcast_keys)
+    tri = triangle_counts(edges)
     return (
         deg.join(tri, "entity", "left")
         .select(
@@ -1773,14 +1762,13 @@ def link_prediction_features(
 def topk_neighbor_graph(
     weighted: DataFrame,
     k: int = 3,
-    mutual: bool = True,
     src: str = "u",
     dst: str = "v",
     w_col: str = "w",
 ) -> DataFrame:
     """Graph sparsification by per-node top-k: keep each node's k
-    strongest neighbors (rounded weight, neighbor-id ties), optionally
-    intersected with the reverse direction (MUTUAL top-k — the kNN-graph
+    strongest neighbors (rounded weight, neighbor-id ties), intersected
+    with the reverse direction (MUTUAL top-k — the kNN-graph
     construction every graph-clustering / LPA / label-smoothing stage
     runs on a dense co-occurrence graph before iterating; hubs keep
     their k best but stop appearing in everyone else's list unless the
@@ -1789,8 +1777,8 @@ def topk_neighbor_graph(
     One window partitioned by source node over the already-aggregated
     weighted edge list (per-node frames, bounded by max degree — df-cut
     upstream if a hub's degree is unbounded), then an equi-self-join for
-    mutuality. Returns (u, v, w) directed survivors (mutual=True keeps
-    the edge in both rows)."""
+    mutuality. Returns (u, v, w) directed survivors; a mutual edge keeps
+    both rows."""
     e = weighted.select(
         F.col(src).alias("u"), F.col(dst).alias("v"), F.col(w_col).alias("w")
     )
@@ -1800,8 +1788,6 @@ def topk_neighbor_graph(
         .where(F.col("rk") <= k)
         .select("u", "v", "w")
     )
-    if not mutual:
-        return kept
     rev = kept.select(F.col("v").alias("u"), F.col("u").alias("v"))
     return kept.join(rev, ["u", "v"]).select("u", "v", "w")
 

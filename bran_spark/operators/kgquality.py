@@ -565,11 +565,7 @@ def ntriples_export(
     return ent_lines.unionByName(label_lines)
 
 
-def bgp_match(
-    triples: DataFrame,
-    patterns: "list[tuple[str, str, str]]",
-    distinct: bool = True,
-) -> DataFrame:
+def bgp_match(triples: DataFrame, patterns: "list[tuple[str, str, str]]") -> DataFrame:
     """Conjunctive basic-graph-pattern evaluation — SPARQL's BGP core
     over the triple table: each pattern is an (s, p, o) template whose
     '?'-prefixed terms are variables; the answer is the set of variable
@@ -589,8 +585,7 @@ def bgp_match(
     repeated WITHIN one pattern becomes a row-level equality filter.
 
     Output: one column per variable (sorted by name), DISTINCT bindings
-    by default (SPARQL set semantics; distinct=False keeps bag
-    semantics)."""
+    (SPARQL set semantics)."""
     if not patterns:
         raise ValueError("bgp_match needs at least one pattern")
     bound = None
@@ -619,8 +614,7 @@ def bgp_match(
             bound = (
                 bound.join(step, shared) if shared else bound.crossJoin(step)
             )
-    out = bound.select(*sorted(bound.columns))
-    return out.distinct() if distinct else out
+    return bound.select(*sorted(bound.columns)).distinct()
 
 
 def entity_summarization(

@@ -12,14 +12,12 @@ libraries exist in this container):
   metadata struct. The fetch is a deterministic fake (bytes derived from the
   ref) standing in for a blob-store read; shape/partitioning are real.
 - ``extract_media_features``: Arrow-batched ``mapInPandas`` producing a
-  fixed-dim float feature vector per media item. ``decode="stub"`` computes a
-  deterministic digest-based fake; ``decode="real"`` raises
-  NotImplementedError — the seam where a real decoder (PIL/ffmpeg) plugs in.
+  fixed-dim float feature vector per media item from a deterministic
+  digest-based fake — the seam where a real decoder (PIL/ffmpeg) plugs in.
 
 Scale notes: media payloads dominate bytes at 100 TB — they stay OUT of the
 text stages (nested-schema pruning: text stages never deserialize
-``spans.media_ref`` payloads), and feature extraction partitions by
-``media_ref`` hash so hot documents with many media spread evenly.
+``spans.media_ref`` payloads).
 """
 
 from __future__ import annotations
@@ -198,9 +196,7 @@ def audio_window_energy(
     return wins.mapInPandas(fn, AUDIO_WINDOW_SCHEMA)
 
 
-def extract_media_features(
-    media_with_payload: DataFrame, decode: str = "stub", repartition: int | None = None
-) -> DataFrame:
+def extract_media_features(media_with_payload: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over media payloads.
 
     The UDF receives (doc_id, media_ref, kind, payload, meta) batches; the
@@ -208,15 +204,8 @@ def extract_media_features(
     a deterministic digest→float map so the Spark plumbing (schema, batch
     shape, partitioning) is real and testable without media libraries.
     """
-    df = media_with_payload
-    if repartition:
-        df = df.repartition(repartition, "media_ref")
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if decode == "real":
-            raise NotImplementedError(
-                "real media decoding requires PIL/ffmpeg — not in this container"
-            )
         for pdf in it:
             # column-wise over the Arrow batch: one comprehension touches the
             # payload column (the decode seam); the meta struct unpacks via
@@ -244,7 +233,7 @@ def extract_media_features(
                 }
             )
 
-    return df.mapInPandas(fn, MEDIA_FEATURE_SCHEMA)
+    return media_with_payload.mapInPandas(fn, MEDIA_FEATURE_SCHEMA)
 
 
 def caption_candidates(

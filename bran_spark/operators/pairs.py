@@ -1,82 +1,19 @@
-"""Candidate-pair generation, labeling, hypernym filtering, skew salting
-(SURVEY.md §2 J1, J2, J3, P3).
+"""Operators over labeled (chemical × disease) candidate pairs: skew
+salting (SURVEY.md §2 P3), multi-instance bags and the support/precision
+curve.
 
 Reference parity: bran builds all (chemical × disease) candidate pairs per
-document, labels them against the gold CID set, and drops negatives shadowed
-by MeSH hypernyms of positive diseases (reference:
-src/processing/utils/filter_hypernyms.py — reconstructed, SURVEY.md §0;
-paper §3.2). The reference runs on one machine; the salting here is the
-explicit skew handling the north_rule mandates for hot chemical/disease
-entities at cluster scale.
+document and labels them against the gold CID set (paper §3.2); the
+flagship scores those pairs inside its one encoder pass
+(model/scorer.py). The reference runs on one machine; the salting here is
+the explicit skew handling the north_rule mandates for hot
+chemical/disease entities at cluster scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def mention_pairs(mentions: DataFrame) -> DataFrame:
-    """J1: within-document (chemical-mention × disease-mention) cross pairs.
-
-    Equi-join on doc_id; Catalyst executes a shuffled hash join partitioned
-    by doc_id, so the cross product stays local to each doc's partition.
-    Documents are bounded (max-length filter F4), so per-group fan-out is
-    bounded — the classic skew risk here is hot *entities*, handled at the
-    aggregation side (salted_count_distinct) and by AQE skew-join as backstop.
-    """
-    chem = mentions.where(F.col("type") == "Chemical").select(
-        "doc_id",
-        F.col("mention_id").alias("chem_mention_id"),
-        F.col("mesh_id").alias("chem_mesh"),
-    )
-    dis = mentions.where(F.col("type") == "Disease").select(
-        "doc_id",
-        F.col("mention_id").alias("dis_mention_id"),
-        F.col("mesh_id").alias("dis_mesh"),
-    )
-    return chem.join(dis, "doc_id")
-
-
-def label_pairs(pairs: DataFrame, gold: DataFrame) -> DataFrame:
-    """J2: gold-label join; unmatched ⇒ negative (label 0).
-
-    gold is the small side (≈0.3 relations/pair-universe) — broadcast."""
-    g = F.broadcast(
-        gold.select(
-            "doc_id", "chem_mesh", "dis_mesh", F.lit(1).alias("label")
-        ).dropDuplicates()
-    )
-    return pairs.join(g, ["doc_id", "chem_mesh", "dis_mesh"], "left").withColumn(
-        "label", F.coalesce(F.col("label"), F.lit(0))
-    )
-
-
-def hypernym_filter(labeled_pairs: DataFrame, mesh_dict: DataFrame) -> DataFrame:
-    """J3: drop negative pairs whose disease is a MeSH *ancestor* of a
-    positively-labeled disease for the same (doc, chem).
-
-    positives ⋈ broadcast(ancestor closure) expands each positive disease to
-    its ancestor set ("shadowed" diseases); negatives left-anti join away.
-    The closure is precomputed in mesh_dict.ancestors (fixtures/gen.py), so
-    no iterative graph traversal happens at query time.
-    """
-    anc = F.broadcast(
-        mesh_dict.select(
-            F.col("mesh_id").alias("dis_mesh"), F.explode("ancestors").alias("shadowed_dis")
-        )
-    )
-    positives = labeled_pairs.where(F.col("label") == 1)
-    shadowed = (
-        positives.join(anc, "dis_mesh")
-        .select("doc_id", "chem_mesh", F.col("shadowed_dis").alias("dis_mesh"))
-        .dropDuplicates()
-    )
-    negatives = labeled_pairs.where(F.col("label") == 0)
-    kept_neg = negatives.join(
-        shadowed, ["doc_id", "chem_mesh", "dis_mesh"], "left_anti"
-    )
-    return positives.unionByName(kept_neg)
 
 
 def salted_count_distinct(
@@ -105,7 +42,7 @@ def mil_bags(labeled_pairs: DataFrame) -> DataFrame:
     pair; distant supervision labels the BAG, not the sentence).
 
     Input: (doc_id, chem_mesh, dis_mesh, label) — one row per
-    per-document candidate pair (label_pairs output). Each (chem, dis)
+    per-document candidate pair with its gold label. Each (chem, dis)
     entity pair becomes one bag:
 
       n_docs      — bag size (co-occurrence support)

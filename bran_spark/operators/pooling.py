@@ -10,7 +10,6 @@ DuckDB oracle can replay it exactly.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type hints must resolve here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -84,23 +83,6 @@ def entity_degree(triples: DataFrame, salt_buckets: int = 16) -> DataFrame:
         .groupBy("entity")
         .agg(F.sum("distinct_count").cast("long").alias("degree"))
     )
-
-
-def lse_pool_grouped_pandas(scores, keys: list[str], score_col: str = "score"):
-    """P5: the grouped-aggregate pandas-UDF formulation of LSE pooling —
-    numerically-stable logsumexp per group, computed in NumPy over Arrow
-    batches. The relational ``lse_pool`` (A2) is the production path (pure
-    JVM, partial-agg); this exists to pin the UDAF surface and is
-    equivalence-tested against it (tests/test_operators.py). Use it as the
-    template when a pooling function genuinely has no relational form."""
-    import numpy as np
-
-    @F.pandas_udf("double")
-    def _lse(v: pd.Series) -> float:  # Series→scalar hints ⇒ GROUPED_AGG
-        m = v.max()
-        return float(m + np.log(np.exp((v - m).to_numpy()).sum()))
-
-    return scores.groupBy(*keys).agg(_lse(F.col(score_col)).alias("pooled"))
 
 
 def triple_provenance(

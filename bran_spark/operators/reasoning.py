@@ -494,20 +494,15 @@ def domain_conformance(
 #                                gets a deterministic, explainable plan)
 
 
-def property_path(
-    triples: DataFrame, path, distinct_steps: bool = True
-) -> DataFrame:
+def property_path(triples: DataFrame, path) -> DataFrame:
     """Evaluate a SPARQL property-path expression over (subj, pred,
     obj) triples to the DISTINCT (s, o) pair relation it denotes.
 
-    Composition is left-to-right equi-joins; ``distinct_steps`` keeps a
-    DISTINCT after every composition so bounded-star expansion is
-    semi-naive (a pair reachable along many walks is carried once, not
-    once per walk — the difference between |V|·depth and path-count
-    blowup on dense graphs)."""
-
-    def _dedup(df: DataFrame) -> DataFrame:
-        return df.distinct() if distinct_steps else df
+    Composition is left-to-right equi-joins with a DISTINCT after every
+    composition, so bounded-star expansion is semi-naive (a pair
+    reachable along many walks is carried once, not once per walk — the
+    difference between |V|·depth and path-count blowup on dense
+    graphs)."""
 
     def ev(p) -> DataFrame:
         if isinstance(p, str):
@@ -523,12 +518,12 @@ def property_path(
             out = ev(p[1])
             for sub in p[2:]:
                 out = out.unionByName(ev(sub))
-            return _dedup(out)
+            return out.distinct()
         if op == "seq":
             out = ev(p[1])
             for sub in p[2:]:
                 right = ev(sub)
-                out = _dedup(
+                out = (
                     out.alias("l")
                     .join(
                         right.alias("r"), F.col("l.o") == F.col("r.s")
@@ -536,10 +531,11 @@ def property_path(
                     .select(
                         F.col("l.s").alias("s"), F.col("r.o").alias("o")
                     )
+                    .distinct()
                 )
             return out
         if op == "plus":
-            base = _dedup(ev(p[1]))
+            base = ev(p[1]).distinct()
             k = int(p[2])
             if k < 1:
                 # k=0 would silently return path^1 (range(k-1) empty) —
@@ -548,14 +544,15 @@ def property_path(
             reach = base
             frontier = base
             for _ in range(k - 1):
-                frontier = _dedup(
+                frontier = (
                     frontier.alias("l")
                     .join(base.alias("r"), F.col("l.o") == F.col("r.s"))
                     .select(
                         F.col("l.s").alias("s"), F.col("r.o").alias("o")
                     )
+                    .distinct()
                 )
-                reach = _dedup(reach.unionByName(frontier))
+                reach = reach.unionByName(frontier).distinct()
             return reach
         raise ValueError(f"unknown path op: {p!r}")
 

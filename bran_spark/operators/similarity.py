@@ -332,12 +332,11 @@ def lsh_bucket_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: tuple[int, ...] = (0, 7, 13, 21),
-    center: bool = True,
 ) -> DataFrame:
-    """Approximate top-k: scan only the query's sign bucket (centered by
-    default — see :func:`sign_bucket` for why uncentered bits degenerate on
-    biased embedding stores)."""
-    offsets = dim_means(emb, vec_col, dims) if center else None
+    """Approximate top-k: scan only the query's sign bucket, centered on
+    the corpus means — see :func:`sign_bucket` for why uncentered bits
+    degenerate on biased embedding stores."""
+    offsets = dim_means(emb, vec_col, dims)
     with_bucket = emb.select(
         F.col(id_col).alias("vec_id"),
         _as_double(F.col(vec_col)).alias("v"),
@@ -359,13 +358,12 @@ def ann_knn_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bands: "tuple[tuple[int, ...], ...] | None" = None,
-    center: bool = True,
 ) -> DataFrame:
     """Batch k-NN self-join: for EVERY vector, its top-k neighbors among the
     candidates colliding with it in any sign-LSH band — the all-queries
     counterpart of :func:`lsh_bucket_topk` (one query) and the retrieval
     primitive behind embedding-based dedup audits and hard-negative mining.
-    Band keys are centered by default (:func:`sign_bucket`).
+    Band keys are centered (:func:`sign_bucket`).
 
     Scale shape mirrors ``dedup.embedding_neardup_pairs``: the banded
     explode shuffles only (id, band, key); the wide vectors rejoin the
@@ -383,7 +381,7 @@ def ann_knn_join(
     if bands is None:
         bands = DEFAULT_SIGN_BANDS
     all_dims = tuple(sorted({d for dims in bands for d in dims}))
-    offsets = dim_means(emb, vec_col, all_dims) if center else None
+    offsets = dim_means(emb, vec_col, all_dims)
     keyed = banded_sign_keys(emb, id_col, vec_col, bands, offsets)
     ids = F.col(id_col).alias("id")
     a = keyed.select(F.col("id").alias("id_a"), "band", "key")
@@ -916,7 +914,6 @@ def mutual_nearest_neighbors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bands: "tuple[tuple[int, ...], ...] | None" = None,
-    center: bool = True,
 ) -> DataFrame:
     """Mutual-nearest-neighbor pairs: (a, b) where b is a's rank-1
     neighbor AND a is b's — the reciprocity filter that turns a noisy
@@ -930,7 +927,7 @@ def mutual_nearest_neighbors(
     pair — no new corpus pass. Output: (id_a, id_b, cos) with
     id_a < id_b, one row per mutual pair."""
     nn1 = ann_knn_join(
-        emb, k=1, id_col=id_col, vec_col=vec_col, bands=bands, center=center
+        emb, k=1, id_col=id_col, vec_col=vec_col, bands=bands
     ).select("id_a", "id_b", "cos")
     rev = nn1.select(
         F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")

@@ -1065,6 +1065,26 @@ def _fixture_sf_for(sf_dir: str) -> float:
         return 0.001
 
 
+def _fx_dir(sf_dir: str) -> str:
+    """The fixture corpus at the scale of ``sf_dir``, generated if absent."""
+    from bran_spark.fixtures.gen import ensure, fixture_dir
+
+    s = _fixture_sf_for(sf_dir)
+    ensure(s)
+    return fixture_dir(s)
+
+
+def _fx_pipeline(spark, sf_dir: str):
+    """A lazy flagship pipeline over that corpus. It commits nothing, so
+    the checkpoint root is never created."""
+    from bran_spark.plans.pipeline import Pipeline, PipelineConfig
+
+    cfg = PipelineConfig(
+        fixture_dir=_fx_dir(sf_dir), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
+    )
+    return Pipeline(spark, cfg)
+
+
 @_q("kg_triples_plain")
 def kg_triples_plain(spark, sf):
     """Flagship KG pipeline over the driver's plain documents table:
@@ -1078,12 +1098,9 @@ def kg_triples_plain(spark, sf):
 def kg_triples_fixture(spark, sf):
     """Flagship KG pipeline on the seeded CDR-shaped fixture corpus at the
     matching scale (the honest reproduction of the reference task)."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.plans.pipeline import flagship
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    return flagship(spark, fixture_dir(s))
+    return flagship(spark, _fx_dir(sf))
 
 
 # The fixture-corpus oracle twins read the deterministic (seed=42) fixture
@@ -1180,16 +1197,14 @@ def media_features_fixture(spark, sf):
     The feature vector is posexploded to scalar (dim_idx, value) rows so the
     driver's canonicalizer can hash the output (array columns are not
     hashable there); tests/ keep the full-vector form."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.multimodal import (
         extract_media_features,
         fetch_media_payload,
         media_spans,
     )
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    docs = spark.read.parquet(f"{fixture_dir(s)}/documents_interleaved.parquet")
+    fx = _fx_dir(sf)
+    docs = spark.read.parquet(f"{fx}/documents_interleaved.parquet")
     feats = extract_media_features(fetch_media_payload(media_spans(docs)))
     return feats.select(
         "doc_id", "media_ref", "kind", "width", "height", "n_bytes",
@@ -1275,14 +1290,11 @@ def kg_edges_fixture(spark, sf):
     support). The score path still executes; max_score (model output, no SQL
     twin) is projected away here and stays covered by the golden-triple
     tests; thresholded edges are exercised by kg_triples_fixture + q24."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.pooling import dedup_triples
     from bran_spark.plans.pipeline import flagship
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
     return dedup_triples(
-        flagship(spark, fixture_dir(s), theta=float("-inf"))
+        flagship(spark, _fx_dir(sf), theta=float("-inf"))
     ).select("subj", "pred", "obj", "support")
 
 
@@ -1291,15 +1303,7 @@ def bpe_tokens_fixture(spark, sf):
     """X1 BPE tokenizer output distribution on the fixture corpus: token ->
     frequency (python-UDF stage — rows-only; exactness covered by the
     round-trip/offset pytest properties)."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
-    from bran_spark.plans.pipeline import Pipeline, PipelineConfig
-
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir(s), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
-    )
-    toks = Pipeline(spark, cfg).tokenized()
+    toks = _fx_pipeline(spark, sf).tokenized()
     return (
         toks.select(F.explode("tokens").alias("t"))
         .groupBy(F.col("t.tok").alias("tok"))
@@ -1328,13 +1332,10 @@ def q48(spark, sf):
     salted two-phase distinct (P3) on the hottest entities — over the full
     DAG's θ=-inf edge structure so DuckDB replays it exactly (same
     structural-twin rationale as kg_edges_fixture)."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.pooling import entity_degree
     from bran_spark.plans.pipeline import flagship
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    return entity_degree(flagship(spark, fixture_dir(s), theta=float("-inf")))
+    return entity_degree(flagship(spark, _fx_dir(sf), theta=float("-inf")))
 
 
 @_q("ner_tags_fixture")
@@ -1343,17 +1344,10 @@ def ner_tags_fixture(spark, sf):
     the SAME encoder pass the pair scorer uses (score_documents emit="ner").
     Model forward — rows-only check; bitwise parity vs local NumPy is pinned
     by tests/test_model.py::test_ner_head_matches_local_numpy."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.functions.bpe import full_text_col
     from bran_spark.model.scorer import score_documents
-    from bran_spark.plans.pipeline import Pipeline, PipelineConfig
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir(s), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
-    )
-    p = Pipeline(spark, cfg)
+    p = _fx_pipeline(spark, sf)
     # text in: the scorer tokenizes in its own Python pass
     docs = p._even_repartition(p.documents()).select(
         "doc_id", full_text_col("spans").alias("full_text")
@@ -1874,17 +1868,9 @@ def _fx_memo(spark, key: str, sf: float, build) -> DataFrame:
 
 def _fx_mentions(spark, sf) -> DataFrame:
     """Materialized mention-stage output for the fixture at this scale."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
-    from bran_spark.plans.pipeline import Pipeline, PipelineConfig
-
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir(s), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
-    )
     return _fx_memo(
-        spark, "mentions", s,
-        lambda: Pipeline(spark, cfg).stage_mentions(resume=False),
+        spark, "mentions", _fixture_sf_for(sf),
+        lambda: _fx_pipeline(spark, sf).stage_mentions(resume=False),
     )
 
 
@@ -2270,12 +2256,10 @@ def q66(spark, sf):
     BFS over the parent DAG (graphalgo.ancestor_closure). The oracle
     enumerates ALL bounded paths and takes MIN(depth) — identical result,
     quadratic path blowup the Spark side deliberately avoids."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.graphalgo import ancestor_closure
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    dict_df = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    dict_df = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     edges = dict_df.select(
         F.col("mesh_id").alias("child"), F.explode("parents").alias("parent")
     )
@@ -2492,12 +2476,10 @@ def q72(spark, sf):
     entities with near-duplicate NAMES by char-trigram Jaccard (blocking
     via inverted trigram index + hot-trigram df-cut, exact verify) —
     linking.name_neardup_pairs."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.linking import name_neardup_pairs
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    d = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    d = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     return name_neardup_pairs(d)
 
 
@@ -3208,12 +3190,10 @@ def q92(spark, sf):
     the trigram-blocked candidates (q72) — blocking keeps the expensive
     O(len²) distance off the full cross product; the ≤2-edit flag is the
     match decision. Integer outputs, bit-exact across engines."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.linking import name_neardup_pairs
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    d = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    d = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     names = d.select(
         "mesh_id", F.lower("canonical_name").alias("s")
     )
@@ -3765,13 +3745,11 @@ def q104(spark, sf):
     canonical alias = the cluster minimum's name. The full ER/canonical-
     ization flow a KG runs before edge materialization, every stage of
     which is individually oracle-checked."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.components import connected_components
     from bran_spark.operators.linking import name_neardup_pairs
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    d = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    d = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     names = d.select("mesh_id", F.lower("canonical_name").alias("s"))
     cand = name_neardup_pairs(d).select("id_a", "id_b")
     verified = (
@@ -4296,20 +4274,11 @@ def rerank_fixture(spark, sf):
     re-implementing the model in SQL, which would verify nothing. Rows-only
     by design; correctness carried by the bitwise NumPy-parity pin in
     tests/test_model.py."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.functions.bpe import full_text_col, with_token_arrays
     from bran_spark.model.rerank import rerank_pairs
     from bran_spark.operators.search import bm25_topk
-    from bran_spark.plans.pipeline import Pipeline, PipelineConfig
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir(s),
-        checkpoint_root="/tmp/bran_ckpt_q",
-        checkpoint=False,
-    )
-    p = Pipeline(spark, cfg)
+    p = _fx_pipeline(spark, sf)
     docs = p._even_repartition(p.documents()).withColumn(
         "full_text", full_text_col("spans")
     )
@@ -4334,7 +4303,7 @@ def rerank_fixture(spark, sf):
     cand_toks = with_token_arrays(
         docs.join(cands.select("doc_id"), "doc_id"),
         p.codec_bc(),
-        max_tokens=cfg.max_tokens,
+        max_tokens=p.cfg.max_tokens,
     ).select(
         F.col("doc_id").alias("cand_id"), F.col("tok_ids").alias("c_tok_ids")
     )
@@ -4343,7 +4312,7 @@ def rerank_fixture(spark, sf):
             [("q0", " ".join(terms))], "query_id string, full_text string"
         ),
         p.codec_bc(),
-        max_tokens=cfg.max_tokens,
+        max_tokens=p.cfg.max_tokens,
     ).select("query_id", F.col("tok_ids").alias("q_tok_ids"))
     pairs = cand_toks.crossJoin(F.broadcast(query))
     return rerank_pairs(pairs, p.weights_bc())
@@ -4593,12 +4562,10 @@ def q119(spark, sf):
     back-edges (reversals of the md5-coin ≡ 0 mod 17 edges), so the
     residue is non-empty and deterministic on both engines
     (operators/graphalgo.cycle_residue)."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.graphalgo import cycle_residue
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    dict_df = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    dict_df = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     he = dict_df.select(
         F.col("mesh_id").alias("child"), F.explode("parents").alias("parent")
     )
@@ -5600,12 +5567,10 @@ def q139(spark, sf):
     against the level-synchronous closure (never the quadratic all-paths
     enumeration the oracle is allowed); the oracle's EXCEPT is the anti-join
     twin."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.graphalgo import transitive_reduction
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    dict_df = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    dict_df = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     edges = dict_df.select(
         F.col("mesh_id").alias("child"), F.explode("parents").alias("parent")
     )
@@ -6550,16 +6515,13 @@ _ONTO_IC_SQL = f"""
 
 
 def _onto_inputs(spark, sf):
-    from bran_spark.fixtures.gen import ensure, fixture_dir
-
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    dict_df = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    dict_df = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     edges = dict_df.select(
         F.col("mesh_id").alias("child"), F.explode("parents").alias("parent")
     )
     nodes = dict_df.select(F.col("mesh_id").alias("node"))
-    mentions = spark.read.parquet(f"{fixture_dir(s)}/mentions.parquet")
+    mentions = spark.read.parquet(f"{fx}/mentions.parquet")
     return edges, nodes, mentions
 
 
@@ -6845,16 +6807,14 @@ _FS_CAND_SQL = f"""
 
 
 def _fs_cand_weights(spark, sf):
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.linking import (
         fs_field_weights,
         mention_dict_candidates,
     )
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    mentions = spark.read.parquet(f"{fixture_dir(s)}/mentions.parquet")
-    mesh = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    mentions = spark.read.parquet(f"{fx}/mentions.parquet")
+    mesh = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     cand = materialize(
         mention_dict_candidates(mentions, mesh, prefix_len=3, max_block=50)
     )
@@ -7056,10 +7016,7 @@ def q168(spark, sf):
         .select("chem", "dis")
     )
     pred_b = pd_.where(F.col("chem_cnt") >= 2).select("chem", "dis").distinct()
-    s = _fixture_sf_for(sf)
-    from bran_spark.fixtures.gen import fixture_dir
-
-    gold = spark.read.parquet(f"{fixture_dir(s)}/gold_relations.parquet").select(
+    gold = spark.read.parquet(f"{_fx_dir(sf)}/gold_relations.parquet").select(
         F.col("chem_mesh").alias("chem"), F.col("dis_mesh").alias("dis")
     )
     return mcnemar_compare(gold, pred_a, pred_b, keys=["chem", "dis"])
@@ -7188,13 +7145,11 @@ def q171(spark, sf):
     text span before and after in document order — the CLIP-style
     (image, caption) pair extraction the BASELINE.json interleaved
     input shape exists to enable. posexplode + two per-doc windows."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.multimodal import caption_candidates
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
+    fx = _fx_dir(sf)
     docs = spark.read.parquet(
-        f"{fixture_dir(s)}/documents_interleaved.parquet"
+        f"{fx}/documents_interleaved.parquet"
     )
     return caption_candidates(docs)
 
@@ -7281,13 +7236,11 @@ def q173(spark, sf):
     media/text span shape, kind enum. Spark folds row-locally; the
     oracle replays the accumulation as a per-doc window — equality
     proves the fold's bookkeeping."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.sources.interleave import validate_interleaved
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
+    fx = _fx_dir(sf)
     docs = spark.read.parquet(
-        f"{fixture_dir(s)}/documents_interleaved.parquet"
+        f"{fx}/documents_interleaved.parquet"
     )
     return validate_interleaved(docs)
 
@@ -8861,7 +8814,7 @@ def q211(spark, sf):
     sw = wt.select(F.col("subj").alias("u"), F.col("obj").alias("v"), "w").unionByName(
         wt.select(F.col("obj").alias("u"), F.col("subj").alias("v"), "w")
     )
-    return topk_neighbor_graph(sw, k=3, mutual=True)
+    return topk_neighbor_graph(sw, k=3)
 
 
 @_q(
@@ -8887,12 +8840,10 @@ def q212(spark, sf):
     blocking; pure lead() window arithmetic, no join. At corpus scale
     the sort range-partitions by key prefix with window-overlapped
     boundaries."""
-    from bran_spark.fixtures.gen import ensure, fixture_dir
     from bran_spark.operators.linking import sorted_neighborhood_pairs
 
-    s = _fixture_sf_for(sf)
-    ensure(s)
-    names = spark.read.parquet(f"{fixture_dir(s)}/mesh_dict.parquet")
+    fx = _fx_dir(sf)
+    names = spark.read.parquet(f"{fx}/mesh_dict.parquet")
     return sorted_neighborhood_pairs(
         names, "mesh_id", "canonical_name", window=3
     )
@@ -8988,7 +8939,7 @@ def q213(spark, sf):
     ).unionByName(
         wt.select(F.col("obj").alias("u"), F.col("subj").alias("v"), "w")
     )
-    knn = topk_neighbor_graph(sw, k=3, mutual=True)
+    knn = topk_neighbor_graph(sw, k=3)
     und = knn.where(F.col("u") < F.col("v"))
     return boruvka_spanning_forest(und, minimum=False, max_rounds=8)
 

@@ -67,7 +67,8 @@ class Pipeline:
         fixture tables from cfg.fixture_dir."""
         self.spark = spark
         self.cfg = cfg
-        self.io = ManifestParquetTableIO(cfg.checkpoint_root)
+        # a lazy run commits nothing, so it opens (and creates) no store
+        self.io = ManifestParquetTableIO(cfg.checkpoint_root) if cfg.checkpoint else None
         self._docs_df = docs_df
         self._mesh_df = mesh_df
         self._codec_bc = None

@@ -277,57 +277,6 @@ class IcebergTableIO:
         return spark.read.table(fq)
 
 
-def write_bucketed(
-    df,
-    name: str,
-    path: str,
-    bucket_cols: list[str],
-    num_buckets: int = 8,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed external table (registered in the
-    session catalog so ``spark.table(name)`` exposes the bucketing spec).
-
-    This is the co-located-join layout for 100 TB fact tables: two tables
-    bucketed by the same key into the same bucket count join WITHOUT any
-    shuffle (Catalyst sees the hash-distribution from the catalog and plans
-    a zero-Exchange sort-merge join) — asserted by tests/test_layout.py.
-    On a real cluster the same call shape targets the warehouse/Iceberg
-    catalog instead of an explicit path."""
-    w = df.write.mode("overwrite").option("path", path).bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(name)
-
-
-def compact_partitions(df, target_mb: int = 128):
-    """Small-file management: repartition so each output file lands near
-    ``target_mb`` (the classic 100 TB ops problem — a 10^12-doc job with
-    32k shuffle partitions writes 32k tiny files per snapshot unless the
-    sink compacts). Partition count comes from Catalyst's own size
-    estimate (optimizedPlan().stats), so no extra pass over the data; the
-    round-robin repartition keeps files even. For already-small frames this
-    COALESCES (narrow, no shuffle) instead of repartitioning. Both
-    directions are handled: an over-partitioned frame (many tiny files) is
-    merged, and an under-partitioned frame (few partitions far above
-    target_mb) is SPLIT via repartition(n) so no single output file
-    balloons past the target."""
-    size_bytes = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    n = max(1, int((int(size_bytes) + target_mb * 2**20 - 1) // (target_mb * 2**20)))
-    current = df.rdd.getNumPartitions()
-    if n == current:
-        return df
-    if n > current:
-        # under-partitioned: split so each file lands near target_mb
-        return df.repartition(n)
-    if n <= max(1, current // 4):
-        # big shrink → narrow coalesce avoids a full shuffle
-        return df.coalesce(n)
-    return df.repartition(n)
-
-
 def _expire_snapshots_impl(io, table: str, keep_last: int = 2) -> list[int]:
     """Shared snapshot-expiry logic for ManifestParquetTableIO."""
     cur = io.current_snapshot(table)

@@ -207,18 +207,6 @@ def test_bucketed_interval_join_prefilters_null_and_inverted(spark):
     assert len(rows) == 2  # hours 01 and 02 both matched
 
 
-def test_compact_partitions_splits_underpartitioned(spark, testdata_dir):
-    """An under-partitioned frame (1 partition, size >> target) must be
-    SPLIT so output files land near target_mb, not passed through."""
-    from bran_spark.sources.tableio import compact_partitions
-
-    # range: 8 bytes/row in Catalyst's estimate -> ~8 MB in one partition
-    big = spark.range(1_000_000).coalesce(1)
-    out = compact_partitions(big, target_mb=1)
-    assert out.rdd.getNumPartitions() > 1
-    assert out.count() == 1_000_000
-
-
 def test_negative_samples_empty_pool_raises(spark):
     from bran_spark.operators.sampling import negative_samples
 

@@ -55,10 +55,9 @@ def test_pagerank_matches_local_reference(spark):
 
 def test_triangle_counts_no_vertex_broadcast_by_default(spark):
     """Scale guard: the |V|-sized degree-key attach must NOT be broadcast
-    unless explicitly requested — a 10^8-node vertex set would OOM the
-    broadcast. Default plan: zero BroadcastExchange anywhere (wedge +
-    closing joins are self-joins of the edge list); broadcast_keys=True
-    restores the dimension-graph fast path."""
+    — a 10^8-node vertex set would OOM the broadcast. Plan: zero
+    BroadcastExchange anywhere (wedge + closing joins are self-joins of
+    the edge list)."""
     from bran_spark.operators.graphalgo import oriented_edges
 
     pairs = [(f"c{i}", f"d{i % 4}") for i in range(16)]
@@ -69,15 +68,6 @@ def test_triangle_counts_no_vertex_broadcast_by_default(spark):
         oriented_edges(proj)._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastExchange" not in plan_default
-    plan_bcast = (
-        oriented_edges(proj, broadcast_keys=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastExchange" in plan_bcast
-    # both strategies produce identical counts
-    a = sorted(map(tuple, triangle_counts(proj).collect()))
-    b = sorted(map(tuple, triangle_counts(proj, broadcast_keys=True).collect()))
-    assert a == b
 
 
 def test_pagerank_partition_invariant(spark):
@@ -1066,16 +1056,13 @@ def test_topk_neighbor_graph_mutuality_drops_hub_tail(spark):
         e += [("hub", node, w), (node, "hub", w)]
     e += [("c", "d", 2), ("d", "c", 2)]  # weak clique on the side
     edges = spark.createDataFrame(e, "u string, v string, w long")
-    out = {(r.u, r.v) for r in topk_neighbor_graph(edges, k=1, mutual=True).collect()}
+    out = {(r.u, r.v) for r in topk_neighbor_graph(edges, k=1).collect()}
     # hub's top-1 is a; a's top-1 is hub -> mutual both directions
     assert ("hub", "a") in out and ("a", "hub") in out
     # b's top-1 is hub but hub's top-1 is a -> dropped
     assert ("b", "hub") not in out
     # d's top-1 is c (w=2 > 1); c's top-1 is hub -> dropped
     assert ("d", "c") not in out
-    # non-mutual keeps per-node top-1 regardless
-    directed = {(r.u, r.v) for r in topk_neighbor_graph(edges, k=1, mutual=False).collect()}
-    assert ("b", "hub") in directed and ("d", "c") in directed
 
 
 def test_boruvka_spanning_forest_exact_mst(spark):

@@ -11,7 +11,14 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from bran_spark.sources.tableio import write_bucketed
+
+def _write_bucketed(df, name: str, path: str, key: str) -> None:
+    """Persist ``df`` as an external table bucketed by ``key`` into 8
+    buckets, registered in the session catalog so ``spark.table(name)``
+    exposes the bucketing spec."""
+    df.write.mode("overwrite").option("path", path).bucketBy(8, key).format(
+        "parquet"
+    ).saveAsTable(name)
 
 
 @pytest.fixture()
@@ -27,12 +34,10 @@ def no_broadcast(spark):
 def test_bucketed_join_has_no_shuffle(spark, testdata_dir, no_broadcast, tmp_path):
     orders = spark.read.parquet(f"{testdata_dir}/orders.parquet")
     lineitem = spark.read.parquet(f"{testdata_dir}/lineitem.parquet")
-    write_bucketed(
-        orders, "b_orders", str(tmp_path / "b_orders"), ["o_orderkey"], 8
-    )
-    write_bucketed(
+    _write_bucketed(orders, "b_orders", str(tmp_path / "b_orders"), "o_orderkey")
+    _write_bucketed(
         lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem", str(tmp_path / "b_lineitem"), ["o_orderkey"], 8,
+        "b_lineitem", str(tmp_path / "b_lineitem"), "o_orderkey",
     )
     try:
         j = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
@@ -76,20 +81,6 @@ def test_partitioned_sink_read_prunes_partitions(spark, fx_dir, tmp_path):
     assert "PartitionFilters" in plan and "pred" in plan.split("PartitionFilters")[1][:120]
     # and the filter is NOT a post-scan row filter on pred
     shutil.rmtree(out, ignore_errors=True)
-
-
-def test_compact_partitions_reduces_file_count(spark, testdata_dir, tmp_path):
-    from bran_spark.sources.tableio import compact_partitions
-
-    li = spark.read.parquet(f"{testdata_dir}/lineitem.parquet").repartition(32)
-    out = str(tmp_path / "compacted")
-    compact_partitions(li, target_mb=64).write.mode("overwrite").parquet(out)
-    import os
-
-    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    assert 1 <= len(files) <= 4          # sf0.001 lineitem ≪ 64 MB → ~1 file
-    got = spark.read.parquet(out).count()
-    assert got == li.count()             # lossless
 
 
 def test_ivf_cells_written_partitioned_prune_on_probe(spark, testdata_dir, tmp_path):

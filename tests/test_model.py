@@ -77,55 +77,93 @@ def test_ner_head():
     assert logits.shape == (28, w.n_ner)
 
 
-def test_ner_head_matches_local_numpy(spark):
-    """P4 wiring: score_documents(emit='ner') must reproduce the local
-    encode→ner_logits→argmax bitwise, and emit='both' must carry the same
-    ner rows alongside the pair logits from ONE encoder pass."""
-    from bran_spark.model.scorer import score_documents
+def _text_docs(spark, fx_dir, n):
+    """The first ``n`` fixture abstracts (by doc_id) as (doc_id, full_text,
+    mentions) rows — the scorer's input — plus the fixture's BPE codec."""
+    from bran_spark.functions.bpe import full_text_col, load_codec
 
-    w = _weights()
-    wbc = spark.sparkContext.broadcast(w)
-    rng = np.random.default_rng(3)
-    ids = rng.integers(2, w["embed"].shape[0], size=23).astype(np.int64)
-    starts = np.arange(23, dtype=np.int32) * 5
+    codec = load_codec(spark, f"{fx_dir}/bpe_merges.parquet", f"{fx_dir}/vocab.parquet")
+    mentions = (
+        spark.read.parquet(f"{fx_dir}/mentions.parquet")
+        .groupBy("doc_id")
+        .agg(F.collect_list(
+            F.struct("mention_id", "type", "mesh_id", "start", "end")
+        ).alias("mentions"))
+    )
+    rows = (
+        spark.read.parquet(f"{fx_dir}/documents_interleaved.parquet")
+        .select("doc_id", full_text_col("spans").alias("full_text"))
+        .join(mentions, "doc_id")
+        .orderBy("doc_id")
+        .limit(n)
+        .collect()
+    )
     docs = spark.createDataFrame(
-        [("d1", [int(i) for i in ids], [int(s) for s in starts],
-          [{"mention_id": "d1#0", "type": "Chemical", "mesh_id": "C1",
-            "start": 0, "end": 4},
-           {"mention_id": "d1#2", "type": "Disease", "mesh_id": "D1",
-            "start": 10, "end": 14}])],
-        "doc_id string, tok_ids array<int>, tok_starts array<int>, "
+        [(r.doc_id, r.full_text, r.mentions) for r in rows],
+        "doc_id string, full_text string, "
         "mentions array<struct<mention_id:string,type:string,mesh_id:string,"
         "start:int,end:int>>",
     )
-    enc = encode_one(ids, w)
-    logits = ner_logits(enc, w)
-    tags = logits.argmax(axis=1)
+    return rows, docs, codec
 
-    out = {r.tok_idx: r for r in score_documents(docs, wbc, emit="ner").collect()}
-    assert len(out) == 23
-    for i in range(23):
-        assert out[i].ner_tag == tags[i]
-        assert out[i].tok_start == starts[i]
-        # executors run pinned single-thread BLAS; this test process does
-        # not, so the local reference can differ in the last float32 bit —
-        # tags must still agree exactly, scores to 1 ulp-ish tolerance
-        np.testing.assert_allclose(
-            np.float32(out[i].ner_score), logits[i, tags[i]], rtol=0, atol=1e-6
-        )
 
-    both = score_documents(docs, wbc, emit="both").collect()
-    ner_rows = [r for r in both if r.kind == "ner"]
-    pair_rows = [r for r in both if r.kind == "pair"]
-    assert len(ner_rows) == 23 and len(pair_rows) == 1
-    assert {r.tok_idx: r.ner_tag for r in ner_rows} == {
-        i: int(t) for i, t in enumerate(tags)
-    }
-    assert pair_rows[0].chem_mesh == "C1" and pair_rows[0].dis_mesh == "D1"
+def _replay_encode(w, codec, cap, text):
+    """Local NumPy replay of one document's tokenize + solo encode."""
+    ids, starts = codec.token_arrays(text, cap)
+    enc = encode_one(np.asarray(ids, dtype=np.int64)[: w.max_len], w)
+    return enc, np.asarray(starts, dtype=np.int64)
+
+
+def test_ner_head_matches_local_numpy(spark, fx_dir):
+    """P4 wiring: score_documents(emit='ner') over fixture text must
+    reproduce the local tokenize→encode_one→ner_logits→argmax replay, at
+    the default cap and at one that truncates, and emit='both' must carry
+    the same ner rows alongside the pair logits from ONE encoder pass."""
+    from bran_spark.model.scorer import score_documents
+
+    w = _weights()
+    rows, docs, codec = _text_docs(spark, fx_dir, 6)
+    for cap in (512, 64):
+        wbc = spark.sparkContext.broadcast(Weights(w.a, codec, cap))
+        out = {
+            (r.doc_id, r.tok_idx): r
+            for r in score_documents(docs, wbc, emit="ner").collect()
+        }
+        n_expected = 0
+        for d in rows:
+            enc, starts = _replay_encode(w, codec, cap, d.full_text)
+            logits = ner_logits(enc, w)
+            tags = logits.argmax(axis=1)
+            n_expected += len(tags)
+            for i, t in enumerate(tags):
+                r = out[(d.doc_id, i)]
+                assert r.ner_tag == t and r.tok_start == starts[i], (cap, d.doc_id, i)
+                # executors run pinned single-thread BLAS; this test process
+                # does not, so the local reference can differ in the last
+                # float32 bit — tags must still agree exactly, scores to
+                # 1 ulp-ish tolerance
+                np.testing.assert_allclose(
+                    np.float32(r.ner_score), logits[i, t], rtol=0, atol=1e-6
+                )
+        assert len(out) == n_expected
+        if cap == 64:
+            # at least one abstract is cut at the cap
+            assert max(i for _, i in out) == cap - 1
+
+        both = score_documents(docs, wbc, emit="both").collect()
+        assert {
+            (r.doc_id, r.tok_idx): r.ner_tag for r in both if r.kind == "ner"
+        } == {k: r.ner_tag for k, r in out.items()}
+        pairs = sorted(tuple(r) for r in score_documents(docs, wbc).collect())
+        assert pairs and sorted(
+            (r.doc_id, r.chem_mention_id, r.dis_mention_id, r.chem_mesh,
+             r.dis_mesh, r.score)
+            for r in both if r.kind == "pair"
+        ) == pairs
 
 
 def test_encode_one_bitwise_matches_batch():
-    """The solo arena encoder (the flagship scorer's default path) must be
+    """The solo arena encoder (the flagship scorer's encoder) must be
     bitwise-equal to encode_batch([t]) across lengths including max_len
     truncation. Empty input is a documented divergence: encode_one pads to
     one zero token, encode_batch returns (0, d)."""
@@ -142,79 +180,52 @@ def test_encode_one_bitwise_matches_batch():
 
 
 def test_batched_scorer_matches_solo_scorer(spark, fx_dir):
-    """score_documents(batch_docs=4) must produce the same pair scores as
-    the batch_docs=1 default: the bucketed path once PRE-padded inputs to
-    the bucket length, which defeated the attention mask (pad tokens
-    attended as real ones) and silently shifted every logit. And text fed
-    to the scorer, tokenized in its worker, must score bitwise like the
-    same documents fed as token arrays, at the default cap and at one that
-    truncates."""
-    from bran_spark.functions.bpe import full_text_col, load_codec
+    """The scorer's mention-pair logits over fixture text must equal a
+    local NumPy replay of the same documents — BPE (``token_arrays``), one
+    solo ``encode_one`` per document, the J5 span alignment and
+    ``score_pairs`` — at the default cap and at one that truncates, where a
+    mention past the cap is dropped instead of scored against the last
+    token."""
     from bran_spark.model.scorer import score_documents
 
     w = _weights()
-    wbc = spark.sparkContext.broadcast(w)
-    rng = np.random.default_rng(13)
-    rows = []
-    for i, n in enumerate((7, 30, 45, 63, 64, 90)):
-        toks = rng.integers(2, 100, size=n).astype(int).tolist()
-        starts = list(range(0, 4 * n, 4))
-        rows.append((
-            f"d{i}", toks, starts,
-            [{"mention_id": f"d{i}#0", "type": "Chemical", "mesh_id": "C1",
-              "start": 0, "end": 4},
-             {"mention_id": f"d{i}#1", "type": "Disease", "mesh_id": "D1",
-              "start": 8, "end": 12}],
-        ))
-    docs = spark.createDataFrame(
-        rows,
-        "doc_id string, tok_ids array<int>, tok_starts array<int>, "
-        "mentions array<struct<mention_id:string,type:string,mesh_id:string,"
-        "start:int,end:int>>",
-    )
-    solo = {(r.doc_id, r.chem_mention_id, r.dis_mention_id): r.score
-            for r in score_documents(docs, wbc, batch_docs=1).collect()}
-    batched = {(r.doc_id, r.chem_mention_id, r.dis_mention_id): r.score
-               for r in score_documents(docs, wbc, batch_docs=4).collect()}
-    assert set(solo) == set(batched)
-    for k in solo:
-        np.testing.assert_allclose(batched[k], solo[k], rtol=0, atol=1e-6)
-
-    codec = load_codec(spark, f"{fx_dir}/bpe_merges.parquet", f"{fx_dir}/vocab.parquet")
-    mentions = (
-        spark.read.parquet(f"{fx_dir}/mentions.parquet")
-        .groupBy("doc_id")
-        .agg(F.collect_list(
-            F.struct("mention_id", "type", "mesh_id", "start", "end")
-        ).alias("mentions"))
-    )
-    text_docs = (
-        spark.read.parquet(f"{fx_dir}/documents_interleaved.parquet")
-        .select("doc_id", full_text_col("spans").alias("full_text"))
-        .join(mentions, "doc_id")
-        .orderBy("doc_id")
-        .limit(12)
-        .collect()
-    )
-    assert max(len(codec.token_arrays(r.full_text, 10**6)[0]) for r in text_docs) > 64
+    rows, docs, codec = _text_docs(spark, fx_dir, 12)
+    assert max(len(codec.token_arrays(r.full_text, 10**6)[0]) for r in rows) > 64
+    n_pairs = {}
     for cap in (512, 64):
         wbc = spark.sparkContext.broadcast(Weights(w.a, codec, cap))
-        arrays = spark.createDataFrame(
-            [(r.doc_id, *codec.token_arrays(r.full_text, cap), r.mentions)
-             for r in text_docs],
-            "doc_id string, tok_ids array<int>, tok_starts array<int>, "
-            "mentions array<struct<mention_id:string,type:string,mesh_id:string,"
-            "start:int,end:int>>",
-        )
-        text = spark.createDataFrame(
-            [(r.doc_id, r.full_text, r.mentions) for r in text_docs],
-            "doc_id string, full_text string, "
-            "mentions array<struct<mention_id:string,type:string,mesh_id:string,"
-            "start:int,end:int>>",
-        )
-        by_arrays = sorted(tuple(r) for r in score_documents(arrays, wbc).collect())
-        by_text = sorted(tuple(r) for r in score_documents(text, wbc).collect())
-        assert by_arrays and by_text == by_arrays, cap
+        want = {}
+        for d in rows:
+            enc, starts = _replay_encode(w, codec, cap, d.full_text)
+            chems, diss = [], []
+            for m in d.mentions:
+                lo = int(np.searchsorted(starts, m.start, side="left"))
+                hi = int(np.searchsorted(starts, m.end, side="left"))
+                hi = min(max(hi, lo + 1), len(enc))
+                if lo < len(enc) and hi > lo:
+                    (chems if m.type == "Chemical" else diss).append((m, (lo, hi)))
+            if not chems or not diss:
+                continue
+            s = score_pairs(enc, [c[1] for c in chems], [x[1] for x in diss], w)
+            for i, (c, _) in enumerate(chems):
+                for j, (x, _) in enumerate(diss):
+                    want[(d.doc_id, c.mention_id, x.mention_id)] = (
+                        c.mesh_id, x.mesh_id, s[i, j],
+                    )
+        got = {
+            (r.doc_id, r.chem_mention_id, r.dis_mention_id): (
+                r.chem_mesh, r.dis_mesh, r.score,
+            )
+            for r in score_documents(docs, wbc).collect()
+        }
+        assert got.keys() == want.keys() and got, cap
+        for k, (c, x, score) in want.items():
+            assert got[k][:2] == (c, x), k
+            # same 1-ulp allowance as the NER head (unpinned local BLAS)
+            np.testing.assert_allclose(got[k][2], score, rtol=1e-6, atol=1e-6)
+        n_pairs[cap] = len(got)
+    # the cap of 64 truncates mentions away, so fewer pairs survive
+    assert n_pairs[64] < n_pairs[512]
 
 
 def test_rerank_matches_local_numpy(spark):

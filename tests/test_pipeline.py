@@ -78,6 +78,15 @@ def test_partition_invariance(spark, fx_dir):
     assert ta == tb
 
 
+def test_lazy_run_creates_no_checkpoint_dir(spark, fx_dir, tmp_path):
+    """With checkpointing off nothing is committed, so neither building the
+    pipeline nor running its mention stage creates the checkpoint root."""
+    root = tmp_path / "ckpt"
+    cfg = PipelineConfig(fixture_dir=fx_dir, checkpoint_root=str(root), checkpoint=False)
+    assert Pipeline(spark, cfg).stage_mentions(resume=False).count() > 0
+    assert not root.exists()
+
+
 def test_eval_metrics_emitted(spark, fx_dir, tmp_path):
     cfg = PipelineConfig(
         fixture_dir=fx_dir, checkpoint_root=str(tmp_path / "ck"), theta=0.0

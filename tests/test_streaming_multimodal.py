@@ -6,7 +6,6 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
-import pytest
 
 from bran_spark.operators.multimodal import (
     extract_media_features,
@@ -64,22 +63,15 @@ def test_media_feature_plumbing(spark, fx_dir):
     media = media_spans(docs)
     n_media = media.count()
     assert n_media > 0
-    feats = extract_media_features(fetch_media_payload(media), decode="stub")
+    feats = extract_media_features(fetch_media_payload(media))
     rows = feats.collect()
     assert len(rows) == n_media
     r = rows[0]
     assert len(r.feature) == 8 and all(0.0 <= x <= 1.0 for x in r.feature)
     assert r.width >= 64 and r.height >= 64 and r.n_bytes > 0
     # deterministic across runs
-    again = extract_media_features(fetch_media_payload(media), decode="stub")
+    again = extract_media_features(fetch_media_payload(media))
     assert feats.exceptAll(again).count() == 0
-
-
-def test_media_real_decode_is_explicit_stub(spark, fx_dir):
-    docs = spark.read.parquet(f"{fx_dir}/documents_interleaved.parquet").limit(5)
-    media = fetch_media_payload(media_spans(docs))
-    with pytest.raises(Exception, match="NotImplementedError|real media decoding"):
-        extract_media_features(media, decode="real").collect()
 
 
 def test_stateful_user_counters_across_batches(spark, testdata_dir, tmp_path):
