@@ -41,9 +41,7 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def sign_bucket(
-    vec: Column,
-    dims: tuple[int, ...] = (0, 7, 13, 21),
-    offsets: "dict[int, float] | None" = None,
+    vec: Column, dims: tuple[int, ...], offsets: dict[int, float]
 ) -> Column:
     """Deterministic LSH bucket: concatenated sign bits of fixed coordinates,
     each taken RELATIVE to that coordinate's corpus mean (``offsets``).
@@ -53,14 +51,12 @@ def sign_bucket(
     the whole corpus into the all-ones bucket — the intra-bucket self-join
     degenerates toward O(N²). Subtracting the per-dimension mean keeps
     E[bucket] ≈ N/2^k regardless of bias, stays deterministic (means are
-    rounded to 6 dp, see :func:`dim_means`), and is oracle-replayable.
-    ``offsets=None`` ⇒ raw sign bits (centered-data fast path)."""
-    off = offsets or {}
+    rounded to 6 dp, see :func:`dim_means`), and is oracle-replayable."""
     return F.concat_ws(
         "",
         *[
             F.when(
-                F.element_at(vec, d + 1) >= F.lit(float(off.get(d, 0.0))), "1"
+                F.element_at(vec, d + 1) >= F.lit(float(offsets[d])), "1"
             ).otherwise("0")
             for d in dims
         ],
@@ -92,7 +88,7 @@ def banded_sign_keys(
     id_col: str,
     vec_col: str,
     bands: tuple[tuple[int, ...], ...],
-    offsets: "dict[int, float] | None" = None,
+    offsets: dict[int, float],
 ) -> DataFrame:
     """(id, band, key) — one row per (vector, band) with that band's
     centered sign-bit bucket key. Shared by the banded LSH consumers

@@ -1075,14 +1075,11 @@ def _fx_dir(sf_dir: str) -> str:
 
 
 def _fx_pipeline(spark, sf_dir: str):
-    """A lazy flagship pipeline over that corpus. It commits nothing, so
-    the checkpoint root is never created."""
+    """A lazy flagship pipeline over that corpus. It commits nothing, so it
+    has no checkpoint root."""
     from bran_spark.plans.pipeline import Pipeline, PipelineConfig
 
-    cfg = PipelineConfig(
-        fixture_dir=_fx_dir(sf_dir), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
-    )
-    return Pipeline(spark, cfg)
+    return Pipeline(spark, PipelineConfig(fixture_dir=_fx_dir(sf_dir), checkpoint=False))
 
 
 @_q("kg_triples_plain")

@@ -44,7 +44,7 @@ from bran_spark.sources.tableio import ManifestParquetTableIO
 @dataclass
 class PipelineConfig:
     fixture_dir: str
-    checkpoint_root: str
+    checkpoint_root: str | None = None  # required when checkpoint=True
     theta: float = 0.0
     score_buckets: int = 8          # resume granularity of the expensive stage
     salt_buckets: int = 16          # P3 skew fan-out
@@ -52,6 +52,10 @@ class PipelineConfig:
     checkpoint: bool = True
     emit: str = "pairs"             # "pairs" | "both" (joint NER+pairs, P4)
     extra: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if self.checkpoint and self.checkpoint_root is None:
+            raise ValueError("PipelineConfig: checkpoint=True needs a checkpoint_root")
 
 
 class Pipeline:
@@ -398,7 +402,9 @@ def flagship(spark: SparkSession, fixture_dir: str, checkpoint_root: str | None 
     composed (no checkpointing) so the driver can inspect the single plan."""
     cfg = PipelineConfig(
         fixture_dir=fixture_dir,
-        checkpoint_root=checkpoint_root or os.path.join(os.getcwd(), "checkpoints", "entry"),
+        checkpoint_root=checkpoint_root or (
+            os.path.join(os.getcwd(), "checkpoints", "entry") if checkpoint else None
+        ),
         checkpoint=checkpoint,
         theta=theta,
     )

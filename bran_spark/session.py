@@ -12,6 +12,22 @@ Scale notes (100 TB / 1000-executor design intent):
   in the word-split pandas UDF and in the scorer's mapInPandas (tokenize +
   encode + score); 128 docs/batch keeps NumPy matmuls amortized while
   bounding python-worker memory at 32 concurrent workers.
+
+Python daemon (local masters only):
+- ``spark.python.daemon.module=bran_spark.pydaemon`` forks the Python
+  workers from a daemon that skips PySpark's per-task
+  ``importlib.invalidate_caches()`` when ``sys.path`` has not changed.
+  The stock call makes every task re-read ``pyspark.zip``'s directory; it
+  was about 60 % of a no-op pandas UDF's per-task overhead.
+  ``spark.python.worker.module`` cannot carry this: ``pyspark/daemon.py``
+  honours only worker modules whose name starts with ``pyspark``.
+- The daemon imports ``bran_spark`` before any task has put the py-files
+  on its path, so the package root (the checkout, or the ``--py-files``
+  zip under spark-submit) goes on ``spark.executorEnv.PYTHONPATH``.
+- Both are set for ``local`` masters only: there the executors run on
+  this host and see the driver's paths. On a cluster the package root is
+  a driver path that the executors do not have, and a daemon that cannot
+  import its module fails every Python task, so the stock daemon runs.
 """
 
 from __future__ import annotations
@@ -21,6 +37,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+# the checkout, or the --py-files zip the package was imported from
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -83,6 +101,10 @@ def get_spark(
             os.environ.get("BRAN_SPARK_LOCAL_DIR", "/tmp"),
         )
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "bran_spark.pydaemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

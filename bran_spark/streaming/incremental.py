@@ -69,7 +69,6 @@ def incremental_triples(
 
     cfg = PipelineConfig(
         fixture_dir=fixture_dir,
-        checkpoint_root=os.path.join(checkpoint_dir, "_unused_tableio"),
         checkpoint=False,
         theta=theta,
     )

@@ -61,8 +61,9 @@ def main() -> None:
     )
     cfg = PipelineConfig(
         fixture_dir=fixture_dir(args.sf),
-        checkpoint_root=args.checkpoint_root
-        or os.path.join(os.getcwd(), "checkpoints", f"sf{args.sf}"),
+        checkpoint_root=None if args.no_checkpoint else (
+            args.checkpoint_root or os.path.join(os.getcwd(), "checkpoints", f"sf{args.sf}")
+        ),
         theta=args.theta,
         score_buckets=args.score_buckets,
         checkpoint=not args.no_checkpoint,

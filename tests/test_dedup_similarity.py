@@ -169,12 +169,14 @@ def test_sign_lsh_centering_resists_positive_bias(spark):
     rows.append((999, (np.array(rows[0][1]) + 1e-4).tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    # uncentered: every band key is all-ones — one bucket holds everything
-    raw = banded_sign_keys(emb, "vec_id", "embedding", DEFAULT_SIGN_BANDS)
+    # uncentered (zero offsets, the raw sign bits): every band key is
+    # all-ones — one bucket holds everything
+    dims = tuple(sorted({d for b in DEFAULT_SIGN_BANDS for d in b}))
+    zero = {d: 0.0 for d in dims}
+    raw = banded_sign_keys(emb, "vec_id", "embedding", DEFAULT_SIGN_BANDS, zero)
     assert raw.select("key").distinct().count() == 1
 
     # centered: buckets spread (≥8 distinct keys per band on 81 vectors)
-    dims = tuple(sorted({d for b in DEFAULT_SIGN_BANDS for d in b}))
     off = dim_means(emb, "embedding", dims)
     centered = banded_sign_keys(emb, "vec_id", "embedding", DEFAULT_SIGN_BANDS, off)
     per_band = centered.groupBy("band").agg(

@@ -43,7 +43,7 @@ def test_span_sequence_preserved(spark, fx_dir):
     """BASELINE.json per-row invariant: the (kind, text, media_ref, order)
     span sequence is bit-identical after the tokenize stage (stages never
     mutate the spans column)."""
-    cfg = PipelineConfig(fixture_dir=fx_dir, checkpoint_root="/tmp/unused", checkpoint=False)
+    cfg = PipelineConfig(fixture_dir=fx_dir, checkpoint=False)
     p = Pipeline(spark, cfg)
     orig = p.documents().select("doc_id", "spans")
     staged = p.tokenized().select("doc_id", "spans")
@@ -57,19 +57,13 @@ def test_partition_invariance(spark, fx_dir):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        cfg_a = PipelineConfig(
-            fixture_dir=fx_dir, checkpoint_root="/tmp/unused_a",
-            checkpoint=False, score_buckets=2,
-        )
+        cfg_a = PipelineConfig(fixture_dir=fx_dir, checkpoint=False, score_buckets=2)
         pa = Pipeline(spark, cfg_a)
         ma = pa.stage_mentions(resume=False)
         ta = _triples_rows(pa.stage_triples(pa.stage_scores(ma, resume=False), resume=False))
 
         spark.conf.set("spark.sql.shuffle.partitions", "16")
-        cfg_b = PipelineConfig(
-            fixture_dir=fx_dir, checkpoint_root="/tmp/unused_b",
-            checkpoint=False, score_buckets=8,
-        )
+        cfg_b = PipelineConfig(fixture_dir=fx_dir, checkpoint=False, score_buckets=8)
         pb = Pipeline(spark, cfg_b)
         mb = pb.stage_mentions(resume=False)
         tb = _triples_rows(pb.stage_triples(pb.stage_scores(mb, resume=False), resume=False))
@@ -85,6 +79,13 @@ def test_lazy_run_creates_no_checkpoint_dir(spark, fx_dir, tmp_path):
     cfg = PipelineConfig(fixture_dir=fx_dir, checkpoint_root=str(root), checkpoint=False)
     assert Pipeline(spark, cfg).stage_mentions(resume=False).count() > 0
     assert not root.exists()
+
+
+def test_checkpointing_needs_a_root(fx_dir):
+    """A root is required only where something is committed."""
+    with pytest.raises(ValueError, match="checkpoint_root"):
+        PipelineConfig(fixture_dir=fx_dir)
+    assert PipelineConfig(fixture_dir=fx_dir, checkpoint=False).checkpoint_root is None
 
 
 def test_eval_metrics_emitted(spark, fx_dir, tmp_path):
@@ -109,10 +110,7 @@ def test_joint_emit_both_end_to_end(spark, fx_dir):
     )
 
     def run(emit):
-        cfg = PipelineConfig(
-            fixture_dir=fx_dir, checkpoint_root="/tmp/unused_joint",
-            checkpoint=False, emit=emit,
-        )
+        cfg = PipelineConfig(fixture_dir=fx_dir, checkpoint=False, emit=emit)
         p = Pipeline(spark, cfg, docs_df=docs)
         res = p.run(resume=False, evaluate=False)
         return res

@@ -16,21 +16,38 @@ quartiles, the change in the median, how many pairs the change won
 it names none), and whether the median difference exceeds BASE's
 interquartile distance. ``--out`` also writes every run's result line as
 JSON.
+
+It also checks rows. perfbench prints one ``perfbench fingerprint
+<workload> seed=N <op>: (rows, hash)`` line per operation; for each
+operation the report says whether every BASE run and every CHANGE run gave
+one identical fingerprint. This holds on hosts where perfbench's own pinned
+values do not (its ``correct`` is then false on both sides alike).
+
+Beside the result line's metrics the table has ``warmup_passes_s``, the
+wall of the run's warm-up passes (from perfbench's summary line).
+``setup_s`` is session start plus the warm-up passes' excess over a steady
+pass, so a change that makes the steady pass cheaper raises ``setup_s``
+unless it speeds the warm-up as much; this row tells the two apart.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import re
 import statistics
 import subprocess
 import sys
 import time
 from pathlib import Path
 
+FINGERPRINT = re.compile(r"^perfbench fingerprint \S+ seed=\d+ (\S+): (.*)$")
+WARM_UP = re.compile(r"^perfbench \S+: warm-up passes \[([^\]]*)\] s;")
+
 
 def run_once(checkout: Path, args) -> dict:
-    """One perfbench run in ``checkout``; its last stdout line, parsed."""
+    """One perfbench run in ``checkout``: its last stdout line, parsed, with
+    the run's fingerprint lines under ``"fingerprints"`` (op -> text)."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", args.workload,
         "--seed", str(args.seed), "--seconds", str(args.seconds),
@@ -45,6 +62,12 @@ def run_once(checkout: Path, args) -> dict:
         raise RuntimeError(f"perfbench failed in {checkout} (exit {proc.returncode})")
     out = json.loads(lines[-1])
     out["run_wall_s"] = wall
+    out["fingerprints"] = {
+        m.group(1): m.group(2) for m in map(FINGERPRINT.match, lines) if m
+    }
+    for m in filter(None, map(WARM_UP.match, lines)):
+        walls = [float(w) for w in m.group(1).split(",") if w.strip()]
+        out["metrics"]["warmup_passes_s"] = {"value": sum(walls), "unit": "s"}
     return out
 
 
@@ -68,6 +91,22 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def row_check(runs: dict[str, list[dict]]) -> None:
+    """Per operation: one fingerprint across every run of both sides?"""
+    every = runs["base"] + runs["change"]
+    ops = sorted(set().union(*(r["fingerprints"] for r in every)))
+    if not ops:
+        print("rows: no fingerprint lines in perfbench's output")
+    for op in ops:
+        seen = {side: {r["fingerprints"].get(op) for r in runs[side]} for side in runs}
+        values = seen["base"] | seen["change"]
+        if len(values) == 1 and values - {None, "None"}:
+            print(f"rows {op}: identical in all {len(every)} runs {values.pop()}")
+        else:
+            print(f"rows {op}: DIFFER base {sorted(map(str, seen['base']))} "
+                  f"change {sorted(map(str, seen['change']))}")
+
+
 def report(runs: dict[str, list[dict]], better: dict[str, str]) -> None:
     for side in ("base", "change"):
         ok = sum(r["correct"] for r in runs[side])
@@ -75,6 +114,7 @@ def report(runs: dict[str, list[dict]], better: dict[str, str]) -> None:
         attempted = sum(r["attempted"] for r in runs[side])
         print(f"{side}: {ok}/{len(runs[side])} runs correct, "
               f"{failed}/{attempted} operations failed")
+    row_check(runs)
     names = sorted(set().union(*(r["metrics"] for r in runs["base"] + runs["change"])))
     print(f"{'metric':34} {'base median [q1, q3]':32} {'change median [q1, q3]':32}"
           f" {'delta':>7} {'wins':>6} resolved")
