@@ -10,14 +10,16 @@ executors, weights broadcast once per python worker.
 Determinism: float32 throughout, fixed reduction shapes; the session factory
 pins OMP/BLAS to 1 thread per python worker so results are bitwise stable
 across parallelism levels (the `local[8]` vs `local[32]` invariance gate).
-They are NOT stable across OpenBLAS kernels: the kernel OpenBLAS picks for
-the CPU (overridable with ``OPENBLAS_CORETYPE``) changes the float32
-rounding, and with it the flagship's triple fingerprint. At perfbench seed 1
-the pinned flagship value (935, 26018070874730114849) reproduces with
-``OPENBLAS_CORETYPE=SkylakeX``; the Haswell kernel gives
-(935, 27865378801409533497), and the Prescott kernel that OpenBLAS falls
-back to on a virtual CPU it does not recognise gives
-(935, 17387043426688547287).
+They are NOT stable across OpenBLAS kernels: each kernel rounds the float32
+sums its own way, and with them the flagship's triple fingerprint.
+``import bran_spark`` therefore chooses the kernel by instruction set
+(``bran_spark.pin_blas_kernel``: SkylakeX with AVX-512 F/CD/BW/DQ/VL,
+Haswell with AVX2+FMA) instead of leaving OpenBLAS to choose by CPU model;
+a caller's ``OPENBLAS_CORETYPE`` wins. At perfbench seed 1 the flagship
+gives (935, 26018070874730114849) under SkylakeX, the pinned value, and
+tests/golden/ is frozen under it; Haswell gives
+(935, 27865378801409533497); Prescott, the generic kernel OpenBLAS falls
+back to on a CPU model it does not know, gives (935, 17387043426688547287).
 """
 
 from __future__ import annotations

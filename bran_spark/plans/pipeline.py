@@ -68,13 +68,14 @@ class Pipeline:
     ):
         """``docs_df``/``mesh_df`` inject alternative inputs (e.g. the
         plain-corpus adapter, sources.interleave); default reads the
-        fixture tables from cfg.fixture_dir."""
+        fixture tables from cfg.fixture_dir, each once per Pipeline."""
         self.spark = spark
         self.cfg = cfg
         # a lazy run commits nothing, so it opens (and creates) no store
         self.io = ManifestParquetTableIO(cfg.checkpoint_root) if cfg.checkpoint else None
         self._docs_df = docs_df
         self._mesh_df = mesh_df
+        self._tables: dict[str, DataFrame] = {}
         self._codec_bc = None
         self._weights_bc = None
         self._src_parts = None
@@ -83,10 +84,19 @@ class Pipeline:
     def _path(self, name: str) -> str:
         return os.path.join(self.cfg.fixture_dir, f"{name}.parquet")
 
+    def _table(self, name: str) -> DataFrame:
+        """The fixture table, read once: every stage that reads it gets the
+        same DataFrame. Each ``spark.read`` lists the files and infers the
+        schema on the driver, a cost paid on every build, and the optimized
+        plan is the same either way."""
+        if name not in self._tables:
+            self._tables[name] = self.spark.read.parquet(self._path(name))
+        return self._tables[name]
+
     def documents(self) -> DataFrame:
         if self._docs_df is not None:
             return self._docs_df
-        return self.spark.read.parquet(self._path("documents_interleaved"))
+        return self._table("documents_interleaved")
 
     def _n_docs(self) -> int:
         """Input row count from the parquet footer when driver-readable —
@@ -122,7 +132,7 @@ class Pipeline:
     def mesh_dict(self) -> DataFrame:
         if self._mesh_df is not None:
             return self._mesh_df
-        return self.spark.read.parquet(self._path("mesh_dict"))
+        return self._table("mesh_dict")
 
     def codec_bc(self):
         if self._codec_bc is None:

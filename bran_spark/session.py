@@ -28,6 +28,20 @@ Python daemon (local masters only):
   this host and see the driver's paths. On a cluster the package root is
   a driver path that the executors do not have, and a daemon that cannot
   import its module fails every Python task, so the stock daemon runs.
+
+Master and BLAS kernel:
+- With no ``master`` argument, a driver that spark-submit launched keeps
+  spark-submit's ``--master`` (``spark.master`` of the launching conf);
+  ``local[$SPARK_GRAFT_CPUS]`` is the fallback only when no master is set.
+  The daemon settings above and the kernel below follow the master that
+  takes effect.
+- ``import bran_spark`` sets ``OPENBLAS_CORETYPE`` from the CPU's flags
+  (``bran_spark.pin_blas_kernel``) unless the caller set it. Workers of a
+  session this process starts inherit it. Under spark-submit the JVM, and
+  so the daemon, predates the driver's import, so for ``local`` masters
+  the value also goes on ``spark.executorEnv.OPENBLAS_CORETYPE``. On a
+  cluster the executors are other hosts, whose CPUs the driver's flags
+  say nothing about, so nothing is forwarded there.
 """
 
 from __future__ import annotations
@@ -41,6 +55,20 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _launch_master() -> str | None:
+    """``spark.master`` of the conf spark-submit launched this driver with;
+    None when this process was not started by spark-submit. PySpark passes
+    a launching JVM's gateway to its Python driver in
+    ``PYSPARK_GATEWAY_PORT``; a gateway that PySpark starts itself does not
+    set it, and its master is only spark-submit's ``local[*]`` default."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
+
+
 def get_spark(
     app_name: str = "bran_spark",
     master: str | None = None,
@@ -49,8 +77,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the pipeline's canonical config.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback ``*``)
-    so the same code path serves pytest, bench.py and spark-submit.
+    ``master`` defaults to the one spark-submit was given, else to
+    ``local[$SPARK_GRAFT_CPUS]`` (env, fallback ``*``), so the same code
+    path serves pytest, bench.py and spark-submit.
     """
     # Pin BLAS to one thread per python worker BEFORE any JVM/worker forks:
     # 32 concurrent pandas-UDF workers × multi-threaded BLAS would
@@ -65,7 +94,7 @@ def get_spark(
     # before the JVM forks so pyspark daemons/workers inherit it.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "134217728")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "134217728")
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    master = master or _launch_master() or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -105,6 +134,10 @@ def get_spark(
         builder = builder.config(
             "spark.python.daemon.module", "bran_spark.pydaemon"
         ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        if "OPENBLAS_CORETYPE" in os.environ:
+            builder = builder.config(
+                "spark.executorEnv.OPENBLAS_CORETYPE", os.environ["OPENBLAS_CORETYPE"]
+            )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -81,6 +81,24 @@ def test_lazy_run_creates_no_checkpoint_dir(spark, fx_dir, tmp_path):
     assert not root.exists()
 
 
+def test_flagship_reads_each_input_once(spark, fx_dir, monkeypatch):
+    """Building the flagship reads the documents and the dictionary once
+    each: every stage that takes them gets the same DataFrame."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        reads.extend(os.path.basename(p) for p in paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    flagship(spark, fx_dir)
+    assert reads.count("documents_interleaved.parquet") == 1, reads
+    assert reads.count("mesh_dict.parquet") == 1, reads
+
+
 def test_checkpointing_needs_a_root(fx_dir):
     """A root is required only where something is committed."""
     with pytest.raises(ValueError, match="checkpoint_root"):

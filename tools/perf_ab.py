@@ -28,6 +28,12 @@ wall of the run's warm-up passes (from perfbench's summary line).
 ``setup_s`` is session start plus the warm-up passes' excess over a steady
 pass, so a change that makes the steady pass cheaper raises ``setup_s``
 unless it speeds the warm-up as much; this row tells the two apart.
+
+Before the pairs it prints the OpenBLAS kernel each checkout runs: the
+``OPENBLAS_CORETYPE`` that ``import bran_spark`` leaves in effect there
+(the caller's own value, if set). The kernel alone moves the encoder's
+speed 2.4x on one host, so a record that does not name it cannot be
+compared with another.
 """
 
 from __future__ import annotations
@@ -69,6 +75,17 @@ def run_once(checkout: Path, args) -> dict:
         walls = [float(w) for w in m.group(1).split(",") if w.strip()]
         out["metrics"]["warmup_passes_s"] = {"value": sum(walls), "unit": "s"}
     return out
+
+
+def blas_kernel(checkout: Path) -> str:
+    """The OPENBLAS_CORETYPE in effect after ``import bran_spark`` in
+    ``checkout``; "unset" when OpenBLAS is left to pick by CPU model."""
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "import os, bran_spark; print(os.environ.get('OPENBLAS_CORETYPE', ''))"],
+        cwd=checkout, capture_output=True, text=True, check=True,
+    )
+    return proc.stdout.strip() or "unset"
 
 
 def directions(checkout: Path) -> dict[str, str]:
@@ -151,6 +168,9 @@ def main() -> int:
     args = ap.parse_args()
 
     sides = {"base": args.base.resolve(), "change": args.change.resolve()}
+    kernels = {side: blas_kernel(path) for side, path in sides.items()}
+    for side, kernel in kernels.items():
+        print(f"{side} OPENBLAS_CORETYPE: {kernel}", flush=True)
     runs: dict[str, list[dict]] = {"base": [], "change": []}
     for i in range(args.pairs):
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
@@ -164,7 +184,7 @@ def main() -> int:
         if args.out:
             args.out.write_text(json.dumps({"args": vars(args) | {
                 "base": str(sides["base"]), "change": str(sides["change"]),
-                "out": str(args.out)}, "runs": runs}, indent=1))
+                "out": str(args.out)}, "kernels": kernels, "runs": runs}, indent=1))
     report(runs, directions(sides["base"]))
     return 0
 
