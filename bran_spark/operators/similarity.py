@@ -134,51 +134,6 @@ def cosine_topk(
     return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
 
 
-def assign_ivf_cells(
-    emb: DataFrame,
-    n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest centroid.
-
-    Centroids are the ``n_centroids`` lowest-id vectors (deterministic; a
-    production build would k-means them — the plumbing is identical). The
-    assignment is a broadcast cross join against the tiny centroid table +
-    a per-vector argmin window: squared L2 expanded as
-    ``|v|² − 2·v·c + |c|²`` so only dot products are computed (JVM-side
-    ``zip_with``/``aggregate``, no UDF). Output adds a ``cell`` column —
-    at scale the table is written partitioned by ``cell`` so probes prune
-    to one partition.
-    """
-    from pyspark.sql import Window
-
-    base = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    cents = (
-        base.orderBy("vec_id")
-        .limit(n_centroids)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    )
-    scored = base.join(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        "cid",
-        (
-            dot(F.col("v"), F.col("v"))
-            - 2 * dot(F.col("v"), F.col("cv"))
-            + dot(F.col("cv"), F.col("cv"))
-        ).alias("dist"),
-    )
-    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "v", F.col("cid").alias("cell"))
-    )
-
-
 def _assign_cells(base: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the tiny centroid table, argmin
     of ROUNDED squared L2 (6 dp — pins the float-summation-order ambiguity so
@@ -246,7 +201,7 @@ def kmeans_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Distributed Lloyd k-means coarse quantizer (the production IVF
-    training step — upgrades assign_ivf_cells' lowest-id stand-in).
+    training step; ``iters=0`` assigns to the lowest-id seeds alone).
 
     Init = the ``k`` lowest-id vectors (deterministic, no RNG). Each
     iteration is (a) a broadcast-join argmin assignment — centroids are k·d

@@ -5345,68 +5345,7 @@ _KG_TRIPLES_SQL = f"""
 """
 
 
-def _kg_relational_triples(spark, sf) -> DataFrame:
-    """Multi-predicate KG lifted from the relational tables — the typed
-    triple view a KG-construction pipeline materializes when it ingests a
-    warehouse alongside text (entity ids are type-prefixed so key spaces
-    never collide). Distinct by construction (r06, guide §2.3/§2.4): the
-    union's branches can never collide (each carries a distinct pred
-    literal), and within a branch every source is PK-unique EXCEPT the
-    three lineitem liftings — so only those three dedup, and they dedup
-    on the two INTEGER key columns BEFORE the string concat. The previous
-    shape (one DISTINCT over the full ~2.3M-row string-triple union at
-    sf0.1) shuffled three ~15-byte strings per row to dedup rows of which
-    half were provably unique; this one shuffles three 16-byte int pairs
-    (lineitem branches only) and exchanges nothing else."""
-
-    def tr(df, s_pre, s_col, pred, o_pre, o_col):
-        return df.select(
-            F.concat(F.lit(s_pre), F.col(s_col).cast("string")).alias("subj"),
-            F.lit(pred).alias("pred"),
-            F.concat(F.lit(o_pre), F.col(o_col).cast("string")).alias("obj"),
-        )
-
-    orders = _t(spark, sf, "orders")
-    li = _t(spark, sf, "lineitem")
-    parts = [
-        tr(orders, "O:", "o_orderkey", "placed_by", "C:", "o_custkey"),
-        tr(_t(spark, sf, "customer"), "C:", "c_custkey", "in_nation", "N:", "c_nationkey"),
-        tr(_t(spark, sf, "supplier"), "S:", "s_suppkey", "in_nation", "N:", "s_nationkey"),
-        tr(_t(spark, sf, "nation"), "N:", "n_nationkey", "in_region", "R:", "n_regionkey"),
-        tr(li.select("l_orderkey", "l_partkey").distinct(),
-           "O:", "l_orderkey", "contains", "P:", "l_partkey"),
-        tr(li.select("l_orderkey", "l_suppkey").distinct(),
-           "O:", "l_orderkey", "uses_supplier", "S:", "l_suppkey"),
-        tr(li.select("l_partkey", "l_suppkey").distinct(),
-           "P:", "l_partkey", "supplied_by", "S:", "l_suppkey"),
-        # join-derived edges (both dims broadcast-sized): they seed rules
-        # whose confidence is genuinely partial — e.g. uses_supplier AND
-        # in_nation => from_nation holds only when supplier and customer
-        # nations coincide. PK-unique: nation/customer are unique on the
-        # join key, so these stay one row per customer / per order.
-        tr(
-            _t(spark, sf, "customer").join(
-                F.broadcast(_t(spark, sf, "nation")),
-                F.col("c_nationkey") == F.col("n_nationkey"),
-            ),
-            "C:", "c_custkey", "in_region_of", "R:", "n_regionkey",
-        ),
-        tr(
-            orders.join(
-                F.broadcast(_t(spark, sf, "customer")),
-                F.col("o_custkey") == F.col("c_custkey"),
-            ),
-            "O:", "o_orderkey", "from_nation", "N:", "c_nationkey",
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-#: pred → small int code for the coded lifted-KG view (order matches the
-#: branch order of _kg_relational_triples; decode via _KG_PRED_DECODE)
+#: pred → small int code of the lifted KG (decode via _kg_pred_decode)
 _KG_PRED_CODES = {
     "placed_by": 1, "in_nation": 2, "in_region": 3, "contains": 4,
     "uses_supplier": 5, "supplied_by": 6, "in_region_of": 7,
@@ -5427,45 +5366,82 @@ def _kg_pred_decode(col):
     return m
 
 
+def _kg_edge(df, s_pre, s_col, pred, o_pre, o_col) -> DataFrame:
+    """One coded triple per row of ``df``: subj/obj as exact longs
+    (prefix_code·2^44 + key), pred as a small int code."""
+    return df.select(
+        (F.lit(_KG_PREFIX_CODES[s_pre] << 44)
+         + F.col(s_col).cast("long")).alias("subj"),
+        F.lit(_KG_PRED_CODES[pred]).alias("pred"),
+        (F.lit(_KG_PREFIX_CODES[o_pre] << 44)
+         + F.col(o_col).cast("long")).alias("obj"),
+    )
+
+
+def _kg_decode(triples: DataFrame) -> DataFrame:
+    """Coded triples → the string view: entity "prefix:key", pred name.
+    Catalyst pushes this select through a union into each branch, so
+    decoding adds no exchange."""
+
+    def entity(col):
+        pre = None
+        for name, code in _KG_PREFIX_CODES.items():
+            hit = F.shiftright(col, 44) == code
+            pre = (F.when(hit, F.lit(f"{name}:")) if pre is None
+                   else pre.when(hit, F.lit(f"{name}:")))
+        return F.concat(pre, col.bitwiseAND((1 << 44) - 1).cast("string"))
+
+    # the builder emits only these pred codes; an ELSE on the last name
+    # keeps pred non-nullable, as the string literals it replaces were
+    *_, last = _KG_PRED_CODES
+    return triples.select(
+        entity(F.col("subj")).alias("subj"),
+        _kg_pred_decode(F.col("pred")).otherwise(last).alias("pred"),
+        entity(F.col("obj")).alias("obj"),
+    )
+
+
 def _kg_relational_triples_coded(spark, sf) -> DataFrame:
-    """INTEGER-coded twin of :func:`_kg_relational_triples` (guide §2.3,
-    narrower types): subj/obj as exact longs (prefix_code·2^44 + key),
-    pred as a small int code. Bijective with the string view, so any
-    count/aggregate over it is identical after decoding — used by
-    queries whose OUTPUT never carries entity ids (q138: predicate-level
-    rules), where every downstream shuffle then moves 8-byte longs
-    instead of ~8-15-byte strings and hashes/compares integers."""
+    """Multi-predicate KG lifted from the relational tables, integer-coded
+    (guide §2.3, narrower types) — the typed triple view a KG-construction
+    pipeline materializes when it ingests a warehouse alongside text
+    (entity ids are type-prefixed so key spaces never collide). Every
+    shuffle over it moves 8-byte longs and hashes/compares integers;
+    :func:`_kg_relational_triples` is its decoded string view.
 
-    def tr(df, s_pre, s_col, pred, o_pre, o_col):
-        return df.select(
-            (F.lit(_KG_PREFIX_CODES[s_pre] << 44)
-             + F.col(s_col).cast("long")).alias("subj"),
-            F.lit(_KG_PRED_CODES[pred]).alias("pred"),
-            (F.lit(_KG_PREFIX_CODES[o_pre] << 44)
-             + F.col(o_col).cast("long")).alias("obj"),
-        )
-
+    Distinct by construction (r06, guide §2.4): the union's branches can
+    never collide (no two share both pred code and subject prefix), and
+    within a branch every source is PK-unique EXCEPT the three lineitem
+    liftings — so only those three dedup, and they dedup on the two
+    integer key columns before encoding. One DISTINCT over the full union would shuffle every
+    triple to dedup rows of which half are provably unique; this shuffles
+    the lineitem key pairs only and exchanges nothing else."""
     orders = _t(spark, sf, "orders")
     li = _t(spark, sf, "lineitem")
     parts = [
-        tr(orders, "O", "o_orderkey", "placed_by", "C", "o_custkey"),
-        tr(_t(spark, sf, "customer"), "C", "c_custkey", "in_nation", "N", "c_nationkey"),
-        tr(_t(spark, sf, "supplier"), "S", "s_suppkey", "in_nation", "N", "s_nationkey"),
-        tr(_t(spark, sf, "nation"), "N", "n_nationkey", "in_region", "R", "n_regionkey"),
-        tr(li.select("l_orderkey", "l_partkey").distinct(),
-           "O", "l_orderkey", "contains", "P", "l_partkey"),
-        tr(li.select("l_orderkey", "l_suppkey").distinct(),
-           "O", "l_orderkey", "uses_supplier", "S", "l_suppkey"),
-        tr(li.select("l_partkey", "l_suppkey").distinct(),
-           "P", "l_partkey", "supplied_by", "S", "l_suppkey"),
-        tr(
+        _kg_edge(orders, "O", "o_orderkey", "placed_by", "C", "o_custkey"),
+        _kg_edge(_t(spark, sf, "customer"), "C", "c_custkey", "in_nation", "N", "c_nationkey"),
+        _kg_edge(_t(spark, sf, "supplier"), "S", "s_suppkey", "in_nation", "N", "s_nationkey"),
+        _kg_edge(_t(spark, sf, "nation"), "N", "n_nationkey", "in_region", "R", "n_regionkey"),
+        _kg_edge(li.select("l_orderkey", "l_partkey").distinct(),
+                 "O", "l_orderkey", "contains", "P", "l_partkey"),
+        _kg_edge(li.select("l_orderkey", "l_suppkey").distinct(),
+                 "O", "l_orderkey", "uses_supplier", "S", "l_suppkey"),
+        _kg_edge(li.select("l_partkey", "l_suppkey").distinct(),
+                 "P", "l_partkey", "supplied_by", "S", "l_suppkey"),
+        # join-derived edges (both dims broadcast-sized): they seed rules
+        # whose confidence is genuinely partial — e.g. uses_supplier AND
+        # in_nation => from_nation holds only when supplier and customer
+        # nations coincide. PK-unique: nation/customer are unique on the
+        # join key, so these stay one row per customer / per order.
+        _kg_edge(
             _t(spark, sf, "customer").join(
                 F.broadcast(_t(spark, sf, "nation")),
                 F.col("c_nationkey") == F.col("n_nationkey"),
             ),
             "C", "c_custkey", "in_region_of", "R", "n_regionkey",
         ),
-        tr(
+        _kg_edge(
             orders.join(
                 F.broadcast(_t(spark, sf, "customer")),
                 F.col("o_custkey") == F.col("c_custkey"),
@@ -5477,6 +5453,12 @@ def _kg_relational_triples_coded(spark, sf) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _kg_relational_triples(spark, sf) -> DataFrame:
+    """The lifted KG as (subj, pred, obj) strings, e.g. ("O:1",
+    "placed_by", "C:37"): the decoded view of the coded builder."""
+    return _kg_decode(_kg_relational_triples_coded(spark, sf))
 
 
 @_q(
@@ -12100,31 +12082,24 @@ def q272(spark, sf):
 
     li = _t(spark, sf, "lineitem")
     orders = _t(spark, sf, "orders")
-
-    def tr(df, s_pre, s_col, pred, o_pre, o_col):
-        return df.select(
-            F.concat(F.lit(s_pre), F.col(s_col).cast("string")).alias("subj"),
-            F.lit(pred).alias("pred"),
-            F.concat(F.lit(o_pre), F.col(o_col).cast("string")).alias("obj"),
-        )
-
-    a = (
-        tr(li.where(F.col("l_quantity") > 10), "P:", "l_partkey",
-           "supplied_by", "S:", "l_suppkey")
+    a = _kg_decode(
+        _kg_edge(li.where(F.col("l_quantity") > 10), "P", "l_partkey",
+                 "supplied_by", "S", "l_suppkey")
         .unionByName(
-            tr(li.where(F.col("l_linenumber") <= 4), "O:", "l_orderkey",
-               "contains", "P:", "l_partkey")
+            _kg_edge(li.where(F.col("l_linenumber") <= 4), "O", "l_orderkey",
+                     "contains", "P", "l_partkey")
         )
         .unionByName(
-            tr(orders, "O:", "o_orderkey", "placed_by", "C:", "o_custkey")
+            _kg_edge(orders, "O", "o_orderkey", "placed_by", "C", "o_custkey")
         )
     )
-    b = tr(
-        li.where(F.col("l_quantity") < 45), "P:", "l_partkey",
-        "supplied_by", "S:", "l_suppkey",
-    ).unionByName(
-        tr(li.where(F.col("l_linenumber") >= 2), "O:", "l_orderkey",
-           "contains", "P:", "l_partkey")
+    b = _kg_decode(
+        _kg_edge(li.where(F.col("l_quantity") < 45), "P", "l_partkey",
+                 "supplied_by", "S", "l_suppkey")
+        .unionByName(
+            _kg_edge(li.where(F.col("l_linenumber") >= 2), "O", "l_orderkey",
+                     "contains", "P", "l_partkey")
+        )
     )
     return capture_recapture(a, b)
 

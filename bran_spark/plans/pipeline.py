@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,7 +51,6 @@ class PipelineConfig:
     max_tokens: int = 512           # F4 cap
     checkpoint: bool = True
     emit: str = "pairs"             # "pairs" | "both" (joint NER+pairs, P4)
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self):
         if self.checkpoint and self.checkpoint_root is None:

@@ -36,12 +36,14 @@ Master and BLAS kernel:
   The daemon settings above and the kernel below follow the master that
   takes effect.
 - ``import bran_spark`` sets ``OPENBLAS_CORETYPE`` from the CPU's flags
-  (``bran_spark.pin_blas_kernel``) unless the caller set it. Workers of a
-  session this process starts inherit it. Under spark-submit the JVM, and
-  so the daemon, predates the driver's import, so for ``local`` masters
-  the value also goes on ``spark.executorEnv.OPENBLAS_CORETYPE``. On a
-  cluster the executors are other hosts, whose CPUs the driver's flags
-  say nothing about, so nothing is forwarded there.
+  (``bran_spark.pin_blas_kernel``) unless the caller set it, and
+  ``get_spark`` pins the BLAS thread counts and glibc malloc thresholds
+  (``_WORKER_PINS``) the same way. Workers of a session this process
+  starts inherit them. Under spark-submit the JVM, and so the daemon,
+  predates the driver's import, so for ``local`` masters each one also
+  goes on ``spark.executorEnv``. On a cluster the executors are other
+  hosts, whose CPUs the driver's flags say nothing about, so nothing is
+  forwarded there.
 """
 
 from __future__ import annotations
@@ -53,6 +55,23 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 # the checkout, or the --py-files zip the package was imported from
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Environment of every Python worker, set in the driver's os.environ unless
+# the caller set it (workers of a JVM this process starts inherit it) and,
+# for local masters, forwarded through spark.executorEnv.
+_WORKER_PINS = {
+    # one BLAS thread per python worker: 32 concurrent pandas-UDF workers ×
+    # multi-threaded BLAS would oversubscribe, and threaded reductions break
+    # bitwise determinism (the local[8]-vs-local[32] invariance gate)
+    "OMP_NUM_THREADS": "1",
+    "OPENBLAS_NUM_THREADS": "1",
+    "MKL_NUM_THREADS": "1",
+    # glibc malloc: keep numpy temporaries on the heap free-lists instead of
+    # per-allocation mmap/munmap — 32 concurrent python workers otherwise
+    # serialize on kernel page-path locks (+60% encoder throughput measured
+    # at both 8 and 32 workers, tools/encoder_concurrency_bench.py)
+    "MALLOC_MMAP_THRESHOLD_": "134217728",
+    "MALLOC_TRIM_THRESHOLD_": "134217728",
+}
 
 
 def _launch_master() -> str | None:
@@ -81,19 +100,8 @@ def get_spark(
     ``local[$SPARK_GRAFT_CPUS]`` (env, fallback ``*``), so the same code
     path serves pytest, bench.py and spark-submit.
     """
-    # Pin BLAS to one thread per python worker BEFORE any JVM/worker forks:
-    # 32 concurrent pandas-UDF workers × multi-threaded BLAS would
-    # oversubscribe, and threaded reductions break bitwise determinism
-    # (the local[8]-vs-local[32] invariance gate).
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
-    # glibc malloc: keep numpy temporaries on the heap free-lists instead of
-    # per-allocation mmap/munmap — 32 concurrent python workers otherwise
-    # serialize on kernel page-path locks (+60% encoder throughput measured
-    # at both 8 and 32 workers, tools/encoder_concurrency_bench.py). Set
-    # before the JVM forks so pyspark daemons/workers inherit it.
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "134217728")
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "134217728")
+    for var, value in _WORKER_PINS.items():
+        os.environ.setdefault(var, value)
     master = master or _launch_master() or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -134,10 +142,9 @@ def get_spark(
         builder = builder.config(
             "spark.python.daemon.module", "bran_spark.pydaemon"
         ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
-        if "OPENBLAS_CORETYPE" in os.environ:
-            builder = builder.config(
-                "spark.executorEnv.OPENBLAS_CORETYPE", os.environ["OPENBLAS_CORETYPE"]
-            )
+        for var in (*_WORKER_PINS, "OPENBLAS_CORETYPE"):
+            if var in os.environ:
+                builder = builder.config(f"spark.executorEnv.{var}", os.environ[var])
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

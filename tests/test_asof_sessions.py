@@ -10,7 +10,7 @@ import pyspark.sql.functions as F
 from bran_spark.operators.asof import asof_join
 from bran_spark.operators.dedup import simhash_md5
 from bran_spark.operators.sessions import sessionize
-from bran_spark.operators.similarity import assign_ivf_cells, cosine_topk, ivf_topk
+from bran_spark.operators.similarity import cosine_topk, ivf_topk, kmeans_cells
 
 
 def _ts(s: float) -> dt.datetime:
@@ -66,7 +66,7 @@ def test_sessionize_gap_boundary(spark):
 
 def test_ivf_cells_and_recall(spark, testdata_dir):
     emb = spark.read.parquet(f"{testdata_dir}/embeddings.parquet")
-    cells = assign_ivf_cells(emb, n_centroids=8)
+    cells = kmeans_cells(emb, k=8, iters=0)  # the 8 lowest-id seeds
     assert cells.count() == emb.count()  # every vector assigned exactly once
     n_cells = cells.select("cell").distinct().count()
     assert 1 < n_cells <= 8

@@ -87,10 +87,10 @@ def test_ivf_cells_written_partitioned_prune_on_probe(spark, testdata_dir, tmp_p
     """The ANN-at-rest layout: embeddings written partitioned by IVF cell;
     a probe filtered to its probe-set cells must prune at the scan
     (PartitionFilters), never read the full table."""
-    from bran_spark.operators.similarity import assign_ivf_cells
+    from bran_spark.operators.similarity import kmeans_cells
 
     emb = spark.read.parquet(f"{testdata_dir}/embeddings.parquet")
-    cells = assign_ivf_cells(emb, n_centroids=8)
+    cells = kmeans_cells(emb, k=8, iters=0)
     out = str(tmp_path / "emb_by_cell")
     cells.write.mode("overwrite").partitionBy("cell").parquet(out)
 

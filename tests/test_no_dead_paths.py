@@ -33,11 +33,10 @@ _ALLOWED: dict[str, set[str] | None] = {
     # Test-only helpers through which tests pin other behaviour, left for
     # a later deletion round that moves those tests onto program paths:
     # the relational J5 mention-to-token alignment (the rule the scorer
-    # applies per document), the lowest-id IVF assignment that
-    # kmeans_cells supersedes (the cell-partitioned layout test writes by
-    # it) and the (i, j, cov) view of the Gram partials pca_project reads.
+    # applies per document) and the (i, j, cov) view of the Gram partials
+    # pca_project reads.
     "bran_spark/operators/mentions.py": {"align_mentions_to_tokens"},
-    "bran_spark/operators/similarity.py": {"assign_ivf_cells", "gram_covariance"},
+    "bran_spark/operators/similarity.py": {"gram_covariance"},
 }
 
 

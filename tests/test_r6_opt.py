@@ -153,46 +153,28 @@ def test_property_path_plus_rejects_nonpositive_k(spark):
         property_path(t, ("plus", "p", 0)).collect()
 
 
-def test_kg_relational_triples_coded_bijective(spark, testdata_dir):
-    """The integer-coded lifted-KG view must be row-bijective with the
-    string view (same triple set after decoding)."""
+def test_kg_relational_triples_match_duckdb_union(spark, testdata_dir):
+    """The lifted KG (the decoded view of the coded builder) is the DuckDB
+    oracle's distinct triple set, and its rows are already distinct: the
+    sorted row lists must be equal, so a duplicate row fails. The coded
+    view has the same row count."""
+    import duckdb
+
     from bran_spark.plans.oracle_queries import (
-        _KG_PREFIX_CODES,
-        _kg_pred_decode,
+        _KG_TRIPLES_UNION_SQL,
         _kg_relational_triples,
         _kg_relational_triples_coded,
     )
 
-    s = _kg_relational_triples(spark, testdata_dir)
-    c = _kg_relational_triples_coded(spark, testdata_dir)
-    inv = {v: k for k, v in _KG_PREFIX_CODES.items()}
-    pref = None
-    for code, name in inv.items():
-        e = F.when(F.shiftright(F.col("subj"), 44) == code, F.lit(name))
-        pref = e if pref is None else pref.when(
-            F.shiftright(F.col("subj"), 44) == code, F.lit(name)
-        )
-    decoded = c.select(
-        F.concat(
-            pref, F.lit(":"),
-            (F.col("subj") - (F.shiftright(F.col("subj"), 44) * (1 << 44)))
-            .cast("string"),
-        ).alias("subj"),
-        _kg_pred_decode(F.col("pred")).alias("pred"),
-        F.concat(
-            F.when(F.shiftright(F.col("obj"), 44) == 1, "O")
-            .when(F.shiftright(F.col("obj"), 44) == 2, "C")
-            .when(F.shiftright(F.col("obj"), 44) == 3, "S")
-            .when(F.shiftright(F.col("obj"), 44) == 4, "N")
-            .when(F.shiftright(F.col("obj"), 44) == 5, "R")
-            .when(F.shiftright(F.col("obj"), 44) == 6, "P"),
-            F.lit(":"),
-            (F.col("obj") - (F.shiftright(F.col("obj"), 44) * (1 << 44)))
-            .cast("string"),
-        ).alias("obj"),
-    )
+    con = duckdb.connect()
+    for t in ("orders", "customer", "supplier", "nation", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{testdata_dir}/{t}.parquet'")
+    want = sorted(con.execute(
+        f"SELECT DISTINCT subj, pred, obj FROM ({_KG_TRIPLES_UNION_SQL})"
+    ).fetchall())
     cols = ["subj", "pred", "obj"]
-    assert _rows(decoded, cols) == _rows(s, cols)
+    assert _rows(_kg_relational_triples(spark, testdata_dir), cols) == want
+    assert _kg_relational_triples_coded(spark, testdata_dir).count() == len(want)
 
 
 def test_mention_dict_candidates_matches_groupby_formulation(spark):

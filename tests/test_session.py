@@ -1,7 +1,7 @@
 """The session's environment: the OpenBLAS kernel picked at package import
 (``bran_spark.pin_blas_kernel``), the kernel the Python workers really run,
 and the master a spark-submit launch keeps when ``get_spark`` is given
-none."""
+none, with the pinned worker variables reaching its workers."""
 
 from __future__ import annotations
 
@@ -86,11 +86,17 @@ def test_workers_run_the_selected_kernel(spark):
     assert {k.lower() for k in got} == {want.lower()}
 
 
+_PINNED = (
+    "OPENBLAS_CORETYPE", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
+    "MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_",
+)
+
+
 def test_spark_submit_master_kept(tmp_path):
     """``get_spark()`` with no master, under ``spark-submit --master
     local[2]``, runs on local[2] with the local daemon, and its workers get
-    the driver's kernel although the JVM started before the driver
-    imported the package."""
+    the driver's kernel, BLAS thread counts and malloc thresholds although
+    the JVM started before the driver imported the package."""
     import pyspark
 
     script = tmp_path / "probe.py"
@@ -99,15 +105,16 @@ def test_spark_submit_master_kept(tmp_path):
         f"sys.path.insert(0, {_ROOT!r})\n"
         "from bran_spark.session import get_spark\n"
         "spark = get_spark('master_probe')\n"
-        "env = spark.sparkContext.parallelize([0], 1).map(\n"
-        "    lambda _: os.environ.get('OPENBLAS_CORETYPE')).collect()[0]\n"
+        f"pinned = {_PINNED!r}\n"
+        "worker = spark.sparkContext.parallelize([0], 1).map(\n"
+        "    lambda _: {v: os.environ.get(v) for v in pinned}).collect()[0]\n"
         "print(json.dumps({'master': spark.sparkContext.master,\n"
         "    'daemon': spark.conf.get('spark.python.daemon.module', None),\n"
-        "    'driver_kernel': os.environ.get('OPENBLAS_CORETYPE'), 'worker_kernel': env}))\n"
+        "    'driver': {v: os.environ.get(v) for v in pinned}, 'worker': worker}))\n"
         "spark.stop()\n"
     )
     submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
-    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "OPENBLAS_CORETYPE")}
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", *_PINNED)}
     env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
     proc = subprocess.run(
         [submit, "--master", "local[2]", str(script)],
@@ -117,4 +124,6 @@ def test_spark_submit_master_kept(tmp_path):
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert out["master"] == "local[2]"
     assert out["daemon"] == "bran_spark.pydaemon"
-    assert out["worker_kernel"] == out["driver_kernel"]
+    assert out["worker"] == out["driver"]
+    for var in _PINNED[1:]:
+        assert out["driver"][var] is not None, var
